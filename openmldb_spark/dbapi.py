@@ -32,6 +32,8 @@ from __future__ import annotations
 import datetime
 import re
 
+from openmldb_spark import sqllex
+
 apilevel = "2.0"
 paramstyle = "qmark"
 threadsafety = 3
@@ -155,57 +157,6 @@ def _lit(v) -> str:
     return _sql_str_lit(str(v))
 
 
-def _skip_str(sql: str, i: int) -> int:
-    """-> index just past the string literal opening at sql[i],
-    honoring backslash escapes (ZetaSQL semantics — an escaped quote
-    does not terminate the literal)."""
-    quote, j, n = sql[i], i + 1, len(sql)
-    while j < n:
-        if sql[j] == "\\":
-            j += 2
-            continue
-        if sql[j] == quote:
-            return j + 1
-        j += 1
-    return n
-
-
-def _fill_holes(sql: str, literals: list[str]) -> str:
-    """Replace each '?' outside string literals with the next literal."""
-    out, i, n, k = [], 0, len(sql), 0
-    while i < n:
-        ch = sql[i]
-        if ch in "'\"":
-            j = _skip_str(sql, i)
-            out.append(sql[i:j])
-            i = j
-            continue
-        if ch == "?":
-            out.append(literals[k])
-            k += 1
-        else:
-            out.append(ch)
-        i += 1
-    return "".join(out)
-
-
-def _count_holes(sql: str) -> int:
-    """Number of '?' holes OUTSIDE string literals — the count
-    _fill_holes actually fills. A raw str.count('?') would also count
-    question marks inside literals ('n/a?'), demand phantom parameters
-    and silently shift every later binding by one."""
-    count, i, n = 0, 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in "'\"":
-            i = _skip_str(sql, i)
-            continue
-        if ch == "?":
-            count += 1
-        i += 1
-    return count
-
-
 def _insert_hole_columns(command: str, schema) -> list:
     """-> the StructFields the qmark holes bind to, in hole order.
     Columns come from the explicit column list when present, else the
@@ -225,27 +176,7 @@ def _insert_hole_columns(command: str, schema) -> list:
     else:
         cols = list(schema.fields)
     # positions of top-level ?s in the values tuple
-    vals, depth, cur, parts = m.group(2), 0, [], []
-    i, n = 0, len(vals)
-    while i < n:
-        ch = vals[i]
-        if ch in "'\"":
-            j = _skip_str(vals, i)
-            cur.append(vals[i:j])
-            i = j
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-            i += 1
-            continue
-        cur.append(ch)
-        i += 1
-    parts.append("".join(cur).strip())
+    parts = [p.strip() for p in sqllex.split(m.group(2))]
     if len(parts) != len(cols):
         raise DatabaseError("column size != value size")
     return [cols[i] for i, p in enumerate(parts) if p == "?"]
@@ -326,7 +257,7 @@ class Cursor:
             # arity against the REAL hole count (outside string
             # literals) — the raw count the reference uses would demand
             # phantom params for '?' inside literals and misbind
-            question_marks = _count_holes(command)
+            question_marks = sqllex.placeholders(command)
             if question_marks > 0:
                 # the reference applies the arity check to tuples AND
                 # dicts before any per-column dispatch (dbapi.py:247-249)
@@ -339,7 +270,7 @@ class Cursor:
                 else:
                     raise DatabaseError(
                         "error at append data for unsupported type")
-                command = _fill_holes(command, lits)
+                command = sqllex.fill_placeholders(command, lits)
             self._exec_stmt(command)
             self._pre_process_result(None)
             return None
@@ -480,7 +411,7 @@ class Cursor:
         command = operation.strip(" \t\n\r") if operation else None
         if command is None:
             raise Exception("None operation")
-        if _count_holes(command) == 0:
+        if sqllex.placeholders(command) == 0:
             return self.execute(operation, parameters)
         if isinstance(parameters, list) and len(parameters) == 0:
             return self.execute(operation, parameters)
@@ -510,7 +441,7 @@ class Cursor:
             flat = tuple(v for r in chunk for v in r)
             try:
                 self.execute(stmt, flat)
-            except Exception:
+            except DatabaseError:
                 # one bad row (e.g. an unbindable value) must not abort
                 # the whole batch: the reference executes per row, so
                 # every row BEFORE the failure inserts and the error

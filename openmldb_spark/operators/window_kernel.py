@@ -169,6 +169,9 @@ def _factorize_sorted(s: pd.Series, fmt=None):
     float-typed keys from nullable int columns render as ints.
     Nulls → -1."""
     codes, uniques = pd.factorize(s.to_numpy(object))
+    if not len(uniques):
+        # every key NULL: no categories, every code -1
+        return codes.astype(np.int64), np.array([], dtype=object)
     if pd.api.types.is_numeric_dtype(s) and len(uniques):
         order = np.argsort(np.asarray(uniques, dtype=np.float64),
                            kind="stable")

@@ -37,6 +37,8 @@ import re
 
 import pyspark.sql.types as T
 
+from openmldb_spark import sqllex
+
 __all__ = ["DdlError", "parse_create_table", "create_table",
            "parse_insert", "insert_into", "validate_create_index"]
 
@@ -274,20 +276,8 @@ def auto_index(schema: T.StructType) -> dict:
 
 def _check_index(body: str, col_types: dict):
     """One `index(...)` body of a CREATE TABLE: key/ts/ttl/ttl_type."""
-    parts, depth, cur = [], 0, []
-    for ch in body:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur))
     opts: dict = {}
-    for p in parts:
+    for p in sqllex.split(body):
         p = p.strip()
         if not p:
             continue
@@ -346,15 +336,10 @@ def _check_options(body: str):
         i += m.end()
         if i < n and body[i] == "[":
             # bracket-matched list value (distribution nests [..] lists)
-            depth, j = 0, i
-            while j < n:
-                if body[j] == "[":
-                    depth += 1
-                elif body[j] == "]":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
+            try:
+                j = sqllex.match_paren(body, i)
+            except sqllex.SqlUnsupported:
+                j = n
             opts[key] = body[i:j + 1]
             i = j + 1
         else:
@@ -430,31 +415,13 @@ def parse_create_table(stmt: str) -> dict:
         raise DdlError("not a CREATE TABLE statement")
     name = m.group("name")
     _check_table_name(name)
-    # quote-aware paren matching: a DEFAULT literal may contain ')' or
-    # ',' (`default 'a)b'`) — a quote-blind scan truncates the body or
-    # splits mid-literal
+    # literal-aware paren matching: a DEFAULT literal may contain ')' or
+    # ',' (`default 'a)b'`)
     start = stmt.index("(", m.end() - 1)
-    depth, j, quote, esc = 0, start, None, False
-    while j < len(stmt):
-        ch = stmt[j]
-        if quote:
-            if esc:
-                esc = False
-            elif ch == "\\":
-                esc = True
-            elif ch == quote:
-                quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                break
-        j += 1
-    if depth != 0 or quote is not None:
-        raise DdlError("unbalanced parens in CREATE TABLE")
+    try:
+        j = sqllex.match_paren(stmt, start)
+    except sqllex.SqlUnsupported:
+        raise DdlError("unbalanced parens in CREATE TABLE") from None
     body = stmt[start + 1:j]
     tail = stmt[j + 1:].strip().rstrip(";").strip()
     options = {}
@@ -464,33 +431,8 @@ def parse_create_table(stmt: str) -> dict:
             raise DdlError(f"trailing clause {tail!r}")
         options = _check_options(om.group(1))
 
-    # split body at depth-0 commas (quote-aware, same reason)
-    items, depth, cur, quote, esc = [], 0, [], None, False
-    for ch in body:
-        if quote:
-            cur.append(ch)
-            if esc:
-                esc = False
-            elif ch == "\\":
-                esc = True
-            elif ch == quote:
-                quote = None
-            continue
-        if ch in ("'", '"'):
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            items.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    items.append("".join(cur))
-
     fields, col_types, index_bodies, defaults = [], {}, [], {}
-    for it in items:
+    for it in sqllex.split(body):
         it = it.strip()
         if not it:
             continue
@@ -706,53 +648,27 @@ def _parse_default(text: str, field: T.StructField):
 
 
 def _split_values(vals: str) -> list[list[str]]:
-    """Quote-aware scan of the VALUES tail: the comma-split raw tokens
-    of each parenthesized row. String literals may contain commas and
-    parens (`('a,b', 1)`, `('a)b')`) — the old regex split was
-    quote-blind and rejected / truncated those."""
+    """The VALUES tail → the comma-split raw tokens of each
+    parenthesized row. String literals may contain commas and parens
+    (`('a,b', 1)`, `('a)b')`)."""
     rows: list[list[str]] = []
-    cur_row: list[str] = []
-    cur_tok: list[str] = []
-    depth, quote, esc = 0, None, False
-    for ch in vals:
-        if quote:
-            cur_tok.append(ch)
-            if esc:
-                esc = False
-            elif ch == "\\":
-                esc = True
-            elif ch == quote:
-                quote = None
+    pos = 0
+    for t in sqllex.tokenize(vals):
+        if t.start < pos or t.kind == "ws" or t.text in (",", ";"):
             continue
-        if ch == "(":
-            depth += 1
-            if depth == 1:
-                cur_row, cur_tok = [], []
-                continue
-        elif ch == ")":
-            if depth == 0:
-                raise DdlError("unbalanced ')' in INSERT VALUES")
-            depth -= 1
-            if depth == 0:
-                cur_row.append("".join(cur_tok))
-                rows.append(cur_row)
-                cur_row, cur_tok = [], []
-                continue
-        elif ch == "," and depth == 1:
-            cur_row.append("".join(cur_tok))
-            cur_tok = []
-            continue
-        elif ch in ("'", '"') and depth >= 1:
-            quote = ch
-        if depth >= 1:
-            cur_tok.append(ch)
-        elif ch != "," and not ch.isspace() and ch != ";":
+        if t.text == ")":
+            raise DdlError("unbalanced ')' in INSERT VALUES")
+        if t.text != "(":
             # only ',' and whitespace are legal between row tuples —
             # stray tokens are a syntax error, not silently dropped
             raise DdlError(
-                f"unexpected {ch!r} between INSERT VALUES rows")
-    if depth != 0 or quote is not None:
-        raise DdlError("unbalanced parens or quotes in INSERT VALUES")
+                f"unexpected {t.text[0]!r} between INSERT VALUES rows")
+        try:
+            pos = sqllex.match_paren(vals, t.start) + 1
+        except sqllex.SqlUnsupported:
+            raise DdlError(
+                "unbalanced parens or quotes in INSERT VALUES") from None
+        rows.append(sqllex.split(vals[t.start + 1:pos - 1]))
     return rows
 
 

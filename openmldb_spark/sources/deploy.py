@@ -28,6 +28,8 @@ from __future__ import annotations
 
 import re
 
+from openmldb_spark import sqllex
+
 __all__ = ["DeployError", "create_deployment", "show_deployment",
            "show_deployments", "drop_deployment", "format_deploy_sql"]
 
@@ -60,16 +62,6 @@ def _kcolumns(schema) -> list[str]:
 
 # ---------------------------------------------------------- SQL unparser
 
-_TOK = re.compile(r"""
-      '(?:[^'\\]|\\.)*'
-    | "(?:[^"\\]|\\.)*"
-    | `[^`]*`
-    | [A-Za-z_]\w*(?:\.(?:[A-Za-z_]\w*|\*))*
-    | \d+\.\d+ | \.\d+ | \d+\w*
-    | >= | <= | != | <> | \|\| | &&
-    | [-+*/%=<>(),;]
-""", re.X)
-
 _KEYWORDS = {
     "select", "from", "where", "group", "order", "by", "having", "limit",
     "as", "over", "window", "partition", "rows", "rows_range", "between",
@@ -85,19 +77,32 @@ _BINOPS = {"+", "-", "*", "/", "%", "=", ">=", "<=", ">", "<", "!=",
            "XOR"}
 
 
-def _tokens(sql: str) -> list[str]:
-    toks, pos = [], 0
+# what the unparser prints besides names, numbers and literals ('==' and
+# '->' print as two operators each); anything else is a syntax error
+_OPS = {"-", "+", "*", "/", "%", "=", "<", ">", "(", ")", ",", ";", ">=",
+        "<=", "!=", "<>", "||", "&&"}
+_CLOSED_LITERAL = re.compile(r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"", re.S)
+
+
+def _body_tokens(sql: str) -> list:
+    """The body's lexer tokens minus whitespace and comments, dotted
+    names merged into one token."""
     s = sql.strip()
-    while pos < len(s):
-        if s[pos].isspace():
-            pos += 1
+    out = []
+    for t in sqllex.join_dotted(sqllex.tokenize(s)):
+        if t.kind in ("ws", "comment"):
             continue
-        m = _TOK.match(s, pos)
-        if not m:
-            raise DeployError(f"deploy: cannot tokenize at {s[pos:pos+20]!r}")
-        toks.append(m.group(0))
-        pos = m.end()
-    return toks
+        if t.kind == "op" and t.text not in _OPS \
+                and set(t.text) <= _OPS:
+            out += [t._replace(text=c) for c in t.text]
+            continue
+        if not (t.kind == "num" or t.text in _OPS
+                or t.kind == "id" and "{" not in t.text
+                or t.kind == "str" and _CLOSED_LITERAL.fullmatch(t.text)):
+            raise DeployError(
+                f"deploy: cannot tokenize at {s[t.start:t.start + 20]!r}")
+        out.append(t)
+    return out
 
 
 def _kw(tok: str) -> str:
@@ -110,8 +115,9 @@ class _P:
     mirrors the layout the reference's unparser emits in
     test_create_deploy.yaml expects."""
 
-    def __init__(self, toks: list[str]):
-        self.t = toks
+    def __init__(self, toks: list):
+        self.t = [t.text for t in toks]
+        self.depth = [t.depth for t in toks]
         self.i = 0
 
     def peek(self, k=0):
@@ -132,21 +138,18 @@ class _P:
     def expr(self, stops: set[str]) -> str:
         """Render tokens up to (not including) a depth-0 stop token."""
         parts: list[str] = []
-        depth = 0
         prev = None
+        level = None      # paren depth of this expression's own tokens
         while self.i < len(self.t):
             tok = self.peek()
-            lo = tok.lower()
-            if depth == 0 and lo in stops:
+            d = self.depth[self.i]
+            if level is None:
+                level = d + (tok == ")")
+            if tok == ")" and d < level:
+                break                         # closes the enclosing group
+            if d == level and tok != ")" and tok.lower() in stops:
                 break
             self.take()
-            if tok == "(":
-                depth += 1
-            elif tok == ")":
-                depth -= 1
-                if depth < 0:
-                    self.i -= 1
-                    break
             # OVER w1  ->  OVER (w1)
             if prev is not None and prev.lower() == "over" and tok not in ("(",):
                 parts.append(f" ({tok})")
@@ -281,8 +284,8 @@ class _P:
 def format_deploy_sql(name: str, body: str) -> str:
     """Render ``DEPLOY <name> <select>`` the way the reference's
     unparser does (test_create_deploy.yaml `sql:` expects)."""
-    toks = _tokens(body)
-    if toks and toks[-1] == ";":
+    toks = _body_tokens(body)
+    if toks and toks[-1].text == ";":
         toks = toks[:-1]
     p = _P(toks)
     lines = p.select()
@@ -305,7 +308,7 @@ def _main_table(body: str, tables: dict) -> str | None:
     """The deployment's request table = first registered table named
     after a FROM (leftmost, innermost — matches the reference, whose
     request schema is the primary table's)."""
-    toks = _tokens(body)
+    toks = [t.text for t in _body_tokens(body)]
     for j, tok in enumerate(toks):
         if tok.lower() == "from":
             for t2 in toks[j + 1:]:

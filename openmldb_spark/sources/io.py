@@ -267,6 +267,8 @@ def _unwrap_nul_quotes(data: bytes, sep: bytes) -> bytes:
 
 import re as _re
 
+from openmldb_spark import sqllex
+
 _OUTFILE_RE = _re.compile(
     r"(?is)^\s*(?P<select>select\b.*?)\s+into\s+outfile\s+"
     r"'(?P<path>[^']+)'\s*(?:options\s*\((?P<opts>.*?)\))?\s*;?\s*$")
@@ -279,44 +281,11 @@ _KNOWN_OPTS = {"format", "delimiter", "header", "null_value", "quote",
 
 
 def _strip_config_clauses(stmt: str) -> str:
-    """Remove every CONFIG(...) clause outside string literals, with a
-    quote-aware scan for the closing paren (a ')' inside a quoted
-    option value like CONFIG(spark="a)b") must not end the clause, and
-    'config(' inside a quoted OUTFILE path must not start one)."""
-    out, i, n = [], 0, len(stmt)
-    kw = _re.compile(r"(?is)\s*\bconfig\s*\(")
-    while i < n:
-        ch = stmt[i]
-        if ch in "'\"":
-            j = i + 1
-            while j < n and stmt[j] != ch:
-                j += 1
-            out.append(stmt[i:j + 1])
-            i = j + 1
-            continue
-        m = kw.match(stmt, i)
-        if m:
-            depth, j, quote = 0, m.end() - 1, None
-            while j < n:
-                c = stmt[j]
-                if quote:
-                    if c == quote:
-                        quote = None
-                elif c in "'\"":
-                    quote = c
-                elif c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
-            if depth == 0:
-                i = j + 1          # drop the whole clause
-                continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+    """Remove every CONFIG(...) clause outside string literals. The
+    closing paren is found by the lexer, so a ')' inside a quoted
+    option value (CONFIG(spark="a)b")) does not end the clause and
+    'config(' inside a quoted OUTFILE path does not start one."""
+    return sqllex.drop_calls(stmt, "config")
 
 
 def _parse_stmt_options(text: str | None) -> dict:
@@ -326,27 +295,11 @@ def _parse_stmt_options(text: str | None) -> dict:
     out = {}
     if not text or not text.strip():
         return out
-    # split on commas outside BOTH quote kinds (the value grammar below
-    # accepts single- and double-quoted strings; a lookahead aware of
-    # only one kind splits inside the other — delimiter="," broke)
-    parts, cur, quote = [], [], None
-    for ch in text:
-        if quote:
-            cur.append(ch)
-            if ch == quote:
-                quote = None
-            continue
-        if ch in ("'", '"'):
-            quote = ch
-            cur.append(ch)
-            continue
-        if ch == ",":
-            parts.append("".join(cur))
-            cur = []
-            continue
-        cur.append(ch)
-    parts.append("".join(cur))
-    for kv in parts:
+    # commas inside quoted values (delimiter=",", delimiter='\'') do
+    # not separate options
+    cuts = [0] + [p for t in sqllex.tokenize(text) if t.kind == "comma"
+                  for p in (t.start, t.end)] + [len(text)]
+    for kv in (text[a:b] for a, b in zip(cuts[::2], cuts[1::2])):
         m = _re.fullmatch(r"\s*(\w+)\s*=\s*(.+?)\s*", kv, _re.DOTALL)
         if not m:
             raise ValueError(f"malformed option {kv!r}")

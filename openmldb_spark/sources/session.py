@@ -29,6 +29,7 @@ import re
 
 from pyspark.sql import DataFrame
 
+from openmldb_spark import sqllex
 from openmldb_spark.sources.ddl import DdlError
 
 
@@ -373,53 +374,25 @@ def split_statements(text: str) -> list[str]:
     stmts, cur = [], []
     # `END` closes the NEAREST opener — a CASE expression's END must not
     # close a BEGIN block (else `select case ... end from t; select 2`
-    # drives the depth negative and every later ';' stops splitting).
-    # Track openers on a stack: 'b' = BEGIN, 'c' = CASE; ';' splits only
-    # when no BEGIN is open (a ';' can't occur inside a CASE anyway).
+    # stops splitting). ';' splits only when no BEGIN is open (a ';'
+    # can't occur inside a CASE anyway).
     stack: list[str] = []
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch in "'\"":
-            j = i + 1
-            while j < n:
-                if text[j] == "\\":
-                    j += 2
-                    continue
-                if text[j] == ch:
-                    break
-                j += 1
-            cur.append(text[i:j + 1])
-            i = j + 1
-            continue
-        if ch == "-" and text[i:i + 2] == "--":
-            j = text.find("\n", i)
-            i = n if j < 0 else j
-            continue
-        # slice one char past the keyword so \b can see the following
-        # character — text[i:i+5] would let `begin_ts`/`beginning`
-        # match \bbegin\b at the slice end and corrupt the depth
-        m = re.match(r"(?i)(begin|case|end)(?![\w$])", text[i:i + 6])
-        if m and (i == 0 or not (text[i - 1].isalnum()
-                                 or text[i - 1] == "_")):
-            kw = m.group(1).lower()
-            if kw == "end":
-                if stack:          # unbalanced END never goes negative
-                    stack.pop()
-            else:
-                stack.append(kw[0])
-            cur.append(text[i:i + len(m.group(1))])
-            i += len(m.group(1))
-            continue
-        if ch == ";" and "b" not in stack:
+    for t in sqllex.tokenize(text):
+        word = t.text.lower() if t.kind == "id" else None
+        if word == "end":
+            if stack:              # an unbalanced END is ignored
+                stack.pop()
+        elif word in ("begin", "case"):
+            stack.append(word)
+        elif t.text == ";" and "begin" not in stack:
             s = "".join(cur).strip()
             if s:
                 stmts.append(s + ";")
             cur = []
-            i += 1
             continue
-        cur.append(ch)
-        i += 1
+        elif t.kind == "comment" and t.text.startswith("--"):
+            continue
+        cur.append(t.text)
     s = "".join(cur).strip()
     if s:
         stmts.append(s)

@@ -32,10 +32,12 @@ from dataclasses import dataclass, field
 
 from openmldb_spark.plans.specs import (Agg, KERNEL_AGG_FUNCS, WindowSpec,
                                         parse_time_ms)
-
-
-class SqlUnsupported(Exception):
-    """SQL outside the supported subset (with the offending fragment)."""
+from openmldb_spark.sqllex import (SqlUnsupported, calls, depth0,
+                                   drop_calls, fill_placeholders, join_dotted,
+                                   literal_spans, map_code, mask_literals,
+                                   match_paren, placeholders, split,
+                                   split_binary, strip_comments, sub_code,
+                                   tokenize, wrapped)
 
 
 _SQL_RE = re.compile(
@@ -68,158 +70,22 @@ def _strip_t(expr: str) -> str:
     return re.sub(r"\{\d+\}\.", "", expr).strip()
 
 
-# --------------------------------------------------------------------------
-# String/paren-aware text utilities
-# --------------------------------------------------------------------------
-
-def _skip_str(text: str, i: int) -> int:
-    """text[i] is a quote; return index just past the closing quote."""
-    q = text[i]
-    j = i + 1
-    while j < len(text):
-        if text[j] == "\\":
-            j += 2
-            continue
-        if text[j] == q:
-            return j + 1
-        j += 1
-    return j
-
-
-def _strip_backticks(text: str) -> str:
-    """Remove identifier backquotes (```col```) outside string
-    literals — the production feature scripts backtick-quote every
-    identifier (cases/function/spark/test_jd.yaml); our regex front end
-    and Spark both resolve the bare names identically."""
-    out, i = [], 0
-    while i < len(text):
-        ch = text[i]
-        if ch in "'\"":
-            j = _skip_str(text, i)
-            out.append(text[i:j])
-            i = j
-            continue
-        if ch != "`":
-            out.append(ch)
-        i += 1
-    return "".join(out)
-
-
-def _mask_strings(text: str) -> str:
-    """Replace quoted-literal contents with spaces (same length) so
-    regex sniffs/rewrites can't fire inside string literals."""
-    out, i = [], 0
-    while i < len(text):
-        ch = text[i]
-        if ch in "'\"":
-            j = _skip_str(text, i)
-            out.append(ch + " " * max(0, j - i - 2)
-                       + (text[j - 1] if j - 1 > i else ""))
-            i = j
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
-
-
-def _sub_outside_strings(pattern, repl, text: str, flags=0) -> str:
-    """re.sub applied only to the non-string-literal segments."""
-    out, i = [], 0
-    while i < len(text):
-        ch = text[i]
-        if ch in "'\"":
-            j = _skip_str(text, i)
-            out.append(text[i:j])
-            i = j
-            continue
-        j = i
-        while j < len(text) and text[j] not in "'\"":
-            j += 1
-        out.append(re.sub(pattern, repl, text[i:j], flags=flags))
-        i = j
-    return "".join(out)
-
-
-def split_projection(proj: str) -> list[str]:
-    """Split on top-level commas (paren- and quote-aware)."""
-    out, depth, cur, i = [], 0, [], 0
-    while i < len(proj):
-        ch = proj[i]
-        if ch in "'\"":
-            j = _skip_str(proj, i)
-            cur.append(proj[i:j])
-            i = j
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    out.append("".join(cur))
-    return out
-
-
-def _match_paren(text: str, i: int) -> int:
-    """text[i] == '('; return index of the matching ')' (quote-aware)."""
-    depth = 0
-    while i < len(text):
-        ch = text[i]
-        if ch in "'\"":
-            i = _skip_str(text, i)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    raise SqlUnsupported(f"unbalanced parens in {text!r}")
-
-
 def rewrite_calls(text: str, handler) -> str:
     """Rewrite every function call ``name(args)`` bottom-up.
 
     ``handler(name, args: list[str]) -> str | None`` — None keeps the
-    call (with already-rewritten args). Quote-aware; identifiers not
+    call (with already-rewritten args). Literal-aware; identifiers not
     followed by '(' pass through untouched."""
-    out, i, n = [], 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch in "'\"":
-            j = _skip_str(text, i)
-            out.append(text[i:j])
-            i = j
-            continue
-        m = re.match(r"`([A-Za-z_]\w*)`|[A-Za-z_]\w*", text[i:])
-        if m:
-            raw = m.group(0)
-            name = m.group(1) or raw   # `string`(x) = string(x)
-            j = i + len(raw)
-            k = j
-            while k < n and text[k].isspace():
-                k += 1
-            if k < n and text[k] == "(":
-                p = _match_paren(text, k)
-                inner = text[k + 1:p]
-                args = [rewrite_calls(a, handler).strip()
-                        for a in split_projection(inner)] if inner.strip() \
-                    else []
-                rep = handler(name.lower(), args)
-                out.append(rep if rep is not None
-                           else f"{name}({', '.join(args)})")
-                i = p + 1
-                continue
-            out.append(raw)
-            i = j
-            continue
-        out.append(ch)
-        i += 1
+    out, pos = [], 0
+    for start, name, lp, rp in calls(text):
+        inner = text[lp + 1:rp]
+        args = [rewrite_calls(a, handler).strip() for a in split(inner)] \
+            if inner.strip() else []
+        rep = handler(name.lower(), args)
+        out += [text[pos:start],
+                rep if rep is not None else f"{name}({', '.join(args)})"]
+        pos = rp + 1
+    out.append(text[pos:])
     return "".join(out)
 
 
@@ -629,18 +495,6 @@ _LIKE_EDGE_RE = re.compile(
     re.IGNORECASE)
 
 
-def _string_spans(text: str) -> list[tuple[int, int]]:
-    spans, i, n = [], 0, len(text)
-    while i < n:
-        if text[i] in "'\"":
-            j = _skip_str(text, i)
-            spans.append((i, j))
-            i = j
-        else:
-            i += 1
-    return spans
-
-
 def _rewrite_operator_like_edges(text: str) -> str:
     """Operator-form ``x [NOT] [I]LIKE <pat> ESCAPE <esc>`` where the
     escape is multi-character or the pattern ends on an unpaired escape
@@ -650,12 +504,11 @@ def _rewrite_operator_like_edges(text: str) -> str:
     error, ESC_IN_THE_MIDDLE; exact-match in the reference,
     udf.cc:336-348) is rewritten to the bare char — including for the
     default backslash escape of plain LIKE. Matches beginning inside a
-    string literal are left alone (quote-aware, per the segment-walker
-    convention)."""
+    string literal are left alone."""
     if not re.search(r"\bI?LIKE\b", text, re.IGNORECASE):
         return text
     from openmldb_spark.functions.registry import normalize_like_pattern
-    spans = _string_spans(text)
+    spans = literal_spans(text)
     out = text
     for m in reversed(list(_LIKE_EDGE_RE.finditer(text))):
         if any(a < m.start() < b for a, b in spans):
@@ -717,59 +570,16 @@ _ZD_KEYWORDS = frozenset("""
     ASC DESC NULLS INTO OUTFILE OPTIONS CONFIG LOAD DATA INFILE SET
     INSERT VALUES
     """.split())
-_ZD_MULTICHAR_OPS = ("==", "!=", "<>", "<=", ">=", "->", "&&", "||")
-_ZD_ID_RE = re.compile(
-    r"[A-Za-z_{][\w{}]*(?:\.(?:[A-Za-z_{][\w{}]*|\*))*")
-_ZD_NUM_RE = re.compile(r"\d+(?:\.\d*)?(?:[eE][+-]?\d+)?[A-Za-z]*|\.\d+"
-                        r"(?:[eE][+-]?\d+)?[A-Za-z]*")
+_ZD_KIND = {"(": "lp", ")": "rp", ",": "comma"}
 
 
-def _zd_tokenize(text: str) -> list[tuple[str, str]]:
-    """(kind, text) tokens: 'str' (quoted literal, opaque), 'ws', 'num',
-    'id' (dotted identifier / keyword), 'lp', 'rp', 'comma', 'op'."""
-    toks, i, n = [], 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch in "'\"":
-            j = _skip_str(text, i)
-            toks.append(("str", text[i:j]))
-            i = j
-        elif ch.isspace():
-            j = i
-            while j < n and text[j].isspace():
-                j += 1
-            toks.append(("ws", text[i:j]))
-            i = j
-        elif ch == "(":
-            toks.append(("lp", ch))
-            i += 1
-        elif ch == ")":
-            toks.append(("rp", ch))
-            i += 1
-        elif ch == ",":
-            toks.append(("comma", ch))
-            i += 1
-        elif ch.isdigit():
-            m = _ZD_NUM_RE.match(text, i)
-            toks.append(("num", m.group(0)))
-            i = m.end()
-        elif ch == "." and i + 1 < n and text[i + 1].isdigit():
-            m = _ZD_NUM_RE.match(text, i)
-            toks.append(("num", m.group(0)))
-            i = m.end()
-        elif ch.isalpha() or ch in "_{":
-            m = _ZD_ID_RE.match(text, i)
-            toks.append(("id", m.group(0)))
-            i = m.end()
-        else:
-            two = text[i:i + 2]
-            if two in _ZD_MULTICHAR_OPS:
-                toks.append(("op", two))
-                i += 2
-            else:
-                toks.append(("op", ch))
-                i += 1
-    return toks
+def _zd_tokens(text: str) -> list[tuple[str, str]]:
+    """(kind, text) tokens: 'str' (opaque literal), 'ws' (comments
+    too), 'num', 'id' (dotted name / keyword), 'lp', 'rp', 'comma' and
+    'op' for everything else."""
+    return [(_ZD_KIND.get(t.text) or ("ws" if t.kind == "comment" else
+             t.kind if t.kind in ("str", "ws", "num", "id") else "op"),
+             t.text) for t in join_dotted(tokenize(text))]
 
 
 def _zd_skip_ws(toks, i):
@@ -814,18 +624,13 @@ def _zd_unit(toks, i):
         if s.upper() == "CASE":
             # consume through the matching END (CASEs nest); the
             # interior is a full expression sequence — recurse
-            depth, j = 1, i + 1
-            while j < len(toks) and depth:
-                if toks[j][0] == "id":
-                    u = toks[j][1].upper()
-                    if u == "CASE":
-                        depth += 1
-                    elif u == "END":
-                        depth -= 1
-                        if not depth:
-                            break
-                j += 1
-            if depth:
+            unclosed = 0
+            for j in range(i, len(toks)):
+                word = toks[j][1].upper() if toks[j][0] == "id" else ""
+                unclosed += (word == "CASE") - (word == "END")
+                if not unclosed:
+                    break
+            else:
                 raise SqlUnsupported("CASE without matching END")
             inner = _zd_rewrite_tokens(toks[i + 1:j])
             parts.append("CASE" + inner + "END")
@@ -861,8 +666,7 @@ def _zd_floatish(expr: str) -> bool | None:
     statically integral, None if unresolvable from the text + the
     published column-type environment."""
     t = expr.strip()
-    while t.startswith("(") and t.endswith(")") and \
-            _match_paren(t, 0) == len(t) - 1:
+    while wrapped(t):
         t = t[1:-1].strip()
     if re.fullmatch(r"[-+]?\d+", t):
         return False
@@ -949,8 +753,7 @@ def _sc_type(expr: str) -> str | None:
     published _EXPR_TYPES environment (LAST JOIN stage prefixes
     stripped), single CASTs type as their target. None = unresolvable."""
     t = expr.strip()
-    while t.startswith("(") and t.endswith(")") and \
-            _match_paren(t, 0) == len(t) - 1:
+    while wrapped(t):
         t = t[1:-1].strip()
     if re.fullmatch(r"'[^']*'|\"[^\"]*\"", t, re.DOTALL):
         return "string"
@@ -994,60 +797,18 @@ _NUM_RANK = {"tinyint": 0, "smallint": 1, "int": 2, "bigint": 3,
              "float": 4, "double": 5}
 
 
-def _split_muldiv(text: str) -> list[tuple[str, str]]:
-    """Split at depth-0 binary * / % into [(op, operand)]; first op
-    is ''. Strings and paren groups are opaque."""
-    parts, cur, i, n = [], [], 0, len(text)
-    op, prev_unit = "", False
-    while i < n:
-        ch = text[i]
-        if ch in "'\"":
-            j = _skip_str(text, i)
-            cur.append(text[i:j])
-            i = j
-            prev_unit = True
-            continue
-        if ch == "(":
-            p = _match_paren(text, i)
-            cur.append(text[i:p + 1])
-            i = p + 1
-            prev_unit = True
-            continue
-        if ch in "*/%" and prev_unit:
-            parts.append((op, "".join(cur).strip()))
-            cur, op, prev_unit = [], ch, False
-            i += 1
-            continue
-        if ch.isspace():
-            cur.append(ch)
-            i += 1
-            continue
-        m = re.match(r"[A-Za-z_]\w*|\d+\.?\d*", text[i:])
-        if m:
-            cur.append(m.group(0))
-            i += len(m.group(0))
-            prev_unit = True
-            continue
-        cur.append(ch)
-        i += 1
-        prev_unit = False
-    parts.append((op, "".join(cur).strip()))
-    return [(o, p) for o, p in parts if p]
-
-
 def _static_type(expr: str) -> str | None:
     """Static type of an expression under the reference's arithmetic
     typing: `/` is ALWAYS FDiv double (arithmetic_expr_ir_builder.cc
     BuildFDivExpr), + - * % promote to the wider numeric operand;
     operands resolve through _sc_type. None = unresolvable."""
     t = expr.strip()
-    while t.startswith("(") and t.endswith(")") and \
-            _match_paren(t, 0) == len(t) - 1:
+    while wrapped(t):
         t = t[1:-1].strip()
-    terms = _split_addsub(t)
+    terms = split_binary(t, "+-")
     if len(terms) > 1:
         return _promote([_static_type(x) for _, x in terms])
-    factors = _split_muldiv(t)
+    factors = split_binary(t, "*/%")
     if len(factors) > 1:
         if any(op == "/" for op, _ in factors):
             return "double"
@@ -1097,7 +858,7 @@ def lower_string_cmp(text: str) -> str:
     bool-vs-numeric comparisons to a 0/1 int cast."""
     if _EXPR_TYPES.get() is None:
         return text
-    spans = _string_spans(text)
+    spans = literal_spans(text)
 
     def fix(m):
         op = m.group("op")
@@ -1244,7 +1005,7 @@ def lower_zero_div(text: str) -> str:
             not re.search(r"(?i)\bDIV\b", text):
         return text
     try:
-        return _zd_rewrite_tokens(_zd_tokenize(text))
+        return _zd_rewrite_tokens(_zd_tokens(text))
     except SqlUnsupported:
         raise
     except Exception:   # pragma: no cover — never corrupt a query on a
@@ -1289,24 +1050,11 @@ def translate_expr(text: str) -> str:
                   flags=re.IGNORECASE)
     text = _rewrite_operator_like_edges(text)
 
-    out, buf, i, n = [], [], 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch in "'\"":
-            j = _skip_str(text, i)
-            out.append(op_fix("".join(buf)))
-            buf = []
-            out.append(text[i:j])
-            i = j
-            continue
-        buf.append(ch)
-        i += 1
-    out.append(op_fix("".join(buf)))
-    text = "".join(out)
+    text = map_code(text, op_fix)
     # `CAST(x AS VARCHAR[(n)])` is OpenMLDB's SQL-standard string cast
     # (expression/test_type.yaml ids 34-35); rewrite the TYPE spelling
     # before call rewriting so `varchar(60)` is never parsed as a call
-    text = _sub_outside_strings(
+    text = sub_code(
         r"(?is)\bas\s+varchar\s*(?:\(\s*\d+\s*\))?(?=\s*\))",
         " as string", text)
     text = rewrite_calls(text, lambda n, a: _SQL_FN[n](*a)
@@ -1429,8 +1177,7 @@ def _lift_anonymous_windows(sql: str) -> str:
         return f" OVER __anon{len(bodies) - 1} "
 
     # string-masked: a literal containing 'OVER (' must survive
-    new = _sub_outside_strings(r"OVER\s*\(([^()]*)\)", repl, sql,
-                               flags=re.IGNORECASE)
+    new = sub_code(r"OVER\s*\(([^()]*)\)", repl, sql, flags=re.IGNORECASE)
     if not bodies:
         return sql
     defs = ", ".join(f"__anon{i} AS ({b})" for i, b in enumerate(bodies))
@@ -1464,7 +1211,7 @@ def _parse_agg_call(fn: str, argtxt: str, aux: dict | None = None) -> dict:
     expressions into the same row-projection stage."""
     fn = fn.lower()
     fn = _AGG_ALIASES.get(fn, fn)
-    args = [a.strip() for a in split_projection(argtxt)] if argtxt.strip() \
+    args = [a.strip() for a in split(argtxt)] if argtxt.strip() \
         else []
 
     def ident(a):
@@ -1501,7 +1248,7 @@ def _parse_agg_call(fn: str, argtxt: str, aux: dict | None = None) -> dict:
             if len(args) != 1:
                 raise SqlUnsupported(f"{fn} over a split takes one arg")
             sep, mode = ",", fn
-        inner = [a.strip() for a in split_projection(sm.group("inner"))]
+        inner = [a.strip() for a in split(sm.group("inner"))]
         var = (sm.group("var") or "").lower()
         if len(inner) < 2 or (var and len(inner) < 3):
             raise SqlUnsupported("fz_window_split needs (col, delim[, kv])")
@@ -1581,8 +1328,7 @@ def _parse_anchor_cond(text: str):
     or None when the condition has no anchor-relative call."""
     if not _ANCHOR_CALL_RE.search(text):
         return None
-    masked = _mask_strings(text)
-    eqs = list(_depth0_finditer(masked, r"(?<![<>!=])==?(?!=)"))
+    eqs = depth0(text, r"(?<![<>!=])==?(?!=)")
     if len(eqs) != 1:
         raise SqlUnsupported("anchor-relative condition shape")
     m = eqs[0]
@@ -1646,7 +1392,7 @@ class _AggAlloc:
 # where R is a pure row expression and K is built from aggregates only.
 
 def _has_nested_agg_call(text: str) -> bool:
-    masked = _mask_strings(text)
+    masked = mask_literals(text)
     if re.search(r"\b__e\d+\b", masked):
         # an already-allocated placeholder (rewrite_calls resolves
         # inner calls first) is an anchor-frame constant too
@@ -1658,77 +1404,11 @@ def _has_nested_agg_call(text: str) -> bool:
     return False
 
 
-def _split_addsub(text: str) -> list[tuple[str, str]]:
-    """Split at depth-0 binary +/- into [(sign, term)]."""
-    terms, cur, sign = [], [], "+"
-    i, n, prev_unit = 0, len(text), False
-    while i < n:
-        ch = text[i]
-        if ch in "'\"":
-            j = _skip_str(text, i)
-            cur.append(text[i:j])
-            i = j
-            prev_unit = True
-            continue
-        if ch == "(":
-            p = _match_paren(text, i)
-            cur.append(text[i:p + 1])
-            i = p + 1
-            prev_unit = True
-            continue
-        if ch in "+-" and prev_unit:
-            terms.append((sign, "".join(cur).strip()))
-            cur, sign, prev_unit = [], ch, False
-            i += 1
-            continue
-        if ch.isspace():
-            cur.append(ch)
-            i += 1
-            continue
-        m = re.match(r"[A-Za-z_]\w*|\d+\.?\d*", text[i:])
-        if m:
-            cur.append(m.group(0))
-            i += len(m.group(0))
-            prev_unit = True
-            continue
-        cur.append(ch)
-        i += 1
-        prev_unit = False
-    terms.append((sign, "".join(cur).strip()))
-    return [(s, t) for s, t in terms if t]
-
-
-def _split_mul(text: str) -> list[str]:
-    """Split at depth-0 '*' into factors."""
-    parts, cur, i, n = [], [], 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch in "'\"":
-            j = _skip_str(text, i)
-            cur.append(text[i:j])
-            i = j
-            continue
-        if ch == "(":
-            p = _match_paren(text, i)
-            cur.append(text[i:p + 1])
-            i = p + 1
-            continue
-        if ch == "*":
-            parts.append("".join(cur).strip())
-            cur = []
-            i += 1
-            continue
-        cur.append(ch)
-        i += 1
-    parts.append("".join(cur).strip())
-    return [p for p in parts if p]
-
-
 def _bare_col_refs(text: str) -> bool:
     """True if the (already agg-resolved) text still references row
     columns — identifiers that are neither calls, __e placeholders, nor
     SQL keywords/literals."""
-    masked = _mask_strings(text)
+    masked = mask_literals(text)
     kw = {"AND", "OR", "NOT", "CASE", "WHEN", "THEN", "ELSE", "END",
           "NULL", "TRUE", "FALSE", "AS", "IS", "IN", "BETWEEN", "LIKE",
           "DIV", "MOD", "XOR"}
@@ -1755,39 +1435,19 @@ def _aux_ident(a: str, aux: dict) -> str:
 def _resolve_nested_aggs(text: str, wname: str, alloc) -> str:
     """Replace kernel-agg calls in `text` with __e placeholders bound to
     window `wname`, recursively lowering nested sums."""
-    out, i, n = [], 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch in "'\"":
-            j = _skip_str(text, i)
-            out.append(text[i:j])
-            i = j
-            continue
-        m = re.match(r"[A-Za-z_]\w*", text[i:])
-        if not m:
-            out.append(ch)
-            i += 1
-            continue
-        name = m.group(0)
-        j = i + len(name)
-        k = j
-        while k < n and text[k].isspace():
-            k += 1
-        if k >= n or text[k] != "(":
-            out.append(name)
-            i = j
-            continue
-        p = _match_paren(text, k)
+    out, pos = [], 0
+    for start, name, lp, rp in calls(text):
         lname = name.lower()
-        inner = text[k + 1:p]
+        inner = text[lp + 1:rp]
         if lname == "sum" and _has_nested_agg_call(inner):
-            out.append("(" + _lower_nested_sum(inner, wname, alloc) + ")")
+            rep = "(" + _lower_nested_sum(inner, wname, alloc) + ")"
         elif lname in KERNEL_AGG_FUNCS or lname in _AGG_ALIASES:
-            out.append(alloc.get(
-                wname, _parse_agg_call(lname, inner, alloc.aux)))
+            rep = alloc.get(wname, _parse_agg_call(lname, inner, alloc.aux))
         else:
-            out.append(f"{name}({_resolve_nested_aggs(inner, wname, alloc)})")
-        i = p + 1
+            rep = f"{name}({_resolve_nested_aggs(inner, wname, alloc)})"
+        out += [text[pos:start], rep]
+        pos = rp + 1
+    out.append(text[pos:])
     return "".join(out)
 
 
@@ -1797,10 +1457,10 @@ def _lower_nested_sum(argtxt: str, wname: str, alloc) -> str:
     shapes — exactly what decomposes null-exactly: a single
     row*const product term, or one pure-row term plus one pure-const
     term; anything else is unsupported."""
-    terms = _split_addsub(argtxt)
+    terms = [(op or "+", t) for op, t in split_binary(argtxt, "+-")]
 
     def lower_term(sign, term):
-        factors = _split_mul(term)
+        factors = [f for _, f in split_binary(term, "*")]
         rowf = [f for f in factors if not _has_nested_agg_call(f)]
         constf = [f for f in factors if _has_nested_agg_call(f)]
         if not rowf:
@@ -1860,47 +1520,26 @@ def _extract_window_aggs(item: str, alloc: _AggAlloc) -> str:
     ... end) over w``) binds every kernel-agg call inside its arguments
     to that window — the reference resolves nested window functions
     against the enclosing OVER (ast_node_converter.cc window exprs)."""
-    out, i, n = [], 0, len(item)
-    while i < n:
-        ch = item[i]
-        if ch in "'\"":
-            j = _skip_str(item, i)
-            out.append(item[i:j])
-            i = j
+    out, pos = [], 0
+    for start, name, lp, rp in calls(item):
+        if start < pos:
             continue
-        m = re.match(r"`([A-Za-z_]\w*)`|[A-Za-z_]\w*", item[i:])
-        if not m:
-            out.append(ch)
-            i += 1
-            continue
-        raw = m.group(0)
-        name = m.group(1) or raw
-        j = i + len(raw)
-        k = j
-        while k < n and item[k].isspace():
-            k += 1
-        if k >= n or item[k] != "(":
-            out.append(raw)
-            i = j
-            continue
-        p = _match_paren(item, k)
-        om = re.match(r"\s+OVER\s+(\w+)", item[p + 1:], re.IGNORECASE)
+        argtxt = item[lp + 1:rp]
+        out.append(item[pos:start])
+        pos = rp + 1
+        om = re.match(r"\s+OVER\s+(\w+)", item[pos:], re.IGNORECASE)
         if not om:
             # plain call: recurse into args for nested `agg OVER w`
-            inner = _extract_window_aggs(item[k + 1:p], alloc)
-            out.append(f"{name}({inner})")
-            i = p + 1
+            out.append(f"{name}({_extract_window_aggs(argtxt, alloc)})")
             continue
+        pos += om.end()
         wname = om.group(1)
-        argtxt = item[k + 1:p]
         lname = name.lower()
         if lname == "sum" and _has_nested_agg_call(argtxt):
             # nested aggregate inside sum's argument: lower algebraically
             # (the nested aggregate is an anchor-frame constant)
             out.append("(" + _lower_nested_sum(argtxt, wname, alloc) + ")")
-            i = p + 1 + om.end()
-            continue
-        if lname in KERNEL_AGG_FUNCS or lname in _AGG_ALIASES \
+        elif lname in KERNEL_AGG_FUNCS or lname in _AGG_ALIASES \
                 or lname == "fz_join":
             try:
                 out.append(alloc.get(
@@ -1914,9 +1553,8 @@ def _extract_window_aggs(item: str, alloc: _AggAlloc) -> str:
                 out.append(
                     f"{name}({_extract_window_aggs(argtxt, alloc)})")
         else:
-            bound = _bind_nested_aggs(argtxt, wname, alloc)
-            out.append(f"{name}({bound})")
-        i = p + 1 + om.end()
+            out.append(f"{name}({_bind_nested_aggs(argtxt, wname, alloc)})")
+    out.append(item[pos:])
     return "".join(out)
 
 
@@ -1969,7 +1607,7 @@ def compile_window_sql(sql: str) -> WindowQuery:
         raise SqlUnsupported("no window definitions")
 
     alloc = _AggAlloc(q.windows, q.aux)
-    for item in split_projection(m.group("proj")):
+    for item in split(m.group("proj")):
         item = item.strip()
         if not item:
             # trailing comma in the select list (test_window.yaml id 33)
@@ -2061,7 +1699,7 @@ def canonicalize_tables(sql: str, tables) -> tuple[str, list]:
                 continue
             # quote-aware + case-insensitive like the FROM/JOIN subs —
             # a plain sub would rewrite inside string literals
-            sql = _sub_outside_strings(
+            sql = sub_code(
                 rf"\b{re.escape(name)}\s*\.", f"{{{i}}}.", sql,
                 flags=re.IGNORECASE)
             sql = re.sub(rf"(\bFROM\s+){re.escape(name)}\b", rf"\g<1>{{{i}}}",
@@ -2081,11 +1719,11 @@ def _inline_subselects(spark, sql: str, tables: list) -> tuple[str, list]:
     positional table computed via selectExpr (covers sub-selects in FROM
     and in WINDOW UNION lists — WINDOW_CLAUSE.md:175-217)."""
     while True:
-        m = re.search(r"\(\s*select\b", _mask_strings(sql), re.IGNORECASE)
+        m = re.search(r"\(\s*select\b", mask_literals(sql), re.IGNORECASE)
         if not m:
             return sql, tables
         start = m.start()
-        end = _match_paren(sql, start)
+        end = match_paren(sql, start)
         inner = sql[start + 1:end]
         df = _run_simple_select(spark, inner, tables)
         tables = tables + [df]
@@ -2096,7 +1734,7 @@ def _run_simple_select(spark, sql: str, tables: list):
     """``select <exprs> from {i}`` (no WHERE/GROUP/...) → selectExpr."""
     m = re.fullmatch(r"\s*select\s+(?P<proj>.*?)\s+from\s+\{(?P<i>\d+)\}\s*",
                      sql, re.IGNORECASE | re.DOTALL)
-    if not m or re.search(r"\bOVER\b", _mask_strings(m.group("proj")),
+    if not m or re.search(r"\bOVER\b", mask_literals(m.group("proj")),
                           re.IGNORECASE):
         # full sub-query (WHERE / WINDOW / LAST JOIN ...): recurse
         # through the dispatcher — production scripts nest whole
@@ -2104,7 +1742,7 @@ def _run_simple_select(spark, sql: str, tables: list):
         return _dispatch_sql(spark, sql, tables)
     df = tables[int(m.group("i"))]
     items = [translate_expr(_strip_t(p)) for p in
-             split_projection(m.group("proj"))]
+             split(m.group("proj"))]
     return df.selectExpr(*items)
 
 
@@ -2124,28 +1762,14 @@ def bind_params(sql: str, params) -> str:
     """Substitute ``?`` placeholders (quote-aware, in order) with SQL
     literals — OpenMLDB's parameterized queries
     (cases/query/parameterized_query.yaml; hybridse request params)."""
-    out, i, k = [], 0, 0
-    while i < len(sql):
-        ch = sql[i]
-        if ch in "'\"":
-            j = _skip_str(sql, i)
-            out.append(sql[i:j])
-            i = j
-            continue
-        if ch == "?":
-            if k >= len(params):
-                raise SqlUnsupported(
-                    f"query has more placeholders than the {len(params)} "
-                    f"parameters given")
-            out.append(_sql_literal(params[k]))
-            k += 1
-            i += 1
-            continue
-        out.append(ch)
-        i += 1
-    if k != len(params):
-        raise SqlUnsupported(f"{len(params) - k} unused parameters")
-    return "".join(out)
+    n = placeholders(sql)
+    if n > len(params):
+        raise SqlUnsupported(
+            f"query has more placeholders than the {len(params)} "
+            f"parameters given")
+    if n < len(params):
+        raise SqlUnsupported(f"{len(params) - n} unused parameters")
+    return fill_placeholders(sql, map(_sql_literal, params))
 
 
 def _tb_tpl(x: str) -> str:
@@ -2169,42 +1793,6 @@ def _tb_tpl(x: str) -> str:
             f"END)")
 
 
-def _split_kw(e: str, kw: str) -> list[str]:
-    """Split ``e`` on top-level occurrences of the logical keyword
-    (paren-, string- and CASE…END-aware)."""
-    masked = _mask_strings(e)
-    parts, depth, case_depth, start = [], 0, 0, 0
-    i, n = 0, len(masked)
-    while i < n:
-        c = masked[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            m = re.match(r"(?i)\bCASE\b", masked[i:])
-            if m and (i == 0 or not masked[i-1].isalnum()):
-                case_depth += 1
-                i += 4
-                continue
-            m = re.match(r"(?i)\bEND\b", masked[i:])
-            if m and case_depth and (i == 0 or not masked[i-1].isalnum()):
-                case_depth -= 1
-                i += 3
-                continue
-            if case_depth == 0:
-                m = re.match(rf"(?i)\b{kw}\b", masked[i:])
-                if m and (i == 0 or not (masked[i-1].isalnum()
-                                         or masked[i-1] == "_")):
-                    parts.append(e[start:i])
-                    i += len(kw)
-                    start = i
-                    continue
-        i += 1
-    parts.append(e[start:])
-    return parts
-
-
 def _boolify_expr(e: str) -> str:
     """Coerce the operands of logical operators to bool with the
     reference's truthiness rules (retry path — only invoked after the
@@ -2213,21 +1801,14 @@ def _boolify_expr(e: str) -> str:
     if not e:
         return e
     for kw, join in (("OR", " OR "), ("AND", " AND "), ("XOR", " != ")):
-        parts = _split_kw(e, kw)
+        parts = split(e, kw, case_end=True)
         if len(parts) > 1:
             return join.join(_tb_tpl(_boolify_expr(p)) for p in parts)
     m = re.match(r"(?is)^(?:NOT\b|!(?![=]))\s*(.+)$", e)
     if m:
         return f"(NOT {_tb_tpl(_boolify_expr(m.group(1)))})"
-    masked = _mask_strings(e)
-    if e.startswith("(") and e.endswith(")"):
-        depth = 0
-        for i, c in enumerate(masked):
-            depth += (c == "(") - (c == ")")
-            if depth == 0 and i < len(masked) - 1:
-                break
-        else:
-            return f"({_boolify_expr(e[1:-1])})"
+    if wrapped(e):
+        return f"({_boolify_expr(e[1:-1])})"
     return e
 
 
@@ -2235,19 +1816,19 @@ def _boolify_sql(sql: str) -> str:
     """Rewrite the top-level SELECT items and WHERE/HAVING bodies with
     truthiness-coerced logical operands (test_logic.yaml: `!c2`,
     `c2=2 and (c2-1)`, string/date/timestamp logical operands)."""
-    masked = _mask_strings(sql)
+    masked = mask_literals(sql)
     # the projection body ends at the first FROM at paren depth 0 — a
     # FROM inside a scalar sub-query in the select list must not bind
     sm = re.search(r"(?is)\bselect\b", masked)
-    fm = next((f for f in _depth0_finditer(masked, r"(?is)\bfrom\b")
+    fm = next((f for f in depth0(sql, r"(?is)\bfrom\b")
                if sm and f.start() >= sm.end()), None)
     if sm and fm:
         m_start, m_end = sm.end(), fm.start()
         body = sql[m_start:m_end]
         items = []
-        for item in split_projection(body):
+        for item in split(body):
             am = re.fullmatch(r"(?is)(.+?)\s+as\s+(\w+)\s*",
-                              _mask_strings(item))
+                              mask_literals(item))
             if am:
                 items.append(_boolify_expr(item[:am.end(1)])
                              + f" as {am.group(2)}")
@@ -2255,7 +1836,7 @@ def _boolify_sql(sql: str) -> str:
                 items.append(_boolify_expr(item))
         sql = sql[:m_start] + " " + ", ".join(items) + " " \
             + sql[m_end:]
-        masked = _mask_strings(sql)
+        masked = mask_literals(sql)
     for clause in ("where", "having"):
         cm = re.search(
             rf"(?is)\b{clause}\b(.*?)(?=\bgroup\s+by\b|\bhaving\b|"
@@ -2264,7 +1845,7 @@ def _boolify_sql(sql: str) -> str:
             sql = (sql[:cm.start(1)] + " "
                    + _boolify_expr(sql[cm.start(1):cm.end(1)]) + " "
                    + sql[cm.end(1):])
-            masked = _mask_strings(sql)
+            masked = mask_literals(sql)
     return sql
 
 
@@ -2286,7 +1867,7 @@ def resolve_databases(sql: str, tables: dict, default_db: str | None):
     # qualified refs db.name / db.name.col → flat alias (string-masked:
     # a literal 'db1.t0' in a projection must NOT be rewritten)
     for (db, name), alias in mapping.items():
-        sql = _sub_outside_strings(
+        sql = sub_code(
             rf"\b{re.escape(db)}\s*\.\s*{re.escape(name)}\b", alias, sql)
     names = {n for (_, n) in mapping}
     if default_db:
@@ -2296,10 +1877,10 @@ def resolve_databases(sql: str, tables: dict, default_db: str | None):
         # fail resolution (id 8). Runs before the unknown-db check so a
         # default-db-qualified sub-query alias that shadows a catalog
         # name still resolves to the alias.
-        sql = _sub_outside_strings(
+        sql = sub_code(
             rf"\b{re.escape(default_db)}\s*\.\s*(\w+)", r"\1", sql)
     # a leftover qualified ref to a known table name = unknown database
-    for m in re.finditer(r"\b(\w+)\s*\.\s*(\w+)\b", _mask_strings(sql)):
+    for m in re.finditer(r"\b(\w+)\s*\.\s*(\w+)\b", mask_literals(sql)):
         db, name = m.group(1), m.group(2)
         if name in names and not db.startswith("__db_"):
             raise SqlUnsupported(
@@ -2307,7 +1888,7 @@ def resolve_databases(sql: str, tables: dict, default_db: str | None):
     # bare refs resolve in the default database only (table positions +
     # dotted column refs); searches on masked text so string literals
     # containing table names don't trigger resolution
-    masked = _mask_strings(sql)
+    masked = mask_literals(sql)
     for name in names:
         n = re.escape(name)
         if not re.search(rf"(?:\bfrom\s+|\bjoin\s+|\bunion\s+){n}\b"
@@ -2324,42 +1905,12 @@ def resolve_databases(sql: str, tables: dict, default_db: str | None):
             raise SqlUnsupported(
                 f"table {name!r} not in default database "
                 f"{default_db!r} (reference: fail to resolve)")
-        sql = _sub_outside_strings(
+        sql = sub_code(
             rf"((?:\bfrom|\bjoin|\bunion)\s+){n}\b", rf"\g<1>{alias}",
             sql, flags=re.IGNORECASE)
-        sql = _sub_outside_strings(rf"\b{n}\s*\.", f"{alias}.", sql)
-        masked = _mask_strings(sql)
+        sql = sub_code(rf"\b{n}\s*\.", f"{alias}.", sql)
+        masked = mask_literals(sql)
     return sql, flat
-
-
-def strip_comments(sql: str) -> str:
-    """Remove ``-- …`` line comments and ``/* … */`` block comments,
-    quote-aware (the reference's ZetaSQL lexer does this; production
-    feature scripts annotate projections with ``--`` comments —
-    cases/usecase/autox.yaml). The newline after a line comment is kept
-    so token separation survives."""
-    out, i, n = [], 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in "'\"":
-            j = _skip_str(sql, i)
-            out.append(sql[i:j])
-            i = j
-            continue
-        if ch == "-" and sql[i:i + 2] == "--":
-            j = sql.find("\n", i)
-            i = n if j < 0 else j
-            continue
-        if ch == "/" and sql[i:i + 2] == "/*":
-            j = sql.find("*/", i + 2)
-            if j < 0:
-                raise SqlUnsupported("unterminated block comment")
-            out.append(" ")
-            i = j + 2
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
 
 
 def run_sql(spark, sql: str, tables, params=None, default_db=None):
@@ -2376,49 +1927,32 @@ def run_sql(spark, sql: str, tables, params=None, default_db=None):
     sql = strip_comments(sql)
     if params is not None:
         sql = bind_params(sql, list(params))
-    sql = _strip_backticks(sql)
+    # identifier backquotes: the production feature scripts backtick-quote
+    # every identifier (cases/function/spark/test_jd.yaml); the regex
+    # front end and Spark resolve the bare names identically
+    sql = sub_code("`", "", sql)
     # `from(select ...)` / `join(select ...)` with no space — the
     # reference's tokenizer accepts it (deploy corpus test_create_deploy
     # id 5); normalize so the {N}-placeholder regexes see a boundary
-    sql = _sub_outside_strings(r"(?i)\b(from|join)\(", r"\1 (", sql)
+    sql = sub_code(r"(?i)\b(from|join)\(", r"\1 (", sql)
     # stacked statement terminators (`;\n;` — benchmark corpus
     # request_benchmark.yaml id 3) collapse to one: a stray second `;`
     # would otherwise ride along inside the last ON/WHERE clause text
     sql = re.sub(r"(?:\s*;)+\s*$", ";", sql)
-    cm = re.search(r"(?i)\bCONFIG\s*\(", sql)
-    if cm and not any(a < cm.start() < b for a, b in _string_spans(sql)):
-        # trailing CONFIG (k=v, ...) clause: hybridse parses and attaches
-        # it to the plan (plan corpus simple_query "select with config");
-        # the batch engine ignores it — strip through the matching paren
-        # quote-aware paren matching: a ')' inside a CONFIG string value
-        # must not close the clause early
-        depth, k, quote = 0, sql.index("(", cm.start()), None
-        while k < len(sql):
-            c = sql[k]
-            if quote:
-                if c == quote:
-                    quote = None
-            elif c in "'\"":
-                quote = c
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            k += 1
-        sql = sql[:cm.start()] + sql[k + 1:]
+    # trailing CONFIG (k=v, ...) clause: hybridse parses and attaches it
+    # to the plan (plan corpus simple_query "select with config"); the
+    # batch engine ignores it
+    sql = drop_calls(sql, "config")
     if re.match(r"\s*SET\b", sql, re.IGNORECASE):
         # session-variable statements are not part of the batch query
         # surface (and Spark's own SET would silently accept them —
         # plan/error_unsupport_sql.yaml set_statement)
         raise SqlUnsupported("SET statements are not supported")
-    for im in re.finditer(r"(?i)\bIN\s*\(\s*SELECT\b", sql):
-        if not any(a < im.start() < b for a, b in _string_spans(sql)):
-            # hybridse rejects IN with a subquery list
-            # (plan/error_unsupport_sql.yaml in_predicate_subquery);
-            # Spark would run it
-            raise SqlUnsupported("IN (subquery) is not supported")
+    if re.search(r"(?i)\bIN\s*\(\s*SELECT\b", mask_literals(sql)):
+        # hybridse rejects IN with a subquery list
+        # (plan/error_unsupport_sql.yaml in_predicate_subquery); Spark
+        # would run it
+        raise SqlUnsupported("IN (subquery) is not supported")
     if isinstance(tables, dict) and (
             default_db or any("." in k for k in tables)):
         sql, tables = resolve_databases(sql, tables, default_db)
@@ -2503,15 +2037,14 @@ def run_sql_request(spark, sql: str, tables, request, name: str):
     if not isinstance(tables, dict):
         raise SqlUnsupported("run_sql_request requires named tables")
     hist = tables[name]
-    sql = _strip_backticks(sql)
-    masked = _mask_strings(sql)
+    sql = sub_code("`", "", sql)
+    masked = mask_literals(sql)
     # A depth-0 set operation has no single request primary table — the
     # reference's request-mode planner fails to resolve it
     # (cases/plan/error_request_query.yaml id 0: "resolve请求主表失败").
     # Window UNION lives inside the window-def parens, so depth 0 is
     # unambiguous here.
-    if any(True for _ in _depth0_finditer(
-            masked, r"(?is)\bunion\b(?:\s+all\b)?")):
+    if depth0(sql, r"(?is)\bunion\b"):
         raise SqlUnsupported(
             "request mode: cannot resolve the request primary table "
             "across a set operation (reference rejects)")
@@ -2529,7 +2062,7 @@ def run_sql_request(spark, sql: str, tables, request, name: str):
         # and scalar parens don't
         if not (head.startswith("union") or head.startswith("partition")):
             continue
-        end = _match_paren(sql, start)
+        end = match_paren(sql, start)
         body = sql[start + 1:end].strip()
         if re.search(r"(?i)instance_not_in_window", body):
             # primary rows never buffer in this window: its frames are
@@ -2569,16 +2102,6 @@ def run_sql_request(spark, sql: str, tables, request, name: str):
 _REQ_RID = "__req_rid"
 
 
-def _depth0_finditer(masked: str, pattern: str):
-    """Matches of `pattern` at paren depth 0 of a string-masked text."""
-    spans = []
-    for m in re.finditer(pattern, masked):
-        d = masked.count("(", 0, m.start()) - masked.count(")", 0, m.start())
-        if d == 0:
-            spans.append(m)
-    return spans
-
-
 def _rid_thread_stmt(stmt: str, name: str, in_union: bool,
                      is_top: bool = False):
     """Recursive half of run_sql_request's row-id threading. Returns
@@ -2589,7 +2112,7 @@ def _rid_thread_stmt(stmt: str, name: str, in_union: bool,
     NULL rid instead (the strict union-schema check needs the column;
     union rows never surface). Top-level LAST JOINs between derived
     sub-selects get an extra ``rid = rid`` equi-condition."""
-    masked = _mask_strings(stmt)
+    masked = mask_literals(stmt)
     pieces, pos = [], 0
     alias_derived: dict[str, bool] = {}
     from_sub_derived = None
@@ -2597,7 +2120,7 @@ def _rid_thread_stmt(stmt: str, name: str, in_union: bool,
         start = m.start()
         if start < pos:
             continue
-        end = _match_paren(stmt, start)
+        end = match_paren(stmt, start)
         before = masked[:start]
         is_union_ctx = bool(re.search(r"(?is)union\s*$", before))
         is_from_ctx = bool(re.search(r"(?is)\bfrom\s*$", before))
@@ -2612,9 +2135,9 @@ def _rid_thread_stmt(stmt: str, name: str, in_union: bool,
         pos = end
     pieces.append(stmt[pos:])
     stmt = "".join(pieces)
-    masked = _mask_strings(stmt)
+    masked = mask_literals(stmt)
 
-    froms = _depth0_finditer(masked, r"(?i)\bfrom\b")
+    froms = depth0(stmt, r"(?i)\bfrom\b")
     if not froms:
         return stmt, False
     from_pos = froms[0].start()
@@ -2623,18 +2146,17 @@ def _rid_thread_stmt(stmt: str, name: str, in_union: bool,
         bool(re.match(rf"(?i){re.escape(name)}\b", after_from))
 
     # augment top-level LAST JOIN conditions with rid equality
-    joins = _depth0_finditer(masked, r"(?i)\bas\s+(\w+)\s+on\b")
+    joins = depth0(stmt, r"(?i)\bas\s+(\w+)\s+on\b")
     root_alias = None
     if after_from.startswith("("):
         paren = stmt.index("(", froms[0].end())
         root_m = re.match(r"\s*as\s+(\w+)",
-                          stmt[_match_paren(stmt, paren) + 1:],
+                          stmt[match_paren(stmt, paren) + 1:],
                           re.IGNORECASE)
         root_alias = root_m.group(1) if root_m else None
     if root_alias and alias_derived.get(root_alias):
         inserts = []
-        bounds = _depth0_finditer(
-            masked, r"(?i)\b(last\s+join|window|limit)\b|;")
+        bounds = depth0(stmt, r"(?i)\b(last\s+join|window|limit)\b|;")
         for jm in joins:
             alias = jm.group(1)
             if alias == root_alias or not alias_derived.get(alias):
@@ -2649,8 +2171,7 @@ def _rid_thread_stmt(stmt: str, name: str, in_union: bool,
                  f" and {root_alias}.{_REQ_RID} = {alias}.{_REQ_RID} "))
         for p, txt in sorted(inserts, reverse=True):
             stmt = stmt[:p] + txt + stmt[p:]
-        masked = _mask_strings(stmt)
-        froms = _depth0_finditer(masked, r"(?i)\bfrom\b")
+        froms = depth0(stmt, r"(?i)\bfrom\b")
         from_pos = froms[0].start()
 
     # append the rid projection item
@@ -2661,7 +2182,7 @@ def _rid_thread_stmt(stmt: str, name: str, in_union: bool,
     if derived and proj != "*" and not is_top:
         # only sub-selects emit the rid (parents join on it); the
         # top-level projection is user-facing output
-        has_lj = bool(_depth0_finditer(masked, r"(?i)\blast\s+join\b"))
+        has_lj = bool(depth0(stmt, r"(?i)\blast\s+join\b"))
         qual = f"{name}." if (has_lj and not after_from.startswith("(")) \
             else ""
         item = f", {qual}{_REQ_RID} as {_REQ_RID} "
@@ -2696,7 +2217,7 @@ def _ms_tables(tables: list) -> list:
 def _dispatch_sql(spark, sql: str, tables):
     # sniff on a string-masked copy: a literal containing "over"/"last
     # join" must not steer dispatch
-    masked = _mask_strings(sql)
+    masked = mask_literals(sql)
     has_lj = bool(re.search(r"last\s+join", masked, re.IGNORECASE))
     has_win = bool(re.search(r"\bWINDOW\b|\bOVER\b", masked, re.IGNORECASE))
     if not has_lj and not has_win:
@@ -2706,7 +2227,7 @@ def _dispatch_sql(spark, sql: str, tables):
     # re-sniff: the window/join tokens may all have lived inside the
     # now-inlined sub-selects (production scripts join three windowed
     # sub-selects with LAST JOIN — cases/function/spark/test_jd.yaml)
-    masked = _mask_strings(sql)
+    masked = mask_literals(sql)
     has_lj = bool(re.search(r"last\s+join", masked, re.IGNORECASE))
     has_win = bool(re.search(r"\bWINDOW\b|\bOVER\b", masked, re.IGNORECASE))
     if not has_lj and not has_win:
@@ -2723,7 +2244,7 @@ def _dispatch_sql(spark, sql: str, tables):
     if has_lj and has_win:
         return _run_lastjoin_window_sql(sql, tables, limit=limit)
     if has_lj:
-        if re.search(r"\bgroup\s+by\b", _mask_strings(sql), re.IGNORECASE):
+        if re.search(r"\bgroup\s+by\b", mask_literals(sql), re.IGNORECASE):
             return _run_lastjoin_groupby_sql(spark, sql, tables,
                                              limit=limit)
         return _run_lastjoin_sql(sql, tables, limit=limit)
@@ -2740,7 +2261,7 @@ def _run_plain_sql(spark, sql: str, tables: list):
     # ill-defined; fail instead of silently grouping
     gm = re.search(
         r"\bgroup\s+by\s+(.*?)(?:\bhaving\b|\border\s+by\b|\blimit\b|;|$)",
-        _mask_strings(sql), re.IGNORECASE | re.DOTALL)
+        mask_literals(sql), re.IGNORECASE | re.DOTALL)
     if gm:
         for tok in gm.group(1).split(","):
             tok = _strip_t(tok)
@@ -2756,17 +2277,17 @@ def _run_plain_sql(spark, sql: str, tables: list):
     # count over a const is rejected by the reference (`count(1)` fails,
     # `count(*)` passes — v040/test_udaf.yaml ids 0-1); masked so a
     # literal "count(1)" inside a string cannot trip it
-    if re.search(r"\bcount\s*\(\s*\d+(?:\.\d+)?\s*\)", _mask_strings(sql),
+    if re.search(r"\bcount\s*\(\s*\d+(?:\.\d+)?\s*\)", mask_literals(sql),
                  re.IGNORECASE):
         raise SqlUnsupported("count over a const (reference rejects)")
 
     for i, df in enumerate(tables):
         df.createOrReplaceTempView(f"__sql_t{i}")
-    sql = _sub_outside_strings(r"\{(\d+)\}", r"__sql_t\1", sql)
+    sql = sub_code(r"\{(\d+)\}", r"__sql_t\1", sql)
     # OpenMLDB's parser tolerates a trailing comma in the select list
     # (cases/query/udf_query.yaml udf_replace); Spark's does not.
     # Quote-aware: a string literal containing ", from" must survive.
-    sql = _sub_outside_strings(r",\s*(FROM\b)", r" \1", sql,
+    sql = sub_code(r",\s*(FROM\b)", r" \1", sql,
                                flags=re.IGNORECASE)
     # LIMIT 0 = unlimited in OpenMLDB (GetLimitCnt()==0 means unset)
     sql = re.sub(r"\blimit\s+0\s*;?\s*$", ";", sql, flags=re.IGNORECASE)
@@ -2780,7 +2301,7 @@ def _run_lastjoin_window_sql(sql: str, tables: list, limit: int | None = None):
     over the joined table with {1}.col refs mapped to the joined r__cols."""
     import pyspark.sql.functions as F
 
-    if len(re.findall(r"last\s+join", _mask_strings(sql),
+    if len(re.findall(r"last\s+join", mask_literals(sql),
                       re.IGNORECASE)) > 1:
         raise SqlUnsupported("multi-table LAST JOIN chain + WINDOW")
     # normalize an aliased right side — `last join {k} as t1 ... t1.c4`
@@ -2832,7 +2353,7 @@ def _run_lastjoin_window_sql(sql: str, tables: list, limit: int | None = None):
     # window part over the joined table: {1}.col → r__col, {0}.col → col;
     # bare `{1}.c4` projections keep their user-facing name `c4`
     items = []
-    for it in split_projection(m.group("proj")):
+    for it in split(m.group("proj")):
         it = it.strip()
         pm = re.fullmatch(r"\{1\}\.(\w+)", it)
         items.append(f"{{1}}.{pm.group(1)} as {pm.group(1)}" if pm else it)
@@ -2971,7 +2492,7 @@ def _run_lastjoin_groupby_sql(spark, sql: str, tables: list,
     22-24): run the join keeping every column, then the aggregation over
     the joined table through the plain-SQL path — the reference stacks
     GroupByAggregationPlan on JoinPlan the same way."""
-    if len(re.findall(r"last\s+join", _mask_strings(sql),
+    if len(re.findall(r"last\s+join", mask_literals(sql),
                       re.IGNORECASE)) > 1:
         raise SqlUnsupported("multi-table LAST JOIN chain + GROUP BY")
     m = re.match(
@@ -3081,44 +2602,6 @@ def _run_lastjoin_sql(sql: str, tables: list, limit: int | None = None):
     return res[0].select(*res[1])
 
 
-def _split_conds(cond_txt: str) -> list[str]:
-    """Split a join condition on top-level ANDs — paren-depth- and
-    quote-aware (an AND inside a parenthesized sub-condition or a
-    string literal must not split), keeping the AND that belongs to a
-    BETWEEN ... AND ... intact."""
-    parts: list[str] = []
-    cur: list[str] = []
-    depth, i, n = 0, 0, len(cond_txt)
-    while i < n:
-        ch = cond_txt[i]
-        if ch in "'\"":
-            j = _skip_str(cond_txt, i)
-            cur.append(cond_txt[i:j])
-            i = j
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if depth == 0 and (i == 0 or cond_txt[i - 1].isspace()) and \
-                re.match(r"(?i)and(?![\w$])", cond_txt[i:i + 4]):
-            parts.append("".join(cur))
-            cur = []
-            i += 3
-            continue
-        cur.append(ch)
-        i += 1
-    parts.append("".join(cur))
-    out: list[str] = []
-    for p in parts:
-        if out and re.search(r"\bbetween\b\s*\S*$",
-                             out[-1], re.IGNORECASE | re.DOTALL):
-            out[-1] = f"{out[-1]} AND {p}"
-        else:
-            out.append(p)
-    return [p for p in out if p.strip()]
-
-
 def _one_last_join(left, right, order, cond_txt, rid=False,
                    rprefix="r__"):
     """Execute one LAST JOIN of `right` into `left`; right columns come
@@ -3152,14 +2635,17 @@ def _one_last_join(left, right, order, cond_txt, rid=False,
             return "{1}." + n
         return n
 
-    cond_txt = _sub_outside_strings(
+    cond_txt = sub_code(
         r"(?<![\w.}'\"])[A-Za-z_]\w*\b(?!\s*[(.])", _qual, cond_txt)
 
     right = right.select(*[F.col(c).alias(f"{rprefix}{c}")
                            for c in right.columns])
     equi, residual = [], []
-    for tok in _split_conds(cond_txt):
+    # top-level ANDs split the condition; the AND of a BETWEEN does not
+    for tok in split(cond_txt, "and", between=True):
         tok = tok.strip()
+        if not tok:
+            continue
         em = re.fullmatch(r"\{0\}\.(\w+)\s*=\s*\{\d+\}\.(\w+)", tok) or \
             re.fullmatch(r"\{\d+\}\.(?P<r>\w+)\s*=\s*\{0\}\.(?P<l>\w+)", tok)
         if em and em.groupdict().get("r"):
@@ -3272,7 +2758,7 @@ def _project_lastjoin(out, proj_txt: str, prefixes: dict):
         return out, sel
 
     sel = []
-    for item in split_projection(proj_txt):
+    for item in split(proj_txt):
         item = item.strip()
         pm = re.fullmatch(
             r"\{(?P<t>\d+)\}\.(?P<col>\w+)(?:\s+as\s+(?P<alias>\w+))?",

@@ -167,14 +167,3 @@ def test_last_join_unordered_case_insensitive_right_cols(spark):
     got = last_join(left, right, LastJoinSpec(left_on=["k"]),
                     right_cols=["CFG"]).collect()
     assert got[0]["CFG" if "CFG" in got[0].asDict() else "cfg"] == "z"
-
-
-# -- review sweep: sqlalchemy URL-key validation ---------------------------
-
-def test_sqlalchemy_url_rejects_unknown_query_keys():
-    from openmldb_spark.sqlalchemy_openmldb import connect_args_from_url
-    with pytest.raises(ValueError, match="requestTimeout"):
-        connect_args_from_url("db", {"requestTimeout": "1000"})
-    # the reference-contract keys still pass through
-    _, kwargs = connect_args_from_url("db", {"zk": "h", "port": "1"})
-    assert kwargs == {"db": "db", "zk": "h", "port": "1"}

@@ -119,6 +119,23 @@ def test_executemany(cur):
     assert {("m1", 1), ("m2", 2), ("m3", 3)} <= set(rows)
 
 
+def test_executemany_replays_only_database_errors(cur, monkeypatch):
+    # a failure that is not a DatabaseError (here: the statement
+    # executor itself breaking) propagates from the batch statement at
+    # once — it is not replayed row by row
+    calls = []
+
+    def broken(command, params=None):
+        calls.append(command)
+        raise RuntimeError("engine down")
+
+    monkeypatch.setattr(cur, "_exec_stmt", broken)
+    with pytest.raises(RuntimeError, match="engine down"):
+        cur.executemany("insert into new_table values(?, ?);",
+                        [("e1", 1), ("e2", 2), ("e3", 3)])
+    assert len(calls) == 1
+
+
 # ------------------------------------------------------------ selects
 def test_parameterized_select(cur):
     cur.executemany("insert into new_table values(?, ?);",

@@ -97,7 +97,7 @@ def _canonical(s):
 def entry_points() -> dict:
     """name -> callable(sql) returning JSON-able data. Each maps onto
     the function that currently implements the recorded behaviour."""
-    from openmldb_spark import dbapi, sqlfe
+    from openmldb_spark import sqlfe, sqllex
     from openmldb_spark.sources import ddl, deploy, io, session
 
     return {
@@ -113,22 +113,25 @@ def entry_points() -> dict:
         "boolify_sql": sqlfe._boolify_sql,
         "rid_thread": lambda s: list(
             sqlfe._rid_thread_stmt(s, "t1", False, is_top=True)),
-        "split_projection": sqlfe.split_projection,
-        "split_conds": sqlfe._split_conds,
-        "split_kw_and": lambda s: sqlfe._split_kw(s, "AND"),
-        "split_addsub": lambda s: [list(t) for t in sqlfe._split_addsub(s)],
-        "split_mul": sqlfe._split_mul,
-        "split_muldiv": lambda s: [list(t) for t in sqlfe._split_muldiv(s)],
-        "mask_strings": sqlfe._mask_strings,
-        "strip_backticks": sqlfe._strip_backticks,
+        "split_projection": sqllex.split,
+        "split_conds": lambda s: [p for p in sqllex.split(
+            s, "and", between=True) if p.strip()],
+        "split_kw_and": lambda s: sqllex.split(s, "AND", case_end=True),
+        "split_addsub": lambda s: [
+            [o or "+", t] for o, t in sqllex.split_binary(s, "+-")],
+        "split_mul": lambda s: [f for _, f in sqllex.split_binary(s, "*")],
+        "split_muldiv": lambda s: [
+            list(t) for t in sqllex.split_binary(s, "*/%")],
+        "mask_strings": sqllex.mask_literals,
+        "strip_backticks": lambda s: sqllex.sub_code("`", "", s),
         "split_statements": session.split_statements,
         "format_deploy_sql": lambda s: deploy.format_deploy_sql("d1", s),
         "parse_create_table": lambda s: repr(ddl.parse_create_table(s)),
         "parse_insert": lambda s: repr(ddl.parse_insert(s)),
         "strip_config_clauses": io._strip_config_clauses,
         "parse_stmt_options": lambda s: repr(io._parse_stmt_options(s)),
-        "hole_count": dbapi._count_holes,
-        "hole_fill": lambda s: dbapi._fill_holes(s, _HOLE_LITS),
+        "hole_count": sqllex.placeholders,
+        "hole_fill": lambda s: sqllex.fill_placeholders(s, _HOLE_LITS),
     }
 
 

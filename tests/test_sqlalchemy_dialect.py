@@ -1,41 +1,9 @@
-"""SQLAlchemy dialect twin (VERDICT r4 task #6).
-
-The container ships no sqlalchemy, so the suite tests in two tiers:
-- ungated: the URL→connect-args glue, the default-session registry, and
-  the ORM-free ``pandas.read_sql`` path over the raw DBAPI connection
-  (the drop-in for ``pd.read_sql(engine)`` users when the library is
-  absent).
-- importorskip("sqlalchemy"): the real ``create_engine`` round-trip
-  mirroring the reference's ``python/test/sqlalchemy_api_test.py``
-  (create_all → has_table → insert → select).
+"""pandas over the PEP-249 driver: the reference's
+``pd.read_sql(engine)`` workflow without an SQLAlchemy dialect —
+``pd.read_sql`` accepts a DBAPI connection directly.
 """
 
 import pandas as pd
-import pytest
-
-
-def test_connect_args_from_url_maps_db_and_query():
-    from openmldb_spark.sqlalchemy_openmldb import connect_args_from_url
-    args, kwargs = connect_args_from_url("db_test", {"zk": "h:2181",
-                                                    "zkPath": "/omdb"})
-    assert args == ()
-    assert kwargs == {"db": "db_test", "zk": "h:2181", "zkPath": "/omdb"}
-    # no database in the URL → the driver's default db
-    _, kwargs = connect_args_from_url(None, None)
-    assert kwargs == {"db": "default_db"}
-
-
-def test_bound_dbapi_uses_registered_spark(spark):
-    from openmldb_spark import sqlalchemy_openmldb as sa
-    sa.set_default_spark(spark)
-    module = sa._dbapi_module()
-    assert module.paramstyle == "qmark"
-    db = module.connect("sa_db")           # no spark kwarg: injected
-    cur = db.cursor()
-    cur.execute("create table sat (x string, y int)")
-    cur.execute("insert into sat values ('first', 100)")
-    assert cur.execute("select * from sat").fetchall() == [("first", 100)]
-    assert "sat" in cur.get_all_tables()
 
 
 def test_pandas_read_sql_over_dbapi(spark):
@@ -55,29 +23,3 @@ def test_pandas_read_sql_over_dbapi(spark):
     assert list(got.columns) == ["a", "b"]
     assert got["a"].tolist() == [0, 1, 2, 3]
     assert got["b"].tolist() == ["s0", "s1", "s2", "s3"]
-
-
-def test_register_dialect_gated_error_without_sqlalchemy():
-    from openmldb_spark import sqlalchemy_openmldb as sa
-    if sa.HAVE_SQLALCHEMY:
-        pytest.skip("sqlalchemy present; gated-error path not reachable")
-    with pytest.raises(ImportError, match="read_sql works without"):
-        sa.register_dialect()
-
-
-# ---- real-sqlalchemy tier (runs only where the library exists) ----------
-
-def test_sqlalchemy_engine_roundtrip(spark):
-    sqlalchemy = pytest.importorskip("sqlalchemy")
-    from openmldb_spark import sqlalchemy_openmldb as sa
-    sa.set_default_spark(spark)
-    sa.register_dialect()
-    engine = sqlalchemy.create_engine("openmldb_spark:///db_sa")
-    with engine.connect() as conn:
-        conn.exec_driver_sql("create table tsa (x string, y int)")
-        assert engine.dialect.has_table(conn, "tsa")
-        conn.exec_driver_sql("insert into tsa values ('first', 100)")
-        rows = conn.exec_driver_sql("select * from tsa").fetchall()
-        assert list(rows[0]) == ["first", 100]
-    got = pd.read_sql("select * from tsa", engine)
-    assert got.iloc[0].tolist() == ["first", 100]

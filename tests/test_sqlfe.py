@@ -158,7 +158,7 @@ def test_sqlfe_named_tables(spark):
 
 
 def test_strip_comments_quote_aware():
-    from openmldb_spark.sqlfe import strip_comments
+    from openmldb_spark.sqllex import strip_comments
     # literals survive; comments vanish to end of line / block
     assert strip_comments("select a -- drop me\nfrom t") == \
         "select a \nfrom t"

@@ -247,6 +247,28 @@ def test_top_n_frequency_null_padding_and_numeric_keys():
     assert list(out["topk"]) == ["10,NULL,NULL", "2,10,NULL", "2,10,NULL"]
 
 
+def test_all_null_key_group_pads_and_emits_empty():
+    # a group whose key column is entirely NULL has no categories at all:
+    # top_n_frequency still pads a non-empty frame to k "NULL"s, and the
+    # *_cate family emits "" (no key present)
+    rows = [
+        dict(id=1, __ord=1000, v=1.0, t=None, c=True),
+        dict(id=2, __ord=2000, v=2.0, t=None, c=True),
+    ]
+    spec = WindowSpec(partition_by=["g"], frame="rows", preceding=10)
+    out = run(rows, spec, [
+        Agg("top_n_frequency", "t", "topt", param=2),
+        Agg("sum_cate", "v", "sc", cate="t"),
+        Agg("count_cate_where", "v", "cw", cond="c", cate="t"),
+        Agg("top_n_key_avg_cate_where", "v", "ta", cond="c", cate="t",
+            param=2),
+    ])
+    assert list(out["topt"]) == ["NULL,NULL", "NULL,NULL"]
+    assert list(out["sc"]) == ["", ""]
+    assert list(out["cw"]) == ["", ""]
+    assert list(out["ta"]) == ["", ""]
+
+
 def test_top_n_key_cate_where():
     # keep only the n LARGEST keys (complete accumulators), emit key-DESC
     # (TopKAvgCateWhereDef, avg_by_category_def.cc:143-218; bounded
