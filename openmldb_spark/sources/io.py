@@ -295,11 +295,12 @@ def _parse_stmt_options(text: str | None) -> dict:
     out = {}
     if not text or not text.strip():
         return out
-    # commas inside quoted values (delimiter=",", delimiter='\'') do
-    # not separate options
-    cuts = [0] + [p for t in sqllex.tokenize(text) if t.kind == "comma"
-                  for p in (t.start, t.end)] + [len(text)]
-    for kv in (text[a:b] for a, b in zip(cuts[::2], cuts[1::2])):
+    # every comma outside a literal separates options (delimiter=",",
+    # delimiter='\'' are one option each)
+    commas = [t for t in sqllex.tokenize(text) if t.kind == "comma"]
+    for a, b in zip([0] + [t.end for t in commas],
+                    [t.start for t in commas] + [len(text)]):
+        kv = text[a:b]
         m = _re.fullmatch(r"\s*(\w+)\s*=\s*(.+?)\s*", kv, _re.DOTALL)
         if not m:
             raise ValueError(f"malformed option {kv!r}")
