@@ -16,22 +16,42 @@ Two physical strategies:
   freely picks broadcast-hash when the right side is small; at 100 TB the
   join shuffles on the equi keys once and the dedup window re-uses that
   partitioning (row id is a salt-free key: no skew because it's unique).
-- ``asof_join_kernel`` — range-co-partitioned sort-merge as-of for the
-  time-travel case (condition ``right.ts <= left.ts``): cogroup both sides
-  on the keys and run ``pandas.merge_asof`` per group. This is the
-  shuffle-minimal plan when both sides are huge: one exchange per side,
-  no row explosion for hot keys (the joined+dedup plan materializes every
-  candidate match; the merge pass is O(n+m) per key).
+- ``asof_join_kernel`` — the time-travel case (condition
+  ``right.ts <= left.ts``) as one running-window pass, all in the JVM:
+  union the left rows with the non-null-ts right rows (right values
+  packed in one struct), sort each key's rows by ts with right before
+  left at equal ts, and carry the last right struct forward onto every
+  left row. One exchange on the keys (none on inputs bucketed on them),
+  no row explosion for hot keys (the joined+dedup plan materializes
+  every candidate match; this pass is O(n+m) per key).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 
 from openmldb_spark.plans.specs import LastJoinSpec
 
 _RID = "__l_rid"
+_SIDE = "__side"
+_RVAL = "__r"
+
+# types Spark can sort: a column of any other type (map, variant,
+# calendar interval, UDT, geometry) in an ORDER BY raises
+# AnalysisException
+_ORDERABLE = (T.NumericType, T.StringType, T.CharType, T.VarcharType,
+              T.BinaryType, T.BooleanType, T.DatetimeType,
+              T.AnsiIntervalType, T.NullType)
+
+
+def _orderable(dt: T.DataType) -> bool:
+    if isinstance(dt, T.ArrayType):
+        return _orderable(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return all(_orderable(f.dataType) for f in dt.fields)
+    return isinstance(dt, _ORDERABLE)
 
 
 def last_join(
@@ -65,7 +85,6 @@ def last_join(
         # the reference rejects float/double/date/smallint LAST JOIN
         # order keys (test_lastjoin_simple.yaml ids 7-9, 28); int32,
         # int64 and timestamp are the sortable key domain
-        import pyspark.sql.types as T
         odt = right.schema[spec.order_by].dataType
         if isinstance(odt, (T.FloatType, T.DoubleType, T.DateType,
                             T.StringType, T.BooleanType, T.ShortType,
@@ -119,20 +138,9 @@ def last_join(
         # unordered join with no declared tiebreak: pin determinism on
         # the right VALUE columns (an orderBy(lit(1)) row_number keeps
         # partition-arrival order — different per retry/partitioning).
-        # Only ORDERABLE types can participate: a map<..> column in the
-        # orderBy raises AnalysisException, so filter those out and fall
-        # back to lit(1) if nothing orderable remains (documented
+        # Only ORDERABLE types can participate: filter the others out and
+        # fall back to lit(1) if nothing orderable remains (documented
         # residual nondeterminism, same as pre-pinning behavior).
-        import pyspark.sql.types as T
-
-        def _orderable(dt) -> bool:
-            if isinstance(dt, T.MapType):
-                return False
-            if isinstance(dt, T.ArrayType):
-                return _orderable(dt.elementType)
-            if isinstance(dt, T.StructType):
-                return all(_orderable(f.dataType) for f in dt.fields)
-            return True
 
         # exact-name lookup first, case-insensitive fallback second —
         # Spark resolves r[c] case-insensitively, so a caller-supplied
@@ -168,23 +176,15 @@ def asof_join_kernel(
     right_ts: str = "ts_ms",
     right_cols: list[str] | None = None,
     allow_exact_matches: bool = True,
-    num_partitions: int | None = None,
-    pre_partitioned: bool = False,
 ) -> DataFrame:
     """Point-in-time as-of join: newest right row with ts <= left ts per key.
 
-    Implemented as a cogrouped sort-merge pass (applyInPandas over cogroup),
-    equivalent to LAST JOIN with condition ``r.ts <= l.ts ORDER BY r.ts``.
-
-    ``pre_partitioned=True``: both sides are already hash-clustered on
-    ``on`` with the SAME bucket count (bucketed tables from
-    sources/layout.py) — skip the explicit repartitions so the cogroup
-    merge runs shuffle-free; Catalyst still inserts exchanges itself if
-    the assertion does not hold.
+    Equivalent to LAST JOIN with condition ``r.ts <= l.ts ORDER BY r.ts``
+    (``r.ts < l.ts`` when ``allow_exact_matches`` is False), run as one
+    running-window pass over the union of both sides. Right rows tied at
+    the picked ts resolve to the max value tuple, a NULL ranking above
+    every value; a NULL-ts row on either side never matches.
     """
-    import pandas as pd
-    import pyspark.sql.types as T
-
     if right_cols is None:
         right_cols = [
             c for c in right.columns if c not in on and c != right_ts
@@ -198,75 +198,43 @@ def asof_join_kernel(
             f"right={missing_r}")
     clash = [c for c in right_cols if c in left.columns]
     if clash:
-        # merge_asof would suffix the right column and the final select
-        # would silently re-pick the LEFT column into the right slot
+        # the right values are unpacked next to every left column: a
+        # shared name would make the output ambiguous
         raise ValueError(
             f"asof_join_kernel: right_cols {clash} collide with left "
             f"columns — alias them on the right side first")
-    # every field nullable: unmatched left rows carry null right columns
-    out_schema = T.StructType(
-        [T.StructField(f.name, f.dataType, True) for f in left.schema.fields]
-        + [T.StructField(c, right.schema[c].dataType, True) for c in right_cols]
-    )
-    left_cols = list(left.columns)
 
-    def merge(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(l_pdf) == 0:
-            return pd.DataFrame(columns=left_cols + right_cols)
-        # null timestamps: merge_asof raises on null merge keys — a
-        # null-ts left row is UNMATCHED (like last_join / the SQL
-        # lowering), a null-ts right row can never match
-        l_null = l_pdf[l_pdf[left_ts].isna()]
-        l_pdf = l_pdf[l_pdf[left_ts].notna()]
-        r_pdf = r_pdf[r_pdf[right_ts].notna()]
-
-        def unmatched(rows: pd.DataFrame) -> pd.DataFrame:
-            res = rows.copy()
-            for c in right_cols:
-                res[c] = None
-            return res
-
-        if len(l_pdf) == 0:
-            return unmatched(l_null)
-        l_sorted = l_pdf.sort_values(left_ts, kind="stable")
-        if len(r_pdf) == 0:
-            out = unmatched(l_sorted)
-        else:
-            # sort equal-ts right rows by their value columns too: with
-            # duplicate timestamps merge_asof keeps the LAST sorted row,
-            # so the pick is the max value tuple — deterministic across
-            # retries/partitionings instead of cogroup arrival order
-            try:
-                r_sorted = r_pdf.sort_values(
-                    [right_ts, *right_cols],
-                    kind="stable")[[right_ts] + right_cols]
-            except TypeError:   # unsortable value type (array/binary)
-                r_sorted = r_pdf.sort_values(
-                    right_ts, kind="stable")[[right_ts] + right_cols]
-            merged = pd.merge_asof(
-                l_sorted,
-                r_sorted,
-                left_on=left_ts,
-                right_on=right_ts,
-                direction="backward",
-                allow_exact_matches=allow_exact_matches,
-                suffixes=("", "__r"),
-            )
-            out = merged[left_cols + right_cols]
-        if len(l_null):
-            out = pd.concat([out, unmatched(l_null)], ignore_index=True)
-        return out
-
-    # explicit partition count: AQE size-based coalescing would serialize
-    # the per-group Python merge (see window.py kernel note)
-    if pre_partitioned:
-        lg, rg = left, right
-    else:
-        if num_partitions is None:
-            num_partitions = \
-                left.sparkSession.sparkContext.defaultParallelism
-        lg = left.repartition(num_partitions, *on)
-        rg = right.repartition(num_partitions, *on)
-    return lg.groupBy(*on).cogroup(rg.groupBy(*on)).applyInPandas(
-        merge, schema=out_schema
-    )
+    rtype = T.StructType([T.StructField(c, right.schema[c].dataType)
+                          for c in right_cols])
+    # at equal ts the side sorting first is visible to the other:
+    # right first admits exact matches
+    r_side, l_side = (0, 1) if allow_exact_matches else (1, 0)
+    # re-aliasing the keys keeps a bucketed child's hash partitioning
+    # visible through the union, so the window needs no exchange
+    keys = [F.col(k).alias(k) for k in on]
+    l = left.select(
+        *keys,
+        *[F.col(c) for c in left.columns if c not in on],
+        F.lit(l_side).alias(_SIDE),
+        F.lit(None).cast(rtype).alias(_RVAL))
+    r = right.where(F.col(right_ts).isNotNull()).select(
+        *keys,
+        *[F.col(right_ts).alias(left_ts) if c == left_ts
+          else F.lit(None).cast(left.schema[c].dataType).alias(c)
+          for c in left.columns if c not in on],
+        F.lit(r_side).alias(_SIDE),
+        F.struct(*right_cols).alias(_RVAL))
+    # ties among right rows at one ts: the last in ascending NULLS LAST
+    # value order wins, i.e. the max value tuple; unorderable value
+    # columns (maps) drop out of that order
+    ties = [F.col(_RVAL)[c].asc_nulls_last() for c in right_cols
+            if _orderable(rtype[c].dataType)]
+    w = (Window.partitionBy(*on)
+         .orderBy(F.col(left_ts).asc_nulls_first(), _SIDE, *ties)
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    # a NULL-ts left row sorts before every right row: no match
+    return (l.unionByName(r)
+            .withColumn(_RVAL, F.last(_RVAL, ignorenulls=True).over(w))
+            .where(F.col(_SIDE) == l_side)
+            .select(*left.columns,
+                    *[F.col(_RVAL)[c].alias(c) for c in right_cols]))

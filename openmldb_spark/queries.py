@@ -308,8 +308,9 @@ SELECT conv_id, turn_idx, cfg, weight FROM j WHERE rk = 1
 
 
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sort-merge as-of kernel (cogroup + merge_asof) — shuffle-minimal plan
-    for two huge sides; same semantics as q_last_join."""
+    """As-of kernel: one union + running-window pass (one exchange, no
+    Python, O(n+m) per key) — the plan for two huge sides; same
+    semantics as q_last_join."""
     t = transcripts_df(spark, sf_dir).select(*KEY, "ts_ms")
     u = updates_df(spark, sf_dir).select("conv_id", "ts_ms", "cfg", "weight")
     out = asof_join_kernel(t, u, on=["conv_id"], left_ts="ts_ms",

@@ -9,14 +9,15 @@ The offline analog at 100 TB is a bucketed+sorted file layout:
     df.write.bucketBy(N, *keys).sortBy(ts).saveAsTable(name)
 
 Every downstream operator that clusters on the same keys — the window
-kernel's ``groupBy(keys).applyInPandas``, the as-of cogroup merge, plain
-joins/aggregations on the keys — then reads a scan whose
+kernel's ``groupBy(keys).applyInPandas``, the as-of join's running
+window, plain joins/aggregations on the keys — then reads a scan whose
 HashPartitioning already satisfies its ClusteredDistribution, and
 Catalyst's EnsureRequirements inserts NO shuffle: the single exchange
-that otherwise dominates a 100 TB window/backfill job disappears (pass
-``pre_partitioned=True`` to window_agg / asof_join_kernel to drop their
-explicit AQE-defeating repartition as well; both stay correct if the
-assertion is wrong — Catalyst re-adds the exchange).
+that otherwise dominates a 100 TB window/backfill job disappears. Pass
+``pre_partitioned=True`` to window_agg to drop its explicit
+AQE-defeating repartition as well (still correct if the assertion is
+wrong — Catalyst re-adds the exchange); asof_join_kernel has no
+repartition to drop and needs no flag.
 
 The reference approximates the same effect on Spark by letting its
 offline planner exploit table indexes for window/join key alignment
@@ -44,8 +45,8 @@ def materialize_indexed(
 
     buckets defaults to the session's defaultParallelism — on a real
     cluster pick ~2-4x total executor cores so task skew smooths, and
-    keep the SAME count for tables that will cogroup/join together
-    (matching bucket counts are required for a shuffle-free cogroup)."""
+    keep the SAME count for tables that will be joined together, as-of
+    or plain (a shuffle-free join needs matching bucket counts)."""
     spark = df.sparkSession
     if not keys:
         raise ValueError("materialize_indexed needs at least one key")

@@ -78,8 +78,7 @@ def test_bucketed_asof_cogroup_is_shuffle_free(spark, data, tmp_path):
                              buckets=4, path=str(tmp_path / "bkt_r"))
     try:
         out_b = asof_join_kernel(lt, rt, on=["conv_id"], left_ts="ts_ms",
-                                 right_ts="ts_ms", right_cols=["rv"],
-                                 pre_partitioned=True)
+                                 right_ts="ts_ms", right_cols=["rv"])
         assert _exchanges(out_b) == 0
         out_d = asof_join_kernel(data, right, on=["conv_id"],
                                  left_ts="ts_ms", right_ts="ts_ms",

@@ -124,6 +124,49 @@ def test_last_join_broadcasts_small_right(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
 
 
+def test_asof_kernel_one_exchange_no_python(spark, tmp_path):
+    """The as-of kernel runs in the JVM: no Python node, one hash
+    exchange on plain inputs and none on inputs bucketed on the key —
+    with broadcasts off, so a join-based rewrite cannot hide a reshuffle
+    behind a broadcast."""
+    from openmldb_spark.operators.lastjoin import asof_join_kernel
+    from openmldb_spark.sources.layout import materialize_indexed
+
+    def executed(df) -> str:        # the final AQE plan, after a run
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.split("== Initial Plan ==")[0]
+
+    left = spark.createDataFrame(
+        [(f"c{i % 5}", i * 10, i) for i in range(60)],
+        "conv_id string, ts_ms bigint, lid int")
+    right = spark.createDataFrame(
+        [(f"c{i % 5}", i * 7, f"v{i}") for i in range(40)],
+        "conv_id string, ts_ms bigint, cfg string")
+    plan = executed(asof_join_kernel(left, right, on=["conv_id"]))
+    for node in ("FlatMapCoGroupsInPandas", "ArrowEvalPython",
+                 "BatchEvalPython"):
+        assert node not in plan, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        lt = materialize_indexed(left, "asof_bkt_l", ["conv_id"],
+                                 sort_by="ts_ms", buckets=4,
+                                 path=str(tmp_path / "l"))
+        rt = materialize_indexed(right, "asof_bkt_r", ["conv_id"],
+                                 sort_by="ts_ms", buckets=4,
+                                 path=str(tmp_path / "r"))
+        plan = executed(asof_join_kernel(lt, rt, on=["conv_id"]))
+        assert "Exchange" not in plan, plan
+    finally:
+        spark.conf.set(key, prev)
+        spark.sql("DROP TABLE IF EXISTS asof_bkt_l")
+        spark.sql("DROP TABLE IF EXISTS asof_bkt_r")
+
+
 def test_plan_stats_utility(spark, sf_dir):
     from openmldb_spark.plans.explain import plan_stats
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
