@@ -1,6 +1,6 @@
 """Window aggregation operator — Spark orchestration for the frame kernel.
 
-Two execution tiers (SURVEY.md §2.5):
+Two tiers (SURVEY.md §2.5); the exact one runs on one of two paths:
 
 1. **builtin** — ``pyspark.sql.Window`` rows/range frames. JVM-side,
    whole-stage-codegen, zero Python. Valid only for the ANSI-compatible
@@ -10,9 +10,27 @@ Two execution tiers (SURVEY.md §2.5):
    OpenMLDB ROWS_RANGE admits only already-buffered ones
    (WINDOW_CLAUSE.md:100-116). Used as the fast path and as a differential
    oracle in tests.
-2. **kernel** — ``groupBy(keys).applyInPandas`` with the numpy frame kernel
-   (window_kernel.py). Exact OpenMLDB semantics, Arrow-batched, no per-row
-   Python for the standard aggregates.
+2. **kernel** — exact OpenMLDB semantics, on one of two paths, chosen once
+   from the spec and the schema (``_lowerable``):
+
+   a. **exact JVM lowering** (``_jvm_window``) — built-in Spark windows,
+      zero Python. Eligible: a ROWS_RANGE frame ending at CURRENT ROW,
+      no MAXSIZE, only sum/count/avg/min/max (and their ``_where`` forms,
+      without an anchor-relative condition) over numeric columns — sum
+      over an integer column excepted, it wraps to the input width — and
+      a pinned order at equal timestamps (a tiebreak, or
+      INSTANCE_NOT_IN_WINDOW). The frame is ``older ∪ same-ts ∪ {self}``:
+      buffered rows with ``ts' ∈ [ts−d, ts−1]``, buffered rows at the
+      row's own ``ts`` that sort before it (none under EXCLUDE
+      CURRENT_TIME), and the row itself. sum/count/avg are differences
+      of two unbounded-preceding frames; min/max use a two-block split of
+      width ``d``. Never a sliding ``rangeBetween(-d, -1)``: Spark
+      recomputes such a frame from scratch for every row.
+   b. **numpy kernel** — ``groupBy(keys).applyInPandas`` with the frame
+      kernel (window_kernel.py). Every other spec: ROWS and
+      rows_merge_rows_range frames, MAXSIZE, open or non-current ends,
+      lag/at/first_value, top/top_n_frequency/distinct_count, ``*_cate``,
+      ``window_split*``, integer sums, timestamp/string columns.
 
 Scale design: the shuffle is one exchange on the partition keys (identical
 to the reference batch engine, WindowAggPlan.windowPartition:322-343 —
@@ -26,6 +44,7 @@ on time buckets so each chunk carries exactly frame-depth history.
 
 from __future__ import annotations
 
+import contextvars
 import math
 
 from pyspark.sql import Column, DataFrame, Window
@@ -34,7 +53,8 @@ import pyspark.sql.types as T
 
 from openmldb_spark.plans.specs import Agg, WindowSpec
 from openmldb_spark.operators import window_kernel as wk
-from openmldb_spark.operators.window_kernel import EXPANDED, ORD, PRIMARY
+from openmldb_spark.operators.lastjoin import _orderable
+from openmldb_spark.operators.window_kernel import EXPANDED, ORD, PRIMARY, UPOS
 
 
 def _order_col(df: DataFrame, order_by: str) -> Column:
@@ -252,7 +272,11 @@ def window_agg(
 
     ``pre_partitioned=True``: the input is already hash-clustered on the
     partition keys (bucketed table) — skip the explicit repartition so
-    the kernel runs shuffle-free (see sources/layout.py)."""
+    the kernel runs shuffle-free (see sources/layout.py). The JVM
+    lowering has no explicit repartition: Catalyst adds the one exchange
+    only where the input's partitioning does not already satisfy the
+    windows, so ``pre_partitioned`` and ``num_partitions`` only steer
+    the numpy kernel."""
     keys = list(spec.partition_by)
     keep_cols = list(keep_cols or df.columns)
 
@@ -330,6 +354,9 @@ def window_agg(
     # builtin would otherwise let Spark implicitly cast and compute
     schema_fields = {f.name: f for f in df.schema.fields}
     _check_agg_domains(aggs, schema_fields)
+    # decided on the caller's schema, before timestamp columns get their
+    # int64-ms view: an aggregate over a timestamp keeps the kernel
+    jvm = not _NUMPY_ONLY.get() and _lowerable(spec, aggs, schema_fields)
 
     if tier == "auto":
         # auto never picks builtin for range frames: ANSI RANGE admits
@@ -380,7 +407,7 @@ def window_agg(
         df.select(*needed_cols)
         .withColumn(ORD, _order_col(df, spec.order_by))
         .withColumn(PRIMARY, F.lit(1).cast("int"))
-        .withColumn(wk.UPOS, F.lit(0).cast("int"))
+        .withColumn(UPOS, F.lit(0).cast("int"))
     )
     prim_types = {f.name: f.dataType for f in df.schema.fields}
     for ui, u in enumerate(union or []):
@@ -395,7 +422,7 @@ def window_agg(
             .withColumn(PRIMARY, F.lit(0).cast("int"))
             # equal-ts ties: later-listed union tables sort older
             # (test_window_union.yaml id 19)
-            .withColumn(wk.UPOS, F.lit(-(ui + 1)).cast("int"))
+            .withColumn(UPOS, F.lit(-(ui + 1)).cast("int"))
         )
         work = work.unionByName(upart, allowMissingColumns=True)
 
@@ -447,6 +474,10 @@ def window_agg(
         group_keys = keys + ["__bucket"]
 
     in_fields = {f.name: f for f in df.schema.fields}
+    if jvm:
+        return _jvm_window(work, spec, aggs, group_keys, keep_cols,
+                           in_fields)
+
     out_fields = [in_fields[c] for c in keep_cols]
     out_dtypes = {}
     for a in aggs:
@@ -574,14 +605,174 @@ def _salt_by_quantiles(work: DataFrame, keys: list[str], spec: WindowSpec,
     return tagged.unionByName(replicas)
 
 
+# Set only inside ``_numpy_window_agg``: tests run one spec down both exact
+# paths and compare them.
+_NUMPY_ONLY = contextvars.ContextVar("window_numpy_only", default=False)
+
+_LOWERED_FUNCS = {"sum", "count", "avg", "min", "max",
+                  "sum_where", "count_where", "avg_where", "min_where",
+                  "max_where"}
+
+
+def _numpy_window_agg(*args, **kwargs) -> DataFrame:
+    """``window_agg`` with the JVM lowering off: every exact-tier call runs
+    the numpy kernel."""
+    token = _NUMPY_ONLY.set(True)
+    try:
+        return window_agg(*args, **kwargs)
+    finally:
+        _NUMPY_ONLY.reset(token)
+
+
+def _lowerable(spec: WindowSpec, aggs: list[Agg], fields: dict) -> bool:
+    """Whether ``_jvm_window`` computes this call exactly (module
+    docstring, path 2a)."""
+    if spec.frame != "rows_range" or spec.end_delta != 0 or spec.end_open \
+            or spec.max_size:
+        return False
+    if spec.start_open and spec.start_delta == 0:
+        return False      # the row falls out of its own frame: kernel rule
+    if not (spec.tiebreak or spec.instance_not_in_window):
+        return False      # equal-ts order would follow the scan order
+    if not all(_orderable(fields[t].dataType) for t in spec.tiebreak):
+        return False
+    for a in aggs:
+        dt = fields[a.col].dataType
+        if a.func not in _LOWERED_FUNCS or a.cond_anchor \
+                or not isinstance(dt, _NUMERIC_TYPES):
+            return False
+        if a.func.startswith("sum") and isinstance(dt, _INT_TYPES):
+            return False  # the reference wraps integer sums to the input width
+        if a.func.endswith("_where") and a.cond is not None \
+                and not isinstance(fields[a.cond].dataType, T.BooleanType):
+            return False
+    return True
+
+
+def _jvm_window(work: DataFrame, spec: WindowSpec, aggs: list[Agg],
+                group_keys: list[str], keep_cols: list[str],
+                fields: dict) -> DataFrame:
+    """The exact JVM lowering (module docstring, path 2a) over
+    ``window_agg``'s tagged rows: primary rows emit, union rows and
+    ``bucket_ms`` replicas only buffer, and under INSTANCE_NOT_IN_WINDOW
+    only union rows buffer. Every window partitions by ``group_keys`` or a
+    superset of it, so the one exchange is the windows' own."""
+    d = spec.start_delta - int(spec.start_open)   # older: ts' in [ts-d, ts-1]
+    ect, inw = spec.exclude_current_time, spec.instance_not_in_window
+    emit = (F.col(PRIMARY) == 1) & (F.col(EXPANDED) == 0)
+    if inw:
+        work = work.where(emit | (F.col(PRIMARY) == 0))
+
+    def buffered(x: Column) -> Column:
+        return F.when(F.col(PRIMARY) == 0, x) if inw else x
+
+    def key(a: Agg) -> tuple:
+        return a.col, a.cond if a.func.endswith("_where") else None
+
+    def value(col: str, cond: str | None) -> Column:
+        # NULL wherever the kernel reads no value: NULL, a float NaN
+        # (pandas cannot tell it from NULL) or a failed _where condition
+        x = F.col(col)
+        if isinstance(fields[col].dataType, (T.FloatType, T.DoubleType)):
+            x = F.when(~F.isnan(x), x)
+        return x if cond is None else F.when(F.col(cond), x)
+
+    unb = Window.unboundedPreceding
+    tie = [F.col(UPOS), F.col(PRIMARY),
+           *[F.col(t).asc_nulls_last() for t in spec.tiebreak]]
+    base = {a.alias: a.func.replace("_where", "") for a in aggs}
+    res: dict[str, Column] = {}
+
+    # sum/count/avg: (-inf, upper] - (-inf, ts-d-1] over the buffered
+    # rows. upper ends at the row itself, or at ts-1 under EXCLUDE
+    # CURRENT_TIME; the row is added alone when upper misses it (it does
+    # not buffer, or upper stops at ts-1). The row-ordered window goes
+    # first: its sort also serves the ts-ordered one.
+    dec = list(dict.fromkeys(key(a) for a in aggs
+                             if base[a.alias] in ("sum", "count", "avg")))
+    self_in_upper = not (ect or inw)
+    by_ts = Window.partitionBy(*group_keys).orderBy(ORD)
+    upper = by_ts.rangeBetween(unb, -1) if ect else \
+        Window.partitionBy(*group_keys).orderBy(ORD, *tie).rowsBetween(unb, 0)
+    for tag, w in (("u", upper), ("l", by_ts.rangeBetween(unb, -(d + 1)))):
+        cols = {}
+        for i, k in enumerate(dec):
+            x = buffered(value(*k))
+            cols[f"__{tag}s{i}"] = F.sum(x.cast("double")).over(w)
+            cols[f"__{tag}c{i}"] = F.count(x).over(w)
+        work = work.withColumns(cols)
+    for a in aggs:
+        if a.func.startswith(("min", "max")):
+            continue
+        i, x = dec.index(key(a)), value(*key(a))
+        s = F.coalesce(F.col(f"__us{i}"), F.lit(0.0)) \
+            - F.coalesce(F.col(f"__ls{i}"), F.lit(0.0))
+        c = F.col(f"__uc{i}") - F.col(f"__lc{i}")
+        if not self_in_upper:
+            s = s + F.coalesce(x.cast("double"), F.lit(0.0))
+            c = c + x.isNotNull().cast("long")
+        res[a.alias] = {"sum": s, "count": c, "avg": F.when(
+            c > 0, s / c).otherwise(F.lit(float("nan")))}[base[a.alias]]
+
+    # min/max: blocks of width d. A row sits in its own block (role 0)
+    # and, when it buffers, also in the next one (role 1). For a row at
+    # offset o of its block, ts-d is offset o of the previous block, so
+    # its older part is the own-block rows before it (a running max,
+    # ascending) plus the previous-block rows at offsets >= o (a running
+    # max, descending). Not one unbounded-following frame: Spark
+    # recomputes those for every row. With d = 0 there is no older part
+    # and the "block" is the row's own ts.
+    ext = [a for a in aggs if a.func.startswith(("min", "max"))]
+    if ext:
+        if d > 0:
+            roles = F.array(F.lit(0), F.lit(1))
+            if inw:
+                roles = F.when(F.col(PRIMARY) == 0, roles) \
+                    .otherwise(F.array(F.lit(0)))
+            work = work.withColumns({
+                "__off": F.pmod(F.col(ORD), F.lit(d)),
+                "__role": F.explode(roles)})
+            work = work.withColumn(
+                "__pair", F.col(ORD) - F.col("__off") + F.col("__role") * d)
+        else:
+            work = work.withColumns({"__off": F.lit(0), "__role": F.lit(0),
+                                     "__pair": F.col(ORD)})
+        part = Window.partitionBy(*group_keys, "__pair")
+        own_w = part.orderBy("__off").rangeBetween(unb, -1) if ect else \
+            part.orderBy("__off", "__role", *tie).rowsBetween(unb, -1)
+        prev_w = part.orderBy(F.col("__off").desc(),
+                              F.col("__role").desc()).rangeBetween(unb, 0)
+        own = F.col("__role") == 0
+        xs = [value(*key(a)) for a in ext]
+        fns = [F.max if base[a.alias] == "max" else F.min for a in ext]
+        work = work.withColumns({
+            f"__o{i}": fn(F.when(own, buffered(x))).over(own_w)
+            for i, (fn, x) in enumerate(zip(fns, xs))})
+        if d > 0:
+            work = work.withColumns({
+                f"__p{i}": fn(F.when(~own, x)).over(prev_w)
+                for i, (fn, x) in enumerate(zip(fns, xs))})
+        work = work.where(own)
+        for i, (a, x) in enumerate(zip(ext, xs)):
+            pick = F.greatest if base[a.alias] == "max" else F.least
+            res[a.alias] = pick(x, F.col(f"__o{i}"),
+                                *([F.col(f"__p{i}")] if d > 0 else []))
+
+    # when(emit, ...) is always true past the filter: it only makes every
+    # output nullable, so the schema is the kernel's field for field
+    return work.where(emit).select(
+        *keep_cols,
+        *[F.when(emit, res[a.alias]).cast(_agg_field(a, fields[a.col])
+                                          .dataType).alias(a.alias)
+          for a in aggs])
+
+
 def _builtin_ok(spec: WindowSpec, aggs: list[Agg], union) -> bool:
     if union or spec.max_size or spec.exclude_current_time or spec.start_open \
             or spec.end_open or spec.instance_not_in_window \
             or spec.frame == "rows_merge_rows_range":
         return False
-    ok_funcs = {"sum", "count", "avg", "min", "max",
-                "sum_where", "count_where", "avg_where", "min_where", "max_where",
-                "first_value"}
+    ok_funcs = _LOWERED_FUNCS | {"first_value"}
     # first_value is only equivalent when the frame end is CURRENT ROW
     if spec.end_delta != 0:
         ok_funcs.discard("first_value")

@@ -18,8 +18,15 @@ The fold itself is fully vectorized (numpy segment cumsums + pandas
 ffill) — no per-row Python even inside the stateful operator.
 
 State is bounded by conversation count + buffered-disorder depth, not
-history length, and expires via GroupStateTimeout.ProcessingTimeTimeout
-when a conversation goes quiet — the streaming analog of bounded frames.
+history length, and expires in event time (GroupStateTimeout.
+EventTimeTimeout) once the watermark — the stream's newest event less
+``idle_timeout_ms`` — passes a conversation's newest event by
+``idle_timeout_ms``: the streaming analog of bounded frames. Event time
+makes the query finite under ``trigger(availableNow=True)``: after the
+last data batch only one more batch runs, for the advanced watermark. A
+processing-time timeout would keep Spark scheduling empty batches. The
+watermark only drives expiry: a row behind it still folds, as a
+straggler.
 """
 
 from __future__ import annotations
@@ -30,6 +37,7 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
+import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -50,6 +58,7 @@ OUTPUT_SCHEMA = T.StructType([
 ])
 
 _EMPTY_STATE = (None, 0, 0.0, 0, None, None, [], [], [])
+_EVENT_TIME = "__event_time"
 
 
 def _fold_arrays(conv: str, ts: np.ndarray, turn: np.ndarray,
@@ -107,6 +116,13 @@ def _fold_arrays(conv: str, ts: np.ndarray, turn: np.ndarray,
     return out, new_carry
 
 
+def _expire_after(state: GroupState, newest_ts: int,
+                  idle_timeout_ms: int) -> None:
+    # event-time expiry, never set below the watermark (Spark rejects it)
+    state.setTimeoutTimestamp(max(newest_ts + idle_timeout_ms,
+                                  state.getCurrentWatermarkMs() + 1))
+
+
 def _fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState,
           gap_ms: int, idle_timeout_ms: int, reorder_ms: int):
     st = state.get if state.exists else _EMPTY_STATE
@@ -148,7 +164,8 @@ def _fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState,
          for p in parts]
         + [np.asarray(buf_val, dtype=np.float64)])
     if len(ts) == 0:
-        state.setTimeoutDuration(idle_timeout_ms)
+        if max_ts is not None:
+            _expire_after(state, max_ts, idle_timeout_ms)
         return
 
     order = np.lexsort((turn, ts))
@@ -169,7 +186,7 @@ def _fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState,
                   [int(x) for x in ts[held]],
                   [int(x) for x in turn[held]],
                   [None if np.isnan(x) else float(x) for x in val[held]]))
-    state.setTimeoutDuration(idle_timeout_ms)
+    _expire_after(state, hw, idle_timeout_ms)
     if out is not None:
         yield out
 
@@ -189,11 +206,13 @@ def stream_running_features(
                          reorder_ms)
 
     return (
-        stream.groupBy("conv_id").applyInPandasWithState(
+        stream.withColumn(_EVENT_TIME, F.timestamp_millis("ts_ms"))
+        .withWatermark(_EVENT_TIME, f"{idle_timeout_ms} milliseconds")
+        .groupBy("conv_id").applyInPandasWithState(
             fold,
             outputStructType=OUTPUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )

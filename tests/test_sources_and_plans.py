@@ -18,6 +18,12 @@ def _plan(df, mode="formatted") -> str:
         df._jdf.queryExecution(), mode)
 
 
+def _executed(df) -> str:          # the final AQE plan, after a run
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
 # ---- sources / sinks -----------------------------------------------------
 
 def test_load_data_deep_and_soft_copy(spark, sf_dir, tmp_path):
@@ -76,8 +82,10 @@ def test_filter_pushdown_and_column_pruning(spark, sf_dir):
 
 
 def test_window_kernel_single_exchange(spark, sf_dir):
-    """Kernel-tier window agg = exactly one shuffle (on the partition
-    keys), like the reference's repartition+sortWithinPartitions."""
+    """Kernel-tier window agg on the numpy kernel = exactly one shuffle
+    (on the partition keys), like the reference's
+    repartition+sortWithinPartitions."""
+    from openmldb_spark.operators.window import _numpy_window_agg
     t = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         F.col("user_id").alias("conv_id"),
         F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_ms"),
@@ -87,12 +95,78 @@ def test_window_kernel_single_exchange(spark, sf_dir):
     spec = WindowSpec(partition_by=["conv_id"], order_by="ts_ms",
                       frame="rows_range", preceding="30m",
                       tiebreak=("turn_idx",))
-    out = window_agg(t, spec, [Agg("sum", "value", "s")],
-                     keep_cols=["conv_id", "turn_idx"], tier="kernel")
+    out = _numpy_window_agg(t, spec, [Agg("sum", "value", "s")],
+                            keep_cols=["conv_id", "turn_idx"], tier="kernel")
     plan = _plan(out, "simple")
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 1, plan
     assert "FlatMapGroupsInPandas" in plan or "MapInPandas" in plan
+
+
+def test_lowered_window_plan_guard(spark, tmp_path):
+    """An eligible exact-tier window runs in the JVM: no Python node, one
+    exchange (none on a bucketed input with pre_partitioned), and every
+    RANGE frame starts at UNBOUNDED PRECEDING and nothing runs to
+    UNBOUNDED FOLLOWING — Spark recomputes sliding and unbounded-following
+    frames for every row. Ineligible calls keep the numpy kernel."""
+    import re
+    from openmldb_spark.sources.layout import materialize_indexed
+
+    t = spark.createDataFrame(
+        [(f"c{i % 5}", (i // 3) * 1000, i, float(i % 7)) for i in range(90)],
+        "conv_id string, ts_ms bigint, turn_idx int, value double")
+    u = t.select("conv_id", "ts_ms", (F.col("value") * 2).alias("value"))
+    spec = WindowSpec(partition_by=["conv_id"], order_by="ts_ms",
+                      frame="rows_range", preceding="5s",
+                      tiebreak=("turn_idx",))
+    aggs = [Agg("sum", "value", "s"), Agg("count", "value", "c"),
+            Agg("avg", "value", "a"), Agg("min", "value", "mn"),
+            Agg("max", "value", "mx")]
+    eligible = [
+        dict(spec=spec, aggs=aggs),
+        dict(spec=WindowSpec(partition_by=["conv_id"], order_by="ts_ms",
+                             frame="rows_range", preceding="5s",
+                             exclude_current_time=True,
+                             tiebreak=("turn_idx",)), aggs=aggs),
+        dict(spec=WindowSpec(partition_by=["conv_id"], order_by="ts_ms",
+                             frame="rows_range", preceding="5s",
+                             instance_not_in_window=True),
+             aggs=aggs, union=[u]),
+    ]
+    for kw in eligible:
+        plan = _executed(window_agg(t, keep_cols=["turn_idx"],
+                                    tier="kernel", **kw))
+        for node in ("FlatMapGroupsInPandas", "ArrowEvalPython",
+                     "BatchEvalPython"):
+            assert node not in plan, plan
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        frames = re.findall(r"specifiedwindowframe\((\w+), ([^,]+),", plan)
+        assert frames and all(start == "unboundedpreceding$()"
+                              for kind, start in frames
+                              if kind == "RangeFrame"), frames
+        assert "unboundedfollowing" not in plan, plan
+
+    bt = materialize_indexed(t, "win_bkt", ["conv_id"], sort_by="ts_ms",
+                             buckets=4, path=str(tmp_path / "win_bkt"))
+    try:
+        plan = _executed(window_agg(bt, spec, aggs, keep_cols=["turn_idx"],
+                                    tier="kernel", pre_partitioned=True))
+        assert "Exchange" not in plan, plan
+    finally:
+        spark.sql("DROP TABLE IF EXISTS win_bkt")
+
+    ineligible = [
+        (spec, [*aggs, Agg("top_n_frequency", "value", "t", param=2)]),
+        (WindowSpec(partition_by=["conv_id"], order_by="ts_ms",
+                    frame="rows_range", preceding="5s", max_size=3,
+                    tiebreak=("turn_idx",)), aggs),
+        (WindowSpec(partition_by=["conv_id"], order_by="ts_ms",
+                    frame="rows_range", preceding="5s"), aggs),
+    ]
+    for sp, ag in ineligible:
+        plan = _executed(window_agg(t, sp, ag, keep_cols=["turn_idx"],
+                                    tier="kernel"))
+        assert "FlatMapGroupsInPandas" in plan, (sp, ag)
 
 
 def test_builtin_window_single_exchange_codegen(spark, sf_dir):
@@ -132,18 +206,13 @@ def test_asof_kernel_one_exchange_no_python(spark, tmp_path):
     from openmldb_spark.operators.lastjoin import asof_join_kernel
     from openmldb_spark.sources.layout import materialize_indexed
 
-    def executed(df) -> str:        # the final AQE plan, after a run
-        df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return plan.split("== Initial Plan ==")[0]
-
     left = spark.createDataFrame(
         [(f"c{i % 5}", i * 10, i) for i in range(60)],
         "conv_id string, ts_ms bigint, lid int")
     right = spark.createDataFrame(
         [(f"c{i % 5}", i * 7, f"v{i}") for i in range(40)],
         "conv_id string, ts_ms bigint, cfg string")
-    plan = executed(asof_join_kernel(left, right, on=["conv_id"]))
+    plan = _executed(asof_join_kernel(left, right, on=["conv_id"]))
     for node in ("FlatMapCoGroupsInPandas", "ArrowEvalPython",
                  "BatchEvalPython"):
         assert node not in plan, plan
@@ -159,7 +228,7 @@ def test_asof_kernel_one_exchange_no_python(spark, tmp_path):
         rt = materialize_indexed(right, "asof_bkt_r", ["conv_id"],
                                  sort_by="ts_ms", buckets=4,
                                  path=str(tmp_path / "r"))
-        plan = executed(asof_join_kernel(lt, rt, on=["conv_id"]))
+        plan = _executed(asof_join_kernel(lt, rt, on=["conv_id"]))
         assert "Exchange" not in plan, plan
     finally:
         spark.conf.set(key, prev)

@@ -24,8 +24,15 @@ def _run_to_memory(stream_df, name, mode="append"):
         stream_df.writeStream.format("memory").queryName(name)
         .outputMode(mode).trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
-    return q
+    _ends(q, 120)
+
+
+def _ends(q, timeout_s):
+    """An availableNow query must finish by itself, not time out."""
+    try:
+        assert q.awaitTermination(timeout_s) is True
+    finally:
+        q.stop()
 
 
 def test_stream_window_counts_matches_batch(spark, sf_dir, tmp_path):
@@ -95,7 +102,7 @@ def test_foreach_batch_runs_engine_ops(spark, sf_dir, tmp_path):
     q = foreach_batch_features(stream, op, sink).trigger(
         availableNow=True).option(
         "checkpointLocation", str(tmp_path / "ckpt")).start()
-    q.awaitTermination(180)
+    _ends(q, 180)
 
     out = spark.read.parquet(dest)
     assert out.count() == batch.count()
@@ -134,7 +141,7 @@ def test_stateful_reorder_buffer_heals_disorder(spark, tmp_path):
         .writeStream.format("memory").queryName("reordered")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(180)
+    _ends(q, 180)
     got = {r.turn_idx: (r.session_id, r.run_sum, r.run_cnt, r.prev_value)
            for r in spark.table("reordered").collect()}
     # turns 0..5 emitted in event order with exact running state; the C
@@ -182,7 +189,7 @@ def test_stateful_running_features_matches_batch(spark, sf_dir, tmp_path):
         .writeStream.format("memory").queryName("running")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(180)
+    _ends(q, 180)
     got = {(r.conv_id, r.turn_idx): (r.session_id, round(r.run_sum, 6),
                                      r.run_cnt)
            for r in spark.table("running").collect()}
@@ -245,7 +252,7 @@ def test_stream_null_order_keys_dropped_not_crash(spark, tmp_path):
         .writeStream.format("memory").queryName("null_keys")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    _ends(q, 120)
     got = {r.turn_idx: r.run_sum
            for r in spark.table("null_keys").collect()}
     assert got == {0: 1.0, 2: 3.0}
