@@ -6,9 +6,9 @@ session id, with per-conversation state carried across micro-batches.
 
 State per conv_id: (last_ts, session_id, run_sum, run_cnt, last_value,
 max_ts, buf_ts, buf_turn, buf_val). The ``buf_*`` arrays are a
-WATERMARK REORDER BUFFER: with ``reorder_ms > 0``, rows within
-``reorder_ms`` of the conversation's high-water timestamp are held in
-state and only folded once the watermark passes them, so bounded
+REORDER BUFFER: with ``reorder_ms > 0``, rows within ``reorder_ms`` of
+the conversation's high-water timestamp are held in state and only
+folded once that high-water mark moves ``reorder_ms`` past them, so bounded
 disorder (late turns) is healed exactly. Rows later than the buffer
 bound (true stragglers) fold immediately against current state —
 documented at-least-once semantics. A conversation's buffer is flushed
@@ -18,15 +18,27 @@ The fold itself is fully vectorized (numpy segment cumsums + pandas
 ffill) — no per-row Python even inside the stateful operator.
 
 State is bounded by conversation count + buffered-disorder depth, not
-history length, and expires in event time (GroupStateTimeout.
-EventTimeTimeout) once the watermark — the stream's newest event less
-``idle_timeout_ms`` — passes a conversation's newest event by
-``idle_timeout_ms``: the streaming analog of bounded frames. Event time
-makes the query finite under ``trigger(availableNow=True)``: after the
-last data batch only one more batch runs, for the advanced watermark. A
-processing-time timeout would keep Spark scheduling empty batches. The
-watermark only drives expiry: a row behind it still folds, as a
-straggler.
+history length: a conversation that receives no row for
+``idle_timeout_ms`` of processing time expires (flushing its buffer) —
+the streaming analog of bounded frames. Expiry runs on Spark's
+event-time timeout (GroupStateTimeout.EventTimeTimeout), but the
+watermark is taken over the micro-batch clock, not over ``ts_ms``:
+
+- the watermark is the latest batch's start time less
+  ``idle_timeout_ms``, and a conversation's timeout is the start time of
+  the batch that last gave it rows, so it expires once the stream has
+  run on for ``idle_timeout_ms`` without it;
+- every row carries its own batch's start time as event time, which is
+  never behind the watermark, so Spark drops no row as late — however
+  far a conversation's ``ts_ms`` trails the others';
+- the query is finite under ``trigger(availableNow=True)``: after the
+  last data batch one more batch runs, for the advanced watermark. A
+  processing-time timeout would keep Spark scheduling empty batches.
+
+The watermark only advances while rows arrive, so a stream that goes
+quiet expires nothing (and flushes no held row) until its next rows;
+an ``availableNow`` run leaves the unexpired state, held rows included,
+in its checkpoint for the next run.
 """
 
 from __future__ import annotations
@@ -116,15 +128,14 @@ def _fold_arrays(conv: str, ts: np.ndarray, turn: np.ndarray,
     return out, new_carry
 
 
-def _expire_after(state: GroupState, newest_ts: int,
-                  idle_timeout_ms: int) -> None:
-    # event-time expiry, never set below the watermark (Spark rejects it)
-    state.setTimeoutTimestamp(max(newest_ts + idle_timeout_ms,
-                                  state.getCurrentWatermarkMs() + 1))
+def _touch(state: GroupState) -> None:
+    # timeout at this batch's start: the batch clock is the watermark's
+    # event time (module doc); Spark clears a timeout not set again
+    state.setTimeoutTimestamp(state.getCurrentProcessingTimeMs())
 
 
 def _fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState,
-          gap_ms: int, idle_timeout_ms: int, reorder_ms: int):
+          gap_ms: int, reorder_ms: int):
     st = state.get if state.exists else _EMPTY_STATE
     (last_ts, session_id, run_sum, run_cnt, last_value,
      max_ts, buf_ts, buf_turn, buf_val) = st
@@ -164,8 +175,8 @@ def _fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState,
          for p in parts]
         + [np.asarray(buf_val, dtype=np.float64)])
     if len(ts) == 0:
-        if max_ts is not None:
-            _expire_after(state, max_ts, idle_timeout_ms)
+        if state.exists:
+            _touch(state)
         return
 
     order = np.lexsort((turn, ts))
@@ -186,7 +197,7 @@ def _fold(key, pdfs: Iterator[pd.DataFrame], state: GroupState,
                   [int(x) for x in ts[held]],
                   [int(x) for x in turn[held]],
                   [None if np.isnan(x) else float(x) for x in val[held]]))
-    _expire_after(state, hw, idle_timeout_ms)
+    _touch(state)
     if out is not None:
         yield out
 
@@ -199,14 +210,17 @@ def stream_running_features(
 ) -> DataFrame:
     """stream: (conv_id, turn_idx, ts_ms, value) → per-turn running
     features with sessionization; state O(1) per conversation plus the
-    bounded reorder buffer (``reorder_ms`` of event time)."""
+    bounded reorder buffer (``reorder_ms`` of event time). A
+    conversation expires after ``idle_timeout_ms`` (> 0) of processing
+    time without rows, once later rows move the watermark."""
+    if idle_timeout_ms <= 0:
+        raise ValueError("idle_timeout_ms must be positive")
 
     def fold(key, pdfs, state):
-        yield from _fold(key, pdfs, state, gap_ms, idle_timeout_ms,
-                         reorder_ms)
+        yield from _fold(key, pdfs, state, gap_ms, reorder_ms)
 
     return (
-        stream.withColumn(_EVENT_TIME, F.timestamp_millis("ts_ms"))
+        stream.withColumn(_EVENT_TIME, F.current_timestamp())
         .withWatermark(_EVENT_TIME, f"{idle_timeout_ms} milliseconds")
         .groupBy("conv_id").applyInPandasWithState(
             fold,

@@ -20,3 +20,10 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def executed_plan(df) -> str:
+    """The final (AQE) physical plan of ``df``, after running it."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]

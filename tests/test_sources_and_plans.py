@@ -11,17 +11,13 @@ from openmldb_spark.plans.specs import Agg, LastJoinSpec, WindowSpec
 from openmldb_spark.operators.lastjoin import last_join
 from openmldb_spark.operators.window import window_agg
 
+from conftest import executed_plan
+
 
 def _plan(df, mode="formatted") -> str:
     jvm = df.sparkSession._jvm
     return jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), mode)
-
-
-def _executed(df) -> str:          # the final AQE plan, after a run
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return plan.split("== Initial Plan ==")[0]
 
 
 # ---- sources / sinks -----------------------------------------------------
@@ -134,8 +130,8 @@ def test_lowered_window_plan_guard(spark, tmp_path):
              aggs=aggs, union=[u]),
     ]
     for kw in eligible:
-        plan = _executed(window_agg(t, keep_cols=["turn_idx"],
-                                    tier="kernel", **kw))
+        plan = executed_plan(window_agg(t, keep_cols=["turn_idx"],
+                                        tier="kernel", **kw))
         for node in ("FlatMapGroupsInPandas", "ArrowEvalPython",
                      "BatchEvalPython"):
             assert node not in plan, plan
@@ -149,8 +145,9 @@ def test_lowered_window_plan_guard(spark, tmp_path):
     bt = materialize_indexed(t, "win_bkt", ["conv_id"], sort_by="ts_ms",
                              buckets=4, path=str(tmp_path / "win_bkt"))
     try:
-        plan = _executed(window_agg(bt, spec, aggs, keep_cols=["turn_idx"],
-                                    tier="kernel", pre_partitioned=True))
+        plan = executed_plan(window_agg(
+            bt, spec, aggs, keep_cols=["turn_idx"], tier="kernel",
+            pre_partitioned=True))
         assert "Exchange" not in plan, plan
     finally:
         spark.sql("DROP TABLE IF EXISTS win_bkt")
@@ -164,8 +161,8 @@ def test_lowered_window_plan_guard(spark, tmp_path):
                     frame="rows_range", preceding="5s"), aggs),
     ]
     for sp, ag in ineligible:
-        plan = _executed(window_agg(t, sp, ag, keep_cols=["turn_idx"],
-                                    tier="kernel"))
+        plan = executed_plan(window_agg(t, sp, ag, keep_cols=["turn_idx"],
+                                        tier="kernel"))
         assert "FlatMapGroupsInPandas" in plan, (sp, ag)
 
 
@@ -212,7 +209,7 @@ def test_asof_kernel_one_exchange_no_python(spark, tmp_path):
     right = spark.createDataFrame(
         [(f"c{i % 5}", i * 7, f"v{i}") for i in range(40)],
         "conv_id string, ts_ms bigint, cfg string")
-    plan = _executed(asof_join_kernel(left, right, on=["conv_id"]))
+    plan = executed_plan(asof_join_kernel(left, right, on=["conv_id"]))
     for node in ("FlatMapCoGroupsInPandas", "ArrowEvalPython",
                  "BatchEvalPython"):
         assert node not in plan, plan
@@ -228,7 +225,7 @@ def test_asof_kernel_one_exchange_no_python(spark, tmp_path):
         rt = materialize_indexed(right, "asof_bkt_r", ["conv_id"],
                                  sort_by="ts_ms", buckets=4,
                                  path=str(tmp_path / "r"))
-        plan = _executed(asof_join_kernel(lt, rt, on=["conv_id"]))
+        plan = executed_plan(asof_join_kernel(lt, rt, on=["conv_id"]))
         assert "Exchange" not in plan, plan
     finally:
         spark.conf.set(key, prev)

@@ -256,3 +256,53 @@ def test_stream_null_order_keys_dropped_not_crash(spark, tmp_path):
     got = {r.turn_idx: r.run_sum
            for r in spark.table("null_keys").collect()}
     assert got == {0: 1.0, 2: 3.0}
+
+
+def _stateful_slices(spark, tmp_path, name, slices, **kw):
+    """Write one parquet file per slice (distinct mtimes, so one
+    micro-batch each), stream them through stream_running_features under
+    availableNow and return the emitted rows keyed by (conv_id, turn)."""
+    import time as _time
+    from openmldb_spark.streaming.stateful import stream_running_features
+    schema = "conv_id string, turn_idx int, ts_ms long, value double"
+    src = str(tmp_path / name)
+    for sl in slices:
+        spark.createDataFrame(sl, schema).coalesce(1) \
+            .write.mode("append").parquet(src)
+        _time.sleep(1.1)
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).parquet(src))
+    q = (
+        stream_running_features(stream, gap_ms=60_000, **kw)
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append").trigger(availableNow=True).start()
+    )
+    _ends(q, 180)
+    return {(r.conv_id, r.turn_idx): (r.run_sum, r.run_cnt)
+            for r in spark.table(name).collect()}
+
+
+def test_stateful_row_far_behind_other_conversations_folds(spark, tmp_path):
+    """A conversation whose events trail another conversation's by far
+    more than idle_timeout_ms, in a later micro-batch, is still folded:
+    no row is dropped as late."""
+    got = _stateful_slices(
+        spark, tmp_path, "far_behind",
+        [[("x", 0, 10_000_000, 1.0)],
+         [("y", 0, 0, 2.0), ("y", 1, 500, 3.0)]],
+        idle_timeout_ms=1_000)
+    assert got == {("x", 0): (1.0, 1), ("y", 0): (2.0, 1),
+                   ("y", 1): (5.0, 2)}
+
+
+def test_stateful_idle_conversation_flushes_reorder_buffer(spark, tmp_path):
+    """A conversation idle for idle_timeout_ms while the stream keeps
+    running expires, and its held reorder buffer is emitted; the
+    conversation that arrived last is still within its timeout and keeps
+    its tail held."""
+    got = _stateful_slices(
+        spark, tmp_path, "idle_flush",
+        [[("x", 0, 1_000, 1.0), ("x", 1, 2_000, 2.0)],
+         [("y", 0, 1_000, 5.0)]],
+        idle_timeout_ms=1, reorder_ms=5_000)
+    assert got == {("x", 0): (1.0, 1), ("x", 1): (3.0, 2)}

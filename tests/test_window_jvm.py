@@ -19,6 +19,8 @@ import pyspark.sql.types as T
 from openmldb_spark.operators import window
 from openmldb_spark.plans.specs import Agg, WindowSpec
 
+from conftest import executed_plan
+
 KEYS = ["a", "b", "c", None]
 SCHEMA = ("k string, ts bigint, rid int, grp int, vd double, vf float, "
           "vi int, ok boolean")
@@ -108,11 +110,6 @@ def test_lowered_matches_numpy_kernel(spark, seed):
         assert not bad, (spec, aggs, n_union, bucket_ms, bad[:5])
 
 
-def _plan(df) -> str:
-    df.collect()
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_empty_frames_on_lowered_path(spark):
     """An all-NULL frame: sum 0, count 0, min/max NULL, avg NaN; sum over
     float stays float and over double stays double."""
@@ -126,7 +123,7 @@ def test_empty_frames_on_lowered_path(spark):
             Agg("count", "vd", "c"), Agg("min", "vd", "mn"),
             Agg("max", "vf", "mx"), Agg("avg", "vd", "av")]
     out = window.window_agg(df, spec, aggs, keep_cols=["rid"], tier="kernel")
-    assert "Pandas" not in _plan(out)
+    assert "Pandas" not in executed_plan(out)
     types = {f.name: f.dataType for f in out.schema.fields}
     assert types["sf"] == T.FloatType() and types["sd"] == T.DoubleType()
     rows = {r.rid: r for r in out.collect()}
