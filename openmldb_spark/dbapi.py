@@ -136,6 +136,17 @@ def epoch_ms(v: datetime.datetime) -> int:
     return int(v.timestamp() * 1000)
 
 
+def _request_rows(spark, rows, schema):
+    """Request rows as a local relation. A naive datetime parameter is
+    driver-local here, as in ``epoch_ms``; the relation reads naive
+    values as UTC, so make them aware first."""
+    from openmldb_spark.sources._local import local_rows
+    return local_rows(spark, [
+        tuple(v.astimezone() if isinstance(v, datetime.datetime)
+              and v.tzinfo is None else v for v in r)
+        for r in rows], schema)
+
+
 def _lit(v) -> str:
     """Render one parameter as a SQL literal for hole substitution."""
     if v is None:
@@ -336,7 +347,8 @@ class Cursor:
             raise DatabaseError("cannot find request table")
         try:
             t, main = self._resolve_table(m.group(1))
-            req = sess.spark.createDataFrame(
+            req = _request_rows(
+                sess.spark,
                 [tuple(parameters.get(f.name) for f in t.schema.fields)],
                 t.schema)
             return run_sql_request(
@@ -379,7 +391,7 @@ class Cursor:
                                       for f in t.schema.fields))
                 else:
                     rows.append(tuple(row))
-            req = sess.spark.createDataFrame(rows, t.schema)
+            req = _request_rows(sess.spark, rows, t.schema)
             df = run_sql_request(
                 sess.spark, sql, dict(sess._dbs[sess._db_of(None)],
                                       **sess._dotted()), req, main)

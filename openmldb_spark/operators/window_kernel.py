@@ -425,7 +425,8 @@ def window_split_strings(pdf, col, f, delim, kv_delim, sep,
     return res
 
 
-def ordered_min_max(pdf, col, cond, f, idx_e, lo, hi, E, anchored) -> list:
+def ordered_min_max(pdf, col, cond, f, idx_e, lo, hi, E,
+                    anchored) -> np.ndarray:
     """min/max over orderable non-numeric columns (strings, dates):
     factorize to sorted ordinals, run the numeric range-min/max, map back
     to the ORIGINAL values (not the csv-formatted strings — min over a
@@ -456,9 +457,12 @@ def ordered_min_max(pdf, col, cond, f, idx_e, lo, hi, E, anchored) -> list:
     sv = x[E]
     ok = anchored & ~np.isnan(sv)
     vals = np.where(ok, op(vals, np.where(np.isnan(sv), fill, sv)), vals)
-    out = []
-    for v in vals:
-        out.append(None if np.isinf(v) or np.isnan(v) else uniq[int(v)])
+    # an object array, not a list: a group with no anchor rows (request
+    # mode's history-only keys) must not turn into an empty float64
+    # column, which Arrow cannot cast to date
+    out = np.empty(len(vals), dtype=object)
+    out[:] = [None if np.isinf(v) or np.isnan(v) else uniq[int(v)]
+              for v in vals]
     return out
 
 

@@ -38,6 +38,7 @@ import re
 import pyspark.sql.types as T
 
 from openmldb_spark import sqllex
+from openmldb_spark.sources._local import local_rows
 
 __all__ = ["DdlError", "parse_create_table", "create_table",
            "parse_insert", "insert_into", "validate_create_index"]
@@ -485,7 +486,7 @@ def create_table(spark, stmt: str, tables: dict | None = None):
         if spec["if_not_exists"]:
             return spec["name"], tables[spec["name"]]
         raise DdlError(f"table {spec['name']!r} already exists")
-    return spec["name"], spark.createDataFrame([], spec["schema"])
+    return spec["name"], local_rows(spark, [], spec["schema"])
 
 
 def validate_create_index(stmt: str, tables: dict,
@@ -754,5 +755,5 @@ def insert_into(spark, stmt: str, tables: dict, params=None,
             pass
         else:
             raise DdlError("too many parameters for INSERT placeholders")
-    appended = spark.createDataFrame(out_rows, prior.schema)
+    appended = local_rows(spark, out_rows, prior.schema, DdlError)
     return tname, prior.unionByName(appended)

@@ -268,6 +268,7 @@ def _unwrap_nul_quotes(data: bytes, sep: bytes) -> bytes:
 import re as _re
 
 from openmldb_spark import sqllex
+from openmldb_spark.sources._local import local_rows
 
 _OUTFILE_RE = _re.compile(
     r"(?is)^\s*(?P<select>select\b.*?)\s+into\s+outfile\s+"
@@ -464,14 +465,12 @@ def run_statement(spark, stmt: str, tables: dict,
         if head.startswith("show deployments"):
             rows = [(d["name"], d["dbName"], d["sql"])
                     for d in _dep.show_deployments(stmt, deployments)]
-            return spark.createDataFrame(
-                rows, "name string, db string, sql string") if rows else \
-                spark.createDataFrame([], "name string, db string, sql string")
+            return local_rows(spark, rows,
+                              "name string, db string, sql string")
         if head.startswith("show deployment"):
             d = _dep.show_deployment(stmt, deployments, db=db)
-            return spark.createDataFrame(
-                [(d["name"], d["dbName"], d["sql"])],
-                "name string, db string, sql string")
+            return local_rows(spark, [(d["name"], d["dbName"], d["sql"])],
+                              "name string, db string, sql string")
         _dep.drop_deployment(stmt, deployments)
         return None
     if head.startswith(("create procedure", "drop procedure")):
@@ -492,7 +491,7 @@ def run_statement(spark, stmt: str, tables: dict,
             if spec["if_not_exists"]:
                 return None
             raise _ddl.DdlError(f"table {spec['name']!r} already exists")
-        tables[spec["name"]] = spark.createDataFrame([], spec["schema"])
+        tables[spec["name"]] = local_rows(spark, [], spec["schema"])
         if catalog is not None:
             # inline indexes get generated names so DROP INDEX can
             # address them (node_adapter.cc:178-182 names them
@@ -529,8 +528,8 @@ def run_statement(spark, stmt: str, tables: dict,
         rows = [(f.name, f.dataType.simpleString(),
                  "YES" if f.nullable else "NO")
                 for f in tables[m.group(1)].schema.fields]
-        return spark.createDataFrame(
-            rows, "name string, type string, nullable string")
+        return local_rows(spark, rows,
+                          "name string, type string, nullable string")
     if head.startswith("insert "):
         dflts = None
         if catalog is not None:

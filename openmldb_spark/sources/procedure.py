@@ -10,7 +10,12 @@ arguments) and a single-SELECT body. Execution is batch-request mode
 ``common_cols`` values for const args plus the per-row values — computes
 its features over stored history + itself, never over sibling requests
 (pinned by execute_procedure case 1: window sums per request row over
-stored rows only).
+stored rows only). The request rows are built in-process as an Arrow
+local relation (``sources._local.local_rows``): a request launches no
+Spark job and no Python worker until its result is collected, and
+run_sql_request numbers the rows without the checkpoint it keeps for
+DataFrame inputs. A value an argument cannot hold raises ProcedureError
+naming the argument.
 
 Metadata parity (get_procedure corpus): name, the verbatim CREATE text,
 input_schema from the args, output_schema from planning the body,
@@ -26,6 +31,8 @@ import datetime
 import re
 
 import pyspark.sql.types as T
+
+from openmldb_spark.sources._local import local_rows
 
 __all__ = ["ProcedureError", "create_procedure", "drop_procedure",
            "get_procedure", "execute_procedure", "execute_deployment_rows"]
@@ -228,15 +235,21 @@ def _request_df(spark, args, input_rows, common_cols):
                 f"!= expected {n_per_row}")
         it = iter(r)
         ci = iter(common_cols or [])
-        full = [_coerce(next(ci) if (a[2] and not full_row_mode)
-                        else next(it), a[1])
-                for a in args]
+        full = []
+        for a in args:
+            v = next(ci) if (a[2] and not full_row_mode) else next(it)
+            try:
+                full.append(_coerce(v, a[1]))
+            except (TypeError, ValueError, OverflowError, OSError) as e:
+                raise ProcedureError(
+                    f"column {a[0]!r} ({a[1]}): cannot take {v!r}: {e}"
+                ) from None
         rows.append(full)
     if not rows:
         raise ProcedureError("no input rows")
     schema = T.StructType([T.StructField(a[0], _SPARK_TYPES[a[1]])
                            for a in args])
-    return spark.createDataFrame(rows, schema)
+    return local_rows(spark, rows, schema, ProcedureError)
 
 
 def execute_procedure(spark, name: str, procedures: dict, tables: dict,

@@ -27,6 +27,8 @@ import json
 
 from pyspark.sql import types as T
 
+from openmldb_spark.sources._local import local_rows
+
 
 class RestfulError(Exception):
     """code:-1 responses of the apiserver surface."""
@@ -196,5 +198,5 @@ def put_table_row(spark, method: str, uri: str, body,
         raise RestfulError("column size != schema size")
     row = tuple(_append_json_value(v, f.dataType, not f.nullable)
                 for v, f in zip(arr, fields))
-    new = spark.createDataFrame([row], df.schema)
+    new = local_rows(spark, [row], df.schema, RestfulError)
     dbs[db][table] = df.unionByName(new)

@@ -30,6 +30,7 @@ import re
 from pyspark.sql import DataFrame
 
 from openmldb_spark import sqllex
+from openmldb_spark.sources._local import local_rows
 from openmldb_spark.sources.ddl import DdlError
 
 
@@ -155,12 +156,12 @@ class Session:
             return None
         if re.match(r"(?is)^show\s+databases$", s):
             names = sorted(self._dbs)
-            return self.spark.createDataFrame(
-                [(n,) for n in names], "Databases string")
+            return local_rows(self.spark, [(n,) for n in names],
+                              "Databases string")
         if re.match(r"(?is)^show\s+tables$", s):
             names = sorted(self._dbs[self._db_of(None)])
-            return self.spark.createDataFrame(
-                [(n,) for n in names], "Tables string")
+            return local_rows(self.spark, [(n,) for n in names],
+                              "Tables string")
         m = re.match(r"(?is)^drop\s+table\s+(?:(if\s+exists)\s+)?"
                      r"(?:([`\w]+)\s*\.\s*)?([`\w]+)$", s)
         if m:
@@ -242,15 +243,12 @@ class Session:
             scope = (m.group(1) or "session").strip().lower()
             store = self.global_variables if scope == "global" \
                 else self.variables
-            return self.spark.createDataFrame(
-                sorted(store.items()),
-                "Variable_name string, Value string")
+            return local_rows(self.spark, sorted(store.items()),
+                              "Variable_name string, Value string")
         if re.match(r"(?is)^show\s+procedures?(\s+status)?$", s):
             rows = sorted((p.get("db", ""), name)
                           for name, p in self.procedures.items())
-            return self.spark.createDataFrame(
-                rows, "DB string, Name string") if rows else \
-                self.spark.createDataFrame([], "DB string, Name string")
+            return local_rows(self.spark, rows, "DB string, Name string")
         m = re.match(r"(?is)^show\s+create\s+procedure\s+"
                      r"(?:([`\w]+)\s*\.\s*)?([`\w]+)$", s)
         if m:
@@ -264,16 +262,15 @@ class Session:
             if want_db and p.get("db") and want_db != p["db"]:
                 raise DdlError(f"procedure {name!r} does not exist "
                                f"in database {want_db!r}")
-            return self.spark.createDataFrame(
-                [(name, p["procedure"])],
-                "Procedure string, SQL string")
+            return local_rows(self.spark, [(name, p["procedure"])],
+                              "Procedure string, SQL string")
         if re.match(r"(?is)^show\s+functions$", s):
             # external UDF registry — always empty in the batch engine
             # (no CREATE FUNCTION surface; reference lists loaded .so
             # UDFs here)
-            return self.spark.createDataFrame(
-                [], "Name string, Return_type string, Arg_types string, "
-                    "Is_aggregate string, File string")
+            return local_rows(
+                self.spark, [], "Name string, Return_type string, "
+                "Arg_types string, Is_aggregate string, File string")
         if re.match(r"(?is)^(show\s+(jobs?|job\s+\S+|components|"
                     r"table\s+status).*|stop\s+job\b.*|delete\s+job\b.*)$",
                     s):
@@ -325,8 +322,7 @@ class Session:
             plan = df._jdf.queryExecution().explainString(
                 self.spark._jvm.org.apache.spark.sql.execution
                 .ExplainMode.fromString(mode))
-            return self.spark.createDataFrame(
-                [(plan,)], "plan string")
+            return local_rows(self.spark, [(plan,)], "plan string")
 
         # everything else: the statement front end, scoped to the
         # current database; pure queries see the whole dotted catalog

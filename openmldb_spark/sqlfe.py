@@ -2033,6 +2033,14 @@ def run_sql_request(spark, sql: str, tables, request, name: str):
     the request table are not meaningful in request mode (OpenMLDB
     windows always anchor on the request/primary), so every window body
     gets the union.
+
+    Each request row carries a row id through the plan. When
+    ``request`` is a local relation (``sources._local.local_rows``, as
+    ``execute_procedure`` and ``execute_deployment_rows`` build it), the
+    id is the row index, folded into the relation at planning time: the
+    rows are fixed data, so building the request starts no job. Any
+    other DataFrame may come from a nondeterministic source, so its ids
+    are pinned by an eager ``localCheckpoint`` (one job).
     """
     if not isinstance(tables, dict):
         raise SqlUnsupported("run_sql_request requires named tables")
@@ -2087,9 +2095,11 @@ def run_sql_request(spark, sql: str, tables, request, name: str):
     # reqId2 requests must each join THEIR OWN out2 feature row)
     sql, _ = _rid_thread_stmt(sql, name, False, is_top=True)
     import pyspark.sql.functions as F
-    req = request.withColumn(
-        _REQ_RID, F.monotonically_increasing_id()).localCheckpoint(
-        eager=True)
+    from openmldb_spark.sources._local import is_local
+    req = request.withColumn(_REQ_RID, F.monotonically_increasing_id())
+    if not is_local(req):
+        # a DataFrame's source may be nondeterministic: pin the ids
+        req = req.localCheckpoint(eager=True)
     new_tables = dict(tables)
     new_tables[name] = req
     new_tables["__req_hist__"] = hist.withColumn(
@@ -2405,6 +2415,7 @@ _RID = "__sql_rid"
 def _run_window_sql(sql: str, tables: list, limit: int | None = None):
     import pyspark.sql.functions as F
     from openmldb_spark.operators.window import window_agg
+    from openmldb_spark.sources._local import is_local
 
     q = compile_window_sql(sql)
     primary = tables[q.primary_idx]
@@ -2412,11 +2423,13 @@ def _run_window_sql(sql: str, tables: list, limit: int | None = None):
         primary = primary.withColumn(name, F.expr(expr))
     primary = primary.withColumn(
         _RID, F.monotonically_increasing_id())
-    # localCheckpoint (eager) pins the row id physically — it is
-    # plan-dependent otherwise — and, unlike persist(), its blocks are
-    # freed by the ContextCleaner when the DataFrame is GC'd, so corpus
-    # replay loops don't accumulate executor storage
-    primary = primary.localCheckpoint(eager=True)
+    if not is_local(primary):
+        # localCheckpoint (eager) pins the row id physically — it is
+        # plan-dependent otherwise — and, unlike persist(), its blocks
+        # are freed by the ContextCleaner when the DataFrame is GC'd, so
+        # corpus replay loops don't accumulate executor storage. Local
+        # rows (request rows) fold the id into the relation instead.
+        primary = primary.localCheckpoint(eager=True)
 
     merged = primary
     final_cols = []

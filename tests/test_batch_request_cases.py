@@ -26,12 +26,13 @@ import yaml
 from openmldb_spark.sqlfe import run_sql_request
 
 from test_production_scripts import _mkdf, _tokenize
+from conftest import corpus_path
 
 CASE_FILES = [
-    "/root/reference/cases/function/test_batch_request.yaml",
-    "/root/reference/cases/benchmark/batch_request_benchmark.yaml",
-    "/root/reference/cases/benchmark/request_benchmark.yaml",
-    "/root/reference/cases/benchmark/udaf_benchmark.yaml",
+    corpus_path("cases/function/test_batch_request.yaml"),
+    corpus_path("cases/benchmark/batch_request_benchmark.yaml"),
+    corpus_path("cases/benchmark/request_benchmark.yaml"),
+    corpus_path("cases/benchmark/udaf_benchmark.yaml"),
 ]
 
 _CASES = []

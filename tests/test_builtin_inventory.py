@@ -21,9 +21,10 @@ import re
 import pytest
 
 from openmldb_spark.sqlfe import run_sql
+from conftest import corpus_path
 
-DOC = ("/root/reference/docs/zh/reference/sql/functions_and_operators/"
-       "Files/udfs_8h.md")
+DOC = corpus_path("docs/zh/reference/sql/functions_and_operators/"
+                  "Files/udfs_8h.md")
 
 with open(DOC) as f:
     REF_FUNCS = sorted(set(re.findall(r"^### function `?(\w+)`?",

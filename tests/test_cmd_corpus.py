@@ -25,8 +25,9 @@ import yaml
 
 from openmldb_spark.sources.ddl import DdlError
 from openmldb_spark.sources.session import Session
+from conftest import corpus_path
 
-CASE_FILE = "/root/reference/cases/plan/cmd.yaml"
+CASE_FILE = corpus_path("cases/plan/cmd.yaml")
 
 with open(CASE_FILE) as f:
     CASES = yaml.safe_load(f)["cases"]

@@ -24,12 +24,13 @@ from openmldb_spark.sqlfe import SqlUnsupported, run_sql
 
 from test_window_query_cases import Unsupported, _mk_named_df
 from test_plain_query_cases import _expect_table, _cell
+from conftest import corpus_path
 
 FILES = ["ddl/test_create", "ddl/test_create_index",
          "ddl/test_create_no_index", "ddl/test_options", "ddl/test_ttl",
          "dml/test_insert", "dml/multi_insert", "dml/test_insert_prepared"]
 
-FDIR = "/root/reference/cases/function"
+FDIR = corpus_path("cases/function")
 
 
 def _load(fname):

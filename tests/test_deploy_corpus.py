@@ -23,9 +23,10 @@ from openmldb_spark.sqlfe import SqlUnsupported
 
 from test_window_query_cases import _TYPES, Unsupported, _mk_named_df
 import pyspark.sql.types as T
+from conftest import corpus_path
 
 FILES = ["test_create_deploy", "test_show_deploy", "test_drop_deploy"]
-FDIR = "/root/reference/cases/function/deploy"
+FDIR = corpus_path("cases/function/deploy")
 
 
 def _load(fname):

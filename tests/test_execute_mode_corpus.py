@@ -23,8 +23,9 @@ import datetime
 import yaml
 
 from openmldb_spark.sources.session import Session
+from conftest import corpus_path
 
-CASE_FILE = "/root/reference/cases/function/v040/test_execute_mode.yaml"
+CASE_FILE = corpus_path("cases/function/v040/test_execute_mode.yaml")
 
 with open(CASE_FILE) as f:
     CASES = {c["id"]: c for c in yaml.safe_load(f)["cases"]}

@@ -19,8 +19,9 @@ from yaml_harness import expand_case
 
 from test_plain_query_cases import check_case
 from test_window_query_cases import Unsupported
+from conftest import corpus_path
 
-FDIR = "/root/reference/cases/function"
+FDIR = corpus_path("cases/function")
 
 FILES = [
     "expression/test_arithmetic",

@@ -26,8 +26,9 @@ from openmldb_spark.sqlfe import SqlUnsupported, run_sql
 from yaml_harness import expand_case
 from test_plain_query_cases import check_case
 from test_window_query_cases import Unsupported
+from conftest import corpus_path
 
-CASES = "/root/reference/cases/function"
+CASES = corpus_path("cases/function")
 
 FILES = [
     "cluster/window_and_lastjoin.yaml",

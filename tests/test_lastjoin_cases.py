@@ -25,8 +25,9 @@ import pyspark.sql.types as T
 
 from openmldb_spark.plans.specs import LastJoinSpec
 from openmldb_spark.operators.lastjoin import last_join
+from conftest import corpus_path
 
-CASES = "/root/reference/cases/function/join/test_lastjoin_simple.yaml"
+CASES = corpus_path("cases/function/join/test_lastjoin_simple.yaml")
 
 _SQL = re.compile(
     r"^\s*select\s+(?P<proj>.*?)\s+from\s+\{0\}\s+last\s+join\s+\{1\}\s*"

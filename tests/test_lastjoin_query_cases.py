@@ -9,8 +9,9 @@ from openmldb_spark.sqlfe import SqlUnsupported, run_sql
 
 from test_window_query_cases import Unsupported, _check as _wq_check, \
     _mk_named_df, _parse_schema, _parse_value
+from conftest import corpus_path
 
-CASES = "/root/reference/cases/query/last_join_query.yaml"
+CASES = corpus_path("cases/query/last_join_query.yaml")
 
 
 def _load():

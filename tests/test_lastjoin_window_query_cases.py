@@ -7,8 +7,9 @@ import yaml
 from openmldb_spark.sqlfe import SqlUnsupported
 
 from test_window_query_cases import Unsupported, _check as _wq_check
+from conftest import corpus_path
 
-CASES = "/root/reference/cases/query/last_join_window_query.yaml"
+CASES = corpus_path("cases/query/last_join_window_query.yaml")
 
 
 def _load():

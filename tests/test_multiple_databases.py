@@ -21,9 +21,10 @@ from openmldb_spark.sqlfe import SqlUnsupported, run_sql
 from yaml_harness import expand_case
 from test_plain_query_cases import check_case, _expect_table
 from test_window_query_cases import Unsupported, _mk_named_df
+from conftest import corpus_path
 
-CASE_FILE = ("/root/reference/cases/function/multiple_databases/"
-             "test_multiple_databases.yaml")
+CASE_FILE = corpus_path("cases/function/multiple_databases/"
+                        "test_multiple_databases.yaml")
 
 with open(CASE_FILE) as f:
     _CASES = [e for c in yaml.safe_load(f)["cases"] for e in expand_case(c)]

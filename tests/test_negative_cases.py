@@ -21,10 +21,11 @@ import yaml
 
 from openmldb_spark.sqlfe import SqlUnsupported, run_sql
 from test_sqlfe import _mkdf
+from conftest import corpus_path
 
 FILES = [
-    ("/root/reference/cases/query/fail_query.yaml", ()),
-    ("/root/reference/cases/function/window/error_window.yaml",
+    (corpus_path("cases/query/fail_query.yaml"), ()),
+    (corpus_path("cases/function/window/error_window.yaml"),
      ("12",)),          # engine extension, see module docstring
 ]
 

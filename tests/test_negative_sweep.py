@@ -35,6 +35,7 @@ import yaml
 from openmldb_spark.sqlfe import run_sql
 from yaml_harness import _normalize_data, expand_case
 from test_sqlfe import _mkdf
+from conftest import corpus_path
 
 
 def _mkdf_safe(spark, inp):
@@ -82,7 +83,7 @@ def _mkdf_safe(spark, inp):
         fixed.append(rr)
     return spark.createDataFrame(fixed, schema)
 
-CASES = "/root/reference/cases"
+CASES = corpus_path("cases")
 CAP = 4  # combos sampled per template
 
 FILES = [

@@ -23,10 +23,11 @@ from openmldb_spark.sources.io import run_statement
 from openmldb_spark.sqlfe import SqlUnsupported
 from test_plain_query_cases import _expect_table, _cell, check_case
 from test_window_query_cases import Unsupported, _mk_named_df
+from conftest import corpus_path
 
 SRCS = [
-    "/root/reference/cases/function/out_in/test_out_in.yaml",
-    "/root/reference/cases/function/v040/test_out_in_offline.yaml",
+    corpus_path("cases/function/out_in/test_out_in.yaml"),
+    corpus_path("cases/function/v040/test_out_in_offline.yaml"),
 ]
 
 

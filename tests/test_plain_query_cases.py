@@ -24,13 +24,14 @@ from yaml_harness import expand_case
 
 from test_window_query_cases import (Unsupported, _mk_named_df,
                                      _parse_schema, _parse_value)
+from conftest import corpus_path
 
 FILES = ["simple_query", "const_query", "group_query", "having_query",
          "where_group_query", "operator_query", "udf_query", "udaf_query",
          "parameterized_query", "window_with_union_query", "extream_query",
          "fz_sql"]
 
-QDIR = "/root/reference/cases/query"
+QDIR = corpus_path("cases/query")
 
 
 def _load(fname):

@@ -26,10 +26,11 @@ import yaml
 from openmldb_spark.sources import ddl
 from openmldb_spark.sources import procedure
 from openmldb_spark.sources.io import run_statement
+from conftest import corpus_path
 
-with open("/root/reference/cases/plan/create.yaml") as f:
+with open(corpus_path("cases/plan/create.yaml")) as f:
     CREATE_CASES = yaml.safe_load(f)["cases"]
-with open("/root/reference/cases/plan/insert.yaml") as f:
+with open(corpus_path("cases/plan/insert.yaml")) as f:
     INSERT_CASES = yaml.safe_load(f)["cases"]
 
 # index → why the ANALYZER rejects what the parser accepted

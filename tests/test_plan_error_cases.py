@@ -23,10 +23,11 @@ import pytest
 import yaml
 
 from openmldb_spark.sqlfe import SqlUnsupported, run_sql
+from conftest import corpus_path
 
 FILES = [
-    "/root/reference/cases/plan/error_unsupport_sql.yaml",
-    "/root/reference/cases/plan/error_query.yaml",
+    corpus_path("cases/plan/error_unsupport_sql.yaml"),
+    corpus_path("cases/plan/error_query.yaml"),
 ]
 
 
@@ -77,7 +78,7 @@ def test_plan_error_case(fname, sql, spark):
 
 
 def _load_request_errors():
-    f = "/root/reference/cases/plan/error_request_query.yaml"
+    f = corpus_path("cases/plan/error_request_query.yaml")
     out = []
     for c in yaml.safe_load(open(f))["cases"]:
         out.append(pytest.param(str(c["sql"]), id=f"req_err::{c['id']}"))

@@ -20,8 +20,9 @@ import yaml
 import pyspark.sql.types as T
 
 from openmldb_spark.sqlfe import SqlUnsupported, run_sql
+from conftest import corpus_path
 
-PLAN = "/root/reference/cases/plan"
+PLAN = corpus_path("cases/plan")
 
 FILES = ["simple_query", "rename_query", "back_quote_identifier",
          "distinct_query", "order_query", "where_query", "group_query",

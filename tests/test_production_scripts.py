@@ -22,8 +22,9 @@ import yaml
 import pyspark.sql.types as T
 
 from openmldb_spark.sqlfe import run_sql
+from conftest import corpus_path
 
-SPARK_CASES = "/root/reference/cases/function/spark"
+SPARK_CASES = corpus_path("cases/function/spark")
 
 _SPARK_TYPES = {
     "int": T.IntegerType(), "int32": T.IntegerType(),
@@ -108,7 +109,7 @@ def test_production_script(spark, fname):
 # computes point-in-time features over stored state + itself, request
 # rows never see each other. test_luoji/test_myhug carry literal
 # expected rows (full value check); test_bank is success-mode only.
-FZ_DDL = "/root/reference/cases/function/fz_ddl"
+FZ_DDL = corpus_path("cases/function/fz_ddl")
 FZ_SCRIPTS = ["test_bank.yaml", "test_luoji.yaml", "test_myhug.yaml"]
 
 

@@ -32,9 +32,10 @@ from openmldb_spark.sources.procedure import (ProcedureError,
 from openmldb_spark.sqlfe import SqlUnsupported
 
 from test_production_scripts import _mkdf
+from conftest import corpus_path
 
 DB = "test_restful"
-RDIR = "/root/reference/cases/restful"
+RDIR = corpus_path("cases/restful")
 FILES = {
     "execute_deployment": f"{RDIR}/v030/test_execute_deployment.yaml",
     "execute_procedure": f"{RDIR}/v230/test_execute_procedure.yaml",

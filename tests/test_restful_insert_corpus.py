@@ -17,8 +17,9 @@ import yaml
 from pyspark.sql import types as T
 
 from openmldb_spark.sources.restful import RestfulError, put_table_row
+from conftest import corpus_path
 
-CASES = "/root/reference/cases/restful/v230/test_insert.yaml"
+CASES = corpus_path("cases/restful/v230/test_insert.yaml")
 DB = "test_restful_ins"
 
 _SPARK_TYPES = {

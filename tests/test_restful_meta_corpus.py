@@ -25,8 +25,9 @@ import yaml
 
 from openmldb_spark.sources.ddl import DdlError
 from openmldb_spark.sources.session import Session
+from conftest import corpus_path
 
-RDIR = "/root/reference/cases/restful/v230"
+RDIR = corpus_path("cases/restful/v230")
 
 with open(f"{RDIR}/test_desc.yaml") as f:
     DESC = yaml.safe_load(f)

@@ -11,6 +11,7 @@ import yaml
 import pyspark.sql.types as T
 
 from openmldb_spark.sqlfe import SqlUnsupported, compile_window_sql, run_sql
+from conftest import corpus_path
 
 _SPARK_TYPES = {
     "int": T.IntegerType(), "int32": T.IntegerType(),
@@ -53,7 +54,7 @@ def _mkdf(spark, inp):
 
 
 def _load(fname):
-    with open(f"/root/reference/cases/function/window/{fname}") as f:
+    with open(corpus_path(f"cases/function/window/{fname}")) as f:
         return yaml.safe_load(f)["cases"]
 
 
@@ -110,7 +111,7 @@ def test_sqlfe_reference_case_on_spark(fname, cid, spark):
 
 def test_sqlfe_lastjoin_on_spark(spark):
     case = None
-    with open("/root/reference/cases/function/join/test_lastjoin_simple.yaml") as f:
+    with open(corpus_path("cases/function/join/test_lastjoin_simple.yaml")) as f:
         for c in yaml.safe_load(f)["cases"]:
             if str(c.get("id")) == "1":
                 case = c

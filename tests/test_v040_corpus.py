@@ -30,15 +30,16 @@ from openmldb_spark.sqlfe import SqlUnsupported, run_sql
 from yaml_harness import expand_case
 from test_plain_query_cases import check_case
 from test_window_query_cases import Unsupported
+from conftest import corpus_path
 
 FILES = [
-    "/root/reference/cases/function/v040/test_like.yaml",
-    "/root/reference/cases/function/v040/test_like_match.yaml",
-    "/root/reference/cases/function/v040/test_groupby.yaml",
-    "/root/reference/cases/function/v040/test_udaf.yaml",
-    "/root/reference/cases/debug/bug.yaml",
-    "/root/reference/cases/usecase/autox.yaml",
-    "/root/reference/cases/hybridsql_gen_cases/auto_gen_case_0.yaml",
+    corpus_path("cases/function/v040/test_like.yaml"),
+    corpus_path("cases/function/v040/test_like_match.yaml"),
+    corpus_path("cases/function/v040/test_groupby.yaml"),
+    corpus_path("cases/function/v040/test_udaf.yaml"),
+    corpus_path("cases/debug/bug.yaml"),
+    corpus_path("cases/usecase/autox.yaml"),
+    corpus_path("cases/hybridsql_gen_cases/auto_gen_case_0.yaml"),
 ]
 
 

@@ -12,8 +12,9 @@ import yaml
 import pyspark.sql.types as T
 
 from openmldb_spark.sqlfe import SqlUnsupported, run_sql
+from conftest import corpus_path
 
-CASES = "/root/reference/cases/query/window_query.yaml"
+CASES = corpus_path("cases/query/window_query.yaml")
 
 _TYPES = {
     "int": T.IntegerType(), "int32": T.IntegerType(),
@@ -80,7 +81,7 @@ def _mk_named_df(spark, inp):
 
     if "resource" in inp:
         # resource files are the same {name, schema, data} table format
-        with open(f"/root/reference/{inp['resource']}") as f:
+        with open(corpus_path(inp["resource"])) as f:
             inp = yaml.safe_load(f)["table"]
     if "columns" in inp and ("rows" in inp or "data" in inp):
         # the {columns: ['name:type'|'name type'], rows|data: ...} spelling

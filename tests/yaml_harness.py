@@ -32,8 +32,8 @@ from openmldb_spark.plans.specs import Agg, KERNEL_AGG_FUNCS, WindowSpec
 from openmldb_spark.operators.window_kernel import (EXPANDED, ORD, PRIMARY,
                                                     UPOS,
                                                     group_window_features)
+from conftest import corpus_path
 
-CASES_DIR = "/root/reference/cases/function/window"
 
 class Unsupported(Exception):
     pass
@@ -304,7 +304,7 @@ def _normalize_data(case: dict) -> dict:
 
 
 def load_cases(fname: str) -> list[dict]:
-    with open(f"{CASES_DIR}/{fname}") as f:
+    with open(corpus_path(f"cases/function/window/{fname}")) as f:
         doc = yaml.safe_load(f)
     out = []
     for c in doc.get("cases", []):
