@@ -3,7 +3,7 @@
 Reproduces the offline feature-SQL semantics of OpenMLDB (reference:
 /root/reference, the HybridSE compiler + openmldb-batch Spark runner) as an
 idiomatic PySpark library: DataFrame/Catalyst for everything declarative,
-Arrow-vectorized ``applyInPandas`` kernels for the frame semantics Spark's
+numpy kernels over Arrow (``applyInArrow``) for the frame semantics Spark's
 built-in window functions cannot express (MAXSIZE, EXCLUDE CURRENT_TIME, OPEN
 bounds, WINDOW UNION emit-filter, INSTANCE_NOT_IN_WINDOW).
 

@@ -26,8 +26,10 @@ Two tiers (SURVEY.md §2.5); the exact one runs on one of two paths:
       of two unbounded-preceding frames; min/max use a two-block split of
       width ``d``. Never a sliding ``rangeBetween(-d, -1)``: Spark
       recomputes such a frame from scratch for every row.
-   b. **numpy kernel** — ``groupBy(keys).applyInPandas`` with the frame
-      kernel (window_kernel.py). Every other spec: ROWS and
+   b. **numpy kernel** — ``groupBy(keys).applyInArrow`` with the frame
+      kernel (window_kernel.py), which reads each group as a
+      ``pyarrow.Table`` through numpy views and returns one typed
+      exactly as the output schema. Every other spec: ROWS and
       rows_merge_rows_range frames, MAXSIZE, open or non-current ends,
       lag/at/first_value, top/top_n_frequency/distinct_count, ``*_cate``,
       ``window_split*``, integer sums, timestamp/string columns.
@@ -50,6 +52,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from openmldb_spark.plans.specs import Agg, WindowSpec
 from openmldb_spark.operators import window_kernel as wk
@@ -114,8 +117,8 @@ def _agg_field(agg: Agg, in_field: T.StructField | None) -> T.StructField:
     # (restful get_procedure case 7 pins sum(int32)=int32; the
     # arithmetic corpus value-checks the wrapped sums). Wrap-addition is
     # associative mod 2^N, so accumulating wide and truncating the
-    # result equals the reference's per-add wraps exactly (kernel casts
-    # through int64 — see group_window_features' dtype loop).
+    # result equals the reference's per-add wraps exactly (the kernel
+    # sums in int64 and truncates to the output width).
     if isinstance(in_field.dataType, (T.FloatType, *_INT_TYPES)):
         return T.StructField(agg.alias, in_field.dataType)
     return T.StructField(agg.alias, T.DoubleType())
@@ -187,22 +190,6 @@ def _ms_view_for_ts_aggs(df: DataFrame, aggs: list[Agg], fields: dict):
             and (a.func in _MS_AGG_FUNCS or "_cate" in a.func) else a
             for a in aggs]
     return df, aggs, ts_cols
-
-
-def _pandas_dtype(dt: T.DataType):
-    if isinstance(dt, T.LongType):
-        return "Int64"
-    if isinstance(dt, T.DoubleType):
-        return "float64"
-    if isinstance(dt, T.FloatType):
-        return "float32"
-    if isinstance(dt, T.IntegerType):
-        return "int32"
-    if isinstance(dt, T.ShortType):
-        return "int16"
-    if isinstance(dt, T.ByteType):
-        return "int8"
-    return None
 
 
 _NUMERIC_TYPES = (*_INT_TYPES, T.FloatType, T.DoubleType)
@@ -373,8 +360,8 @@ def window_agg(
 
     # fill logical input types (csv-UDAF formatting) from the schema,
     # then give numeric reductions over TIMESTAMP columns an int64-ms
-    # view — the reference's timestamps ARE int64 ms, while pandas would
-    # hand the kernel nanoseconds (sum/avg over ts, last_join_window
+    # view — the reference's timestamps ARE int64 ms, while Arrow would
+    # hand the kernel microseconds (sum/avg over ts, last_join_window
     # corpus case 2)
     aggs = [_fill_agg_types(a, schema_fields) for a in aggs]
     df, aggs, ts_cols = _ms_view_for_ts_aggs(df, aggs, schema_fields)
@@ -478,29 +465,14 @@ def window_agg(
         return _jvm_window(work, spec, aggs, group_keys, keep_cols,
                            in_fields)
 
-    out_fields = [in_fields[c] for c in keep_cols]
-    out_dtypes = {}
-    for a in aggs:
-        fld = _agg_field(a, in_fields.get(a.col))
-        out_fields.append(fld)
-        pdt = _pandas_dtype(fld.dataType)
-        if pdt:
-            out_dtypes[a.alias] = pdt
-    out_schema = T.StructType(out_fields)
+    out_schema = T.StructType(
+        [in_fields[c] for c in keep_cols]
+        + [_agg_field(a, in_fields.get(a.col)) for a in aggs])
+    arrow_schema = to_arrow_schema(out_schema)
 
-    # min/max path selection decided ONCE from the Spark schema (string/
-    # date/timestamp columns order ordinally; numerics go through the
-    # sparse-table kernel) instead of a per-group value sniff
-    _ordinal_types = (T.StringType, T.DateType, T.TimestampType)
-    ordinal_cols = frozenset(
-        a.col for a in aggs
-        if a.func in ("min", "max", "min_where", "max_where")
-        and a.col in in_fields
-        and isinstance(in_fields[a.col].dataType, _ordinal_types))
-
-    def kernel(pdf):
-        return wk.group_window_features(pdf, spec, aggs, keep_cols,
-                                        out_dtypes, ordinal_cols)
+    def kernel(table):
+        return wk.group_window_features(table, spec, aggs, keep_cols,
+                                        arrow_schema)
 
     # Explicit partition count: AQE's size-based coalescing merges the
     # (byte-small) shuffle into 1-2 partitions, serializing the Python
@@ -522,7 +494,7 @@ def window_agg(
             num_partitions = \
                 work.sparkSession.sparkContext.defaultParallelism
         grouped = work.repartition(num_partitions, *group_keys)
-    res = grouped.groupBy(*group_keys).applyInPandas(
+    res = grouped.groupBy(*group_keys).applyInArrow(
         kernel, schema=out_schema).select(*keep_cols,
                                           *[a.alias for a in aggs])
     # T→T result types over TIMESTAMP inputs: the ms-view fed the kernel
@@ -671,7 +643,7 @@ def _jvm_window(work: DataFrame, spec: WindowSpec, aggs: list[Agg],
 
     def value(col: str, cond: str | None) -> Column:
         # NULL wherever the kernel reads no value: NULL, a float NaN
-        # (pandas cannot tell it from NULL) or a failed _where condition
+        # (the kernel reads it as NULL) or a failed _where condition
         x = F.col(col)
         if isinstance(fields[col].dataType, (T.FloatType, T.DoubleType)):
             x = F.when(~F.isnan(x), x)

@@ -39,7 +39,8 @@ cases):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from openmldb_spark.plans.specs import Agg, WindowSpec
 
@@ -128,7 +129,6 @@ class _SparseTable:
         self.identity = identity if identity is not None else (
             np.inf if op is np.minimum else -np.inf)
         m = len(x)
-        levels = max(1, m.bit_length())
         self.tab = [x]
         k = 1
         while (1 << k) <= m:
@@ -139,9 +139,7 @@ class _SparseTable:
 
     def query(self, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
         """Reduce over [lo, hi); empty ranges yield the op identity."""
-        out = np.full(len(lo), self.identity,
-                      dtype=self.tab[0].dtype if len(self.tab[0])
-                      else np.float64)
+        out = np.full(len(lo), self.identity, dtype=self.tab[0].dtype)
         w = hi - lo
         valid = w > 0
         if not valid.any():
@@ -159,32 +157,130 @@ class _SparseTable:
         return out
 
 
-def _factorize_sorted(s: pd.Series, fmt=None):
-    """Factorize to int codes with uniques sorted ascending in NATIVE key
+_MS_PER_UNIT = {"s": (1000, 1), "ms": (1, 1), "us": (1, 1000),
+                "ns": (1, 10**6)}
+
+
+def _valid(a: pa.Array) -> np.ndarray:
+    """True where ``a`` holds a value."""
+    if a.null_count == 0:
+        return np.ones(len(a), dtype=bool)
+    return a.is_valid().to_numpy(zero_copy_only=False)
+
+
+def _nan_null(a: pa.Array) -> pa.Array:
+    """A float NaN reads as NULL: the JVM lowering matches it
+    (COVERAGE §2.5)."""
+    if not pa.types.is_floating(a.type):
+        return a
+    x = a.to_numpy(zero_copy_only=False)    # NULL slots read as NaN
+    nan = np.isnan(x)
+    if nan.sum() == a.null_count:
+        return a
+    return pa.array(x, type=a.type, mask=nan)
+
+
+def _parse_float(v) -> float:
+    try:
+        return float(v)
+    except (TypeError, ValueError):
+        return np.nan
+
+
+def _floats(a: pa.Array) -> np.ndarray:
+    """float64 view, NaN where NULL; strings parse as numbers where they
+    can, other non-numeric values read as NULL."""
+    t = a.type
+    if pa.types.is_boolean(t) or pa.types.is_decimal(t):
+        a = a.cast(pa.float64())
+    elif pa.types.is_string(t) or pa.types.is_large_string(t):
+        return np.array([_parse_float(v) for v in a.to_pylist()],
+                        dtype=np.float64)
+    elif not (pa.types.is_integer(t) or pa.types.is_floating(t)):
+        return np.full(len(a), np.nan)
+    return np.asarray(a.to_numpy(zero_copy_only=False), dtype=np.float64)
+
+
+def _ints(a: pa.Array) -> np.ndarray:
+    """Exact int64 view of an integer column, 0 where NULL."""
+    if a.null_count:
+        a = pc.fill_null(a, 0)
+    return np.asarray(a.to_numpy(zero_copy_only=False), dtype=np.int64)
+
+
+def _truth(a: pa.Array) -> np.ndarray:
+    """A condition column as bools; NULL is false."""
+    if not pa.types.is_boolean(a.type):
+        a = a.cast(pa.bool_())
+    return pc.fill_null(a, False).to_numpy(zero_copy_only=False)
+
+
+def _sort_key(a: pa.Array) -> np.ndarray:
+    """An ascending sort key with NULL last."""
+    if a.null_count == 0 and pa.types.is_integer(a.type):
+        return a.to_numpy()
+    return pc.rank(a, null_placement="at_end", tiebreaker="dense").to_numpy()
+
+
+def _ranked(a: pa.Array) -> tuple[np.ndarray, pa.Array]:
+    """(codes, distinct values): the distinct values sorted in NATIVE
     order — the reference's containers are std::map<StorageK> with
     native-type comparison (BoundedGroupByDict, udf/containers.h), so
-    numeric category keys emit numerically (2 before 10) while string
-    keys emit lexicographically. ``fmt`` renders the emit strings (the
-    logical-type formatter from typed_formatter); default _fmt_num so
-    float-typed keys from nullable int columns render as ints.
-    Nulls → -1."""
-    codes, uniques = pd.factorize(s.to_numpy(object))
-    if not len(uniques):
-        # every key NULL: no categories, every code -1
-        return codes.astype(np.int64), np.array([], dtype=object)
-    if pd.api.types.is_numeric_dtype(s) and len(uniques):
-        order = np.argsort(np.asarray(uniques, dtype=np.float64),
-                           kind="stable")
-        uniq_str = np.array([(fmt or _fmt_num)(u) for u in uniques],
-                            dtype=object)
+    numeric keys order numerically (2 before 10) and strings byte-wise —
+    and each row's index into them, -1 for NULL."""
+    enc = pc.dictionary_encode(a)
+    srt = pc.array_sort_indices(enc.dictionary).to_numpy()
+    if not len(srt):
+        return np.full(len(a), -1, dtype=np.int64), enc.dictionary
+    inv = np.empty(len(srt), dtype=np.int64)
+    inv[srt] = np.arange(len(srt))
+    idx = np.asarray(pc.fill_null(enc.indices, -1)
+                     .to_numpy(zero_copy_only=False), dtype=np.int64)
+    return (np.where(idx >= 0, inv[np.maximum(idx, 0)], -1),
+            enc.dictionary.take(pa.array(srt)))
+
+
+def _labels(uniq: pa.Array, fmt) -> np.ndarray:
+    """Distinct values rendered for csv output by ``fmt`` (the
+    logical-type formatter from typed_formatter); timestamps render
+    from epoch milliseconds."""
+    if pa.types.is_timestamp(uniq.type):
+        mul, div = _MS_PER_UNIT[uniq.type.unit]
+        vals = (uniq.cast(pa.int64()).to_numpy() * mul // div).tolist()
     else:
-        uniq_str = np.array([(fmt or str)(u) for u in uniques],
-                            dtype=object)
-        order = np.argsort(uniq_str, kind="stable")
-    inv = np.empty(len(order), dtype=np.int64)
-    inv[order] = np.arange(len(order))
-    remapped = np.where(codes >= 0, inv[np.maximum(codes, 0)], -1)
-    return remapped, uniq_str[order]
+        vals = uniq.to_pylist()
+    return np.array([fmt(v) for v in vals], dtype=object)
+
+
+def _default(t: pa.DataType):
+    """The value a NULL takes in a NON-nullable UDAF argument; None for
+    dates, whose NULL counts as a value of its own."""
+    if pa.types.is_boolean(t):
+        return pa.scalar(False)
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return pa.scalar("", type=t)
+    if pa.types.is_integer(t) or pa.types.is_floating(t) \
+            or pa.types.is_timestamp(t):
+        return pa.scalar(0, type=t)
+    return None
+
+
+def _arrow(vals, t: pa.DataType, null: np.ndarray | None = None) -> pa.Array:
+    """One output column as Arrow type ``t``, NULL where ``null``."""
+    if isinstance(vals, pa.Array):
+        return vals if vals.type == t else vals.cast(t)
+    if isinstance(vals, list):
+        return pa.array(vals, type=t)
+    if not (pa.types.is_integer(t) or pa.types.is_floating(t)
+            or pa.types.is_boolean(t)):
+        return pa.array(vals, mask=null).cast(t, safe=False)
+    if pa.types.is_integer(t) and vals.dtype.kind == "f":
+        # through int64 so narrow widths TRUNCATE mod 2^N — the
+        # reference's C wraparound (float64→int32 directly is UB for
+        # out-of-range values)
+        vals = vals.astype(np.int64)
+    return pa.array(vals.astype(t.to_pandas_dtype(), copy=False), type=t,
+                    mask=null)
 
 
 def _cat_prefix(codes_e: np.ndarray, weights: np.ndarray | None, u: int):
@@ -199,29 +295,20 @@ def _cat_prefix(codes_e: np.ndarray, weights: np.ndarray | None, u: int):
     return M
 
 
-def cat_counts(pdf, col, cond, idx_e, lo, hi, E, anchored, fmt=None,
-               series=None):
-    """Per-emit-frame category counts matrix (n_emit × u) + sorted uniques.
+def cat_counts(codes, u, idx_e, lo, hi, E, anchored) -> np.ndarray:
+    """Per-emit-frame category counts matrix (n_emit × u).
 
     Replaces per-row value_counts loops with two vectorized ops:
     one-hot scatter + cumsum, then M[hi]-M[lo].
     """
-    codes, uniq = _factorize_sorted(
-        pdf[col] if series is None else series, fmt)
-    if cond is not None:
-        cm = pdf[cond].fillna(False).to_numpy(bool)
-        codes = np.where(cm, codes, -1)
-    codes_e = codes[idx_e]
-    u = len(uniq)
     if u == 0:
-        return np.zeros((len(E), 0)), uniq
-    M = _cat_prefix(codes_e, None, u)
+        return np.zeros((len(E), 0))
+    M = _cat_prefix(codes[idx_e], None, u)
     counts = M[hi] - M[lo]
     anchor_codes = codes[E]
-    am = anchored & (anchor_codes >= 0)
-    ai = np.flatnonzero(am)
+    ai = np.flatnonzero(anchored & (anchor_codes >= 0))
     np.add.at(counts, (ai, anchor_codes[ai]), 1.0)
-    return counts, uniq
+    return counts
 
 
 def topn_freq_strings(counts: np.ndarray, uniq: np.ndarray, k: int,
@@ -254,12 +341,13 @@ def topn_freq_strings(counts: np.ndarray, uniq: np.ndarray, k: int,
     return out
 
 
-def cate_agg_strings(pdf, cate_col, val_col, cond, base, idx_e, lo, hi, E,
-                     anchored, numeric, top_n: int | None = None,
-                     key_fmt=None, val_fmt=None) -> list:
+def cate_agg_strings(codes, uniq, x, cm, base, idx_e, lo, hi, E, anchored,
+                     top_n: int | None = None, val_fmt=None) -> list:
     """{sum,count,avg,min,max}_cate[_where] and the top_n_key_* variants:
     per-category aggregate within the frame, emitted "k1:v1,k2:v2" sorted
-    by key ascending (*_by_category_def.cc). ``top_n``: keep only the n
+    by key ascending (*_by_category_def.cc). ``codes``/``uniq`` are the
+    key column's native-order codes and rendered keys, ``x`` the values,
+    ``cm`` the condition. ``top_n``: keep only the n
     LARGEST keys and emit them key-DESCENDING — the reference's bounded
     std::map evicts begin() past the bound, so surviving keys always
     carry complete accumulators (TopKAvgCateWhereDef::Update;
@@ -267,7 +355,6 @@ def cate_agg_strings(pdf, cate_col, val_col, cond, base, idx_e, lo, hi, E,
 
     sum/count/avg via category prefix sums (vectorized); min/max via
     per-row numpy slices (no prefix structure)."""
-    codes, uniq = _factorize_sorted(pdf[cate_col], key_fmt)
     # value rendering: count is always %lld; avg always %f (double
     # accumulator); sum/min/max render in the value column's own type
     if base == "count":
@@ -276,10 +363,8 @@ def cate_agg_strings(pdf, cate_col, val_col, cond, base, idx_e, lo, hi, E,
         vfmt = (lambda v: f"{float(v):.6f}") if val_fmt else _fmt_num
     else:
         vfmt = val_fmt or _fmt_num
-    x, _, _ = numeric(val_col)
     valid = (codes >= 0) & ~np.isnan(x)
-    if cond is not None:
-        cm = pdf[cond].fillna(False).to_numpy(bool)
+    if cm is not None:
         valid &= cm
     codes = np.where(valid, codes, -1)
     u = len(uniq)
@@ -370,21 +455,20 @@ def _split_parts(s: str, f: str, delim: str, kv_delim: str | None) -> list:
     return out
 
 
-def window_split_strings(pdf, col, f, delim, kv_delim, sep,
+def window_split_strings(raw: list, f, delim, kv_delim, sep,
                          idx_e, lo, hi, E, anchored, mode=None) -> list:
     """mode None → fz_join of the frame's split parts (newest first);
     mode 'count' / 'distinct_count' → count(fz_window_split*(..)) /
     distinct_count(..) over the same parts stream
-    (test_feature_zero_function.yaml ids 1-4)."""
-    raw = pdf[col].to_numpy(object)
+    (test_feature_zero_function.yaml ids 1-4). ``raw``: the column's
+    values in buffer order."""
     # pre-split each eligible row once
     cache: dict[int, list] = {}
 
     def parts_of(pos: int) -> list:
         if pos not in cache:
             v = raw[pos]
-            cache[pos] = [] if v is None or (isinstance(v, float) and
-                                             np.isnan(v)) else \
+            cache[pos] = [] if v is None else \
                 _split_parts(str(v), f, delim, kv_delim)
         return cache[pos]
 
@@ -425,28 +509,15 @@ def window_split_strings(pdf, col, f, delim, kv_delim, sep,
     return res
 
 
-def ordered_min_max(pdf, col, cond, f, idx_e, lo, hi, E,
-                    anchored) -> np.ndarray:
+def ordered_min_max(codes, uniq: pa.Array, cm, f, idx_e, lo, hi, E,
+                    anchored) -> pa.Array:
     """min/max over orderable non-numeric columns (strings, dates):
-    factorize to sorted ordinals, run the numeric range-min/max, map back
-    to the ORIGINAL values (not the csv-formatted strings — min over a
-    DateType column must return datetime.date for the declared output
-    schema). str() sort order == native order for both strings and ISO
-    dates."""
-    raw_codes, uniques = pd.factorize(pdf[col].to_numpy(object))
-    if len(uniques):
-        order = np.argsort(np.array([str(u) for u in uniques],
-                                    dtype=object), kind="stable")
-        inv = np.empty(len(order), dtype=np.int64)
-        inv[order] = np.arange(len(order))
-        codes = np.where(raw_codes >= 0, inv[np.maximum(raw_codes, 0)], -1)
-        uniq = np.asarray(uniques, dtype=object)[order]
-    else:
-        codes, uniq = raw_codes, np.array([], dtype=object)
+    run the numeric range-min/max over the native-order codes
+    (``_ranked``), then take the ORIGINAL values back, so the result
+    keeps the column's type."""
     x = codes.astype(np.float64)
     x[codes < 0] = np.nan
-    if cond is not None:
-        cm = pdf[cond].fillna(False).to_numpy(bool)
+    if cm is not None:
         x = np.where(cm, x, np.nan)
     x_e = x[idx_e]
     is_min = f.startswith("min")
@@ -457,13 +528,9 @@ def ordered_min_max(pdf, col, cond, f, idx_e, lo, hi, E,
     sv = x[E]
     ok = anchored & ~np.isnan(sv)
     vals = np.where(ok, op(vals, np.where(np.isnan(sv), fill, sv)), vals)
-    # an object array, not a list: a group with no anchor rows (request
-    # mode's history-only keys) must not turn into an empty float64
-    # column, which Arrow cannot cast to date
-    out = np.empty(len(vals), dtype=object)
-    out[:] = [None if np.isinf(v) or np.isnan(v) else uniq[int(v)]
-              for v in vals]
-    return out
+    null = np.isinf(vals)
+    return uniq.take(pa.array(np.where(null, 0, vals).astype(np.int64),
+                              mask=null))
 
 
 def _fmt_num(v) -> str:
@@ -482,10 +549,10 @@ _FLOAT_LOGICAL = {"float", "double"}
 
 
 def _ts8_str(v) -> str:
-    """ms (or pandas Timestamp) → the reference's timestamp string
-    (fixed UTC+8, format_string<Timestamp>, udf.cc:1030-1039)."""
+    """epoch ms → the reference's timestamp string (fixed UTC+8,
+    format_string<Timestamp>, udf.cc:1030-1039)."""
     import datetime
-    ms = v.value // 10**6 if isinstance(v, pd.Timestamp) else int(v)
+    ms = int(v)
     return datetime.datetime.utcfromtimestamp(
         (ms + 28_800_000) // 1000).strftime("%Y-%m-%d %H:%M:%S")
 
@@ -508,39 +575,46 @@ def typed_formatter(logical: str | None):
 
 
 def group_window_features(
-    pdf: pd.DataFrame,
+    table: pa.Table,
     spec: WindowSpec,
     aggs: list[Agg],
     keep_cols: list[str],
-    out_dtypes: dict | None = None,
-    ordinal_cols: frozenset | None = None,
-) -> pd.DataFrame:
+    schema: pa.Schema,
+) -> pa.Table:
     """Compute all window aggregates of one group in one pass.
 
-    ``ordinal_cols``: min/max agg columns that take the ordinal
-    (lexicographic/ISO) path, decided once from the Spark schema by the
-    caller; None = legacy per-group value sniff (test harness callers).
-
-    ``pdf`` must contain ORD (int64), PRIMARY, EXPANDED plus every column an
-    agg references. Returns emit rows (primary & not expanded) with
-    keep_cols + one column per agg alias.
+    ``table`` must contain ORD (int64), PRIMARY plus every column an agg
+    references (UPOS and EXPANDED default to 0). Returns the emit rows
+    (primary & not expanded) as keep_cols + one column per agg alias,
+    typed exactly as ``schema``. Computation runs on numpy views of the
+    Arrow buffers; picked values (keep_cols, lag/at/first_value,
+    string/date min/max) are Arrow ``take``s, so they keep the column's
+    type and every bit of a BIGINT.
     """
+    n = table.num_rows
+    cols: dict[str, pa.Array] = {}
+
+    def col(name: str) -> pa.Array:
+        if name not in cols:
+            cols[name] = _nan_null(table.column(name).combine_chunks())
+        return cols[name]
+
+    def flag(name: str, default: int) -> np.ndarray:
+        if name in table.column_names:
+            return _ints(col(name))
+        return np.full(n, default, dtype=np.int64)
+
     # equal-ts tie order: union rows sort below the primary, and
     # later-listed union tables sort OLDER — "the order for rows in
     # union tables with same ts is explicitly as the order in SQL"
     # (test_window_union.yaml id 19). UPOS carries 0 for the primary and
-    # -(i+1) for the i-th union table; absent = single-source input.
-    sort_cols = [ORD, *([UPOS] if UPOS in pdf.columns else []),
-                 PRIMARY, *spec.tiebreak]
-    pdf = pdf.sort_values(sort_cols, kind="stable").reset_index(drop=True)
-    n = len(pdf)
-    ts = pdf[ORD].to_numpy(np.int64, copy=False)
-    primary = pdf[PRIMARY].to_numpy(np.int64, copy=False)
-    expanded = (
-        pdf[EXPANDED].to_numpy(np.int64, copy=False)
-        if EXPANDED in pdf.columns
-        else np.zeros(n, dtype=np.int64)
-    )
+    # -(i+1) for the i-th union table. NULL tiebreaks sort last.
+    ts = _ints(col(ORD))
+    primary = flag(PRIMARY, 1)
+    order = np.lexsort([*(_sort_key(col(t)) for t in reversed(spec.tiebreak)),
+                        primary, flag(UPOS, 0), ts])
+    ts, primary = ts[order], primary[order]
+    expanded = flag(EXPANDED, 0)[order]
 
     elig = np.ones(n, dtype=bool)
     if spec.instance_not_in_window:
@@ -559,76 +633,71 @@ def group_window_features(
     lo, hi, extra = compute_frame_bounds(ts_e, tsE, PE, selfE, spec)
     anchored = extra  # anchor participates beyond the slice
 
-    out = pdf.loc[E, keep_cols].reset_index(drop=True)
+    # every per-row view below is in buffer (sorted) order
+    def valid(c: str) -> np.ndarray:
+        return _valid(col(c))[order]
+
+    def truth(c: str | None) -> np.ndarray:
+        return np.ones(n, dtype=bool) if c is None else _truth(col(c))[order]
+
+    def pick(c: str, pos: np.ndarray, ok: np.ndarray | None = None,
+             via: np.ndarray | None = None) -> pa.Array:
+        """Column ``c`` at buffer positions ``via[pos]`` (``pos`` when
+        no ``via``), NULL where not ``ok``."""
+        if ok is None:
+            return col(c).take(pa.array(order[pos]))
+        idx = np.zeros(len(pos), dtype=np.int64)
+        p = pos[ok]
+        idx[ok] = order[p if via is None else via[p]]
+        return col(c).take(pa.array(idx, mask=~ok))
 
     num_cache: dict[str, tuple] = {}
 
-    def numeric(col: str):
-        if col not in num_cache:
-            x = pd.to_numeric(pdf[col], errors="coerce").to_numpy(np.float64)
+    def numeric(c: str):
+        if c not in num_cache:
+            x = _floats(col(c))[order]
             x_e = x[idx_e]
-            nn = ~np.isnan(x_e)
-            num_cache[col] = (x, x_e, nn)
-        return num_cache[col]
+            num_cache[c] = (x, x_e, ~np.isnan(x_e))
+        return num_cache[c]
 
-    def masked_prefix(col: str, cond: str | None):
-        x, x_e, nn = numeric(col)
-        if cond is None:
-            m = nn
-        else:
-            c = pdf[cond].fillna(False).to_numpy(bool)[idx_e]
-            m = nn & c
-        ps = _prefix(np.where(m, x_e, 0.0))
-        pc = _prefix(m.astype(np.float64))
-        return x, x_e, m, ps, pc
-
-    def self_vals(col: str, cond: str | None):
+    def self_vals(c: str, cond: str | None):
         """(value, in-frame-and-valid) for the anchor rows."""
-        x, _, _ = numeric(col)
+        x, _, _ = numeric(c)
         sv = x[E]
-        ok = anchored & ~np.isnan(sv)
-        if cond is not None:
-            c = pdf[cond].fillna(False).to_numpy(bool)[E]
-            ok = ok & c
-        return sv, ok
+        return sv, anchored & ~np.isnan(sv) & truth(cond)[E]
 
-    def agg_sum_count(col, cond):
-        _, _, _, ps, pc = masked_prefix(col, cond)
-        sv, ok = self_vals(col, cond)
+    def agg_sum_count(c, cond):
+        _, x_e, nn = numeric(c)
+        m = nn & truth(cond)[idx_e]
+        ps = _prefix(np.where(m, x_e, 0.0))
+        pc_ = _prefix(m.astype(np.float64))
+        sv, ok = self_vals(c, cond)
         s = ps[hi] - ps[lo] + np.where(ok, sv, 0.0)
-        c = pc[hi] - pc[lo] + ok.astype(np.float64)
-        return s, c
+        k = pc_[hi] - pc_[lo] + ok.astype(np.float64)
+        return s, k
 
-    def agg_sum_int(col, cond, dtype):
+    def agg_sum_int(c, cond):
         """Integer-typed sum: accumulate in int64, not float64. numpy
         int64 wraps mod 2^64 like the reference's C accumulator, so
         frame sums stay exact even after a group's running prefix sum
         passes 2^53 (where the float64 prefix path silently loses
         low-order bits); truncating the mod-2^64 result to the narrow
         width equals the reference's per-add wraparound."""
-        x, x_e, nn = numeric(col)
-        if cond is None:
-            m = nn
-        else:
-            m = nn & pdf[cond].fillna(False).to_numpy(bool)[idx_e]
-        if pd.api.types.is_integer_dtype(pdf[col].dtype):
-            # na_value=0: nullable Int columns — the mask m / ok already
-            # excludes NULL positions, so the fill never contributes
-            xi = pdf[col].to_numpy(dtype=np.int64, na_value=0)
-            xe_i = np.where(m, xi[idx_e], 0)
-            sv_i = xi[E]
-        else:
-            # null-carrying column arrives float64: element-exact < 2^53
-            xe_i = np.where(m, x_e, 0.0).astype(np.int64)
-            sv_i = np.where(np.isnan(x[E]), 0.0, x[E]).astype(np.int64)
-        ps = np.zeros(len(xe_i) + 1, dtype=np.int64)
-        np.cumsum(xe_i, out=ps[1:])
-        _, ok = self_vals(col, cond)
-        s = ps[hi] - ps[lo] + np.where(ok, sv_i, 0)
-        return s.astype(dtype)
+        xi, v, cm = _ints(col(c))[order], valid(c), truth(cond)
+        ps = np.zeros(len(idx_e) + 1, dtype=np.int64)
+        np.cumsum(np.where(v[idx_e] & cm[idx_e], xi[idx_e], 0), out=ps[1:])
+        ok = anchored & v[E] & cm[E]
+        return ps[hi] - ps[lo] + np.where(ok, xi[E], 0)
+
+    types = {f.name: f.type for f in schema}
+    out: dict[str, pa.Array] = {}
+
+    def put(alias: str, vals, null: np.ndarray | None = None) -> None:
+        out[alias] = _arrow(vals, types[alias], null)
 
     for agg in aggs:
-        f, col, alias = agg.func, agg.col, agg.alias
+        f, c, alias = agg.func, agg.col, agg.alias
+        cond = agg.cond if f.endswith("_where") else None
         if f == "count_where" and agg.cond_anchor:
             # anchor-relative equality condition: count frame rows whose
             # `cond` value equals the ANCHOR row's `cond_anchor` value
@@ -638,12 +707,11 @@ def group_window_features(
             # sweeps per anchor batch — O(n log n) total instead of the
             # reference's O(anchors × frame) per-frame rescan, which
             # matters for deep frames at scale.
-            cc = pd.factorize(pd.concat(
-                [pdf[agg.cond], pdf[agg.cond_anchor]],
-                ignore_index=True))[0]
-            rc, ac = cc[:n], cc[n:]
-            valid = pdf[col].notna().to_numpy(bool)
-            rc_e, ve = rc[idx_e], valid[idx_e]
+            rv, av = col(agg.cond), col(agg.cond_anchor)
+            cc, _ = _ranked(pa.concat_arrays([rv, av.cast(rv.type)]))
+            rc, ac = cc[:n][order], cc[n:][order]
+            v = valid(c)
+            rc_e, ve = rc[idx_e], v[idx_e]
             mask = ve & (rc_e >= 0)
             pos = np.flatnonzero(mask)
             B = np.int64(len(rc_e) + 1)
@@ -654,142 +722,76 @@ def group_window_features(
             qa = np.where(ok, a, 0) * B
             cnt = (np.searchsorted(keys, qa + hi)
                    - np.searchsorted(keys, qa + lo)).astype(np.float64)
-            self_ok = anchored & ok & (rc[E] == ac[E]) & valid[E]
-            out[alias] = np.where(ok, cnt + self_ok, 0.0)
-            continue
-        if f in ("sum", "avg", "count", "sum_where", "avg_where", "count_where"):
-            cond = agg.cond if f.endswith("_where") else None
-            if f.startswith("count") and not pd.api.types.is_numeric_dtype(
-                    pdf[col]):
-                # count over string/date columns counts NON-NULL values —
-                # numeric coercion would wrongly drop unparseable strings
-                # (CountUdafDef counts every non-null,
-                # cases/query/udaf_query.yaml:1)
-                valid = pdf[col].notna().to_numpy(bool)
-                m_e = valid[idx_e].copy()
-                okc = anchored & valid[E]
-                if cond is not None:
-                    cm = pdf[cond].fillna(False).to_numpy(bool)
-                    m_e &= cm[idx_e]
-                    okc = okc & cm[E]
-                pc = _prefix(m_e.astype(np.float64))
-                out[alias] = pc[hi] - pc[lo] + okc.astype(np.float64)
-                continue
-            if (f.startswith("sum") and out_dtypes
-                    and str(out_dtypes.get(alias, "")).lower()
-                    .startswith("int")):
-                out[alias] = agg_sum_int(
-                    col, cond, str(out_dtypes[alias]).lower())
-                continue
-            s, c = agg_sum_count(col, cond)
-            if f.startswith("sum"):
-                # OpenMLDB sum inits to 0 and outputs the accumulator:
-                # empty/all-null frame -> 0, never NULL (SumUdafDef
-                # const_init(T(0)), default_udf_library.cc:106-120;
-                # SumWhereDef :305-318; yaml test_window.yaml id 3)
-                vals = s
-            elif f.startswith("avg"):
-                # AvgUdafDef outputs sum/cnt unconditionally (FDiv,
-                # default_udf_library.cc:253-259): empty/all-null frame
-                # = 0/0 = a REAL double NaN, never NULL (pinned by
-                # fz_ddl/test_myhug.yaml avg_75='nan' next to max=NULL).
-                # An explicit-mask FloatingArray carries NaN through
-                # Arrow (plain float64 NaN would be read as null) —
-                # built only when an empty frame actually occurred
-                # (rare); the common all-frames-populated group keeps
-                # the plain ndarray fast path.
-                vals = np.where(c > 0, s / np.maximum(c, 1), np.nan)
-                if (c == 0).any():
-                    out[alias] = pd.arrays.FloatingArray(
-                        vals, np.zeros(len(vals), dtype=bool))
-                    continue
-            else:
-                vals = c
-            out[alias] = vals
+            self_ok = anchored & ok & (rc[E] == ac[E]) & v[E]
+            put(alias, np.where(ok, cnt + self_ok, 0.0))
+        elif f in ("count", "count_where"):
+            # counts every non-NULL value (CountUdafDef,
+            # cases/query/udaf_query.yaml:1), whatever the type
+            v, cm = valid(c), truth(cond)
+            pc_ = _prefix((v[idx_e] & cm[idx_e]).astype(np.float64))
+            put(alias, pc_[hi] - pc_[lo] + (anchored & v[E] & cm[E]))
+        elif f in ("sum", "sum_where") and pa.types.is_integer(types[alias]):
+            put(alias, agg_sum_int(c, cond))
+        elif f in ("sum", "avg", "sum_where", "avg_where"):
+            s, k = agg_sum_count(c, cond)
+            # OpenMLDB sum inits to 0 and outputs the accumulator:
+            # empty/all-null frame -> 0, never NULL (SumUdafDef
+            # const_init(T(0)), default_udf_library.cc:106-120;
+            # SumWhereDef :305-318; yaml test_window.yaml id 3).
+            # AvgUdafDef outputs sum/cnt unconditionally (FDiv,
+            # default_udf_library.cc:253-259): empty/all-null frame
+            # = 0/0 = a REAL double NaN, never NULL (pinned by
+            # fz_ddl/test_myhug.yaml avg_75='nan' next to max=NULL).
+            put(alias, s if f.startswith("sum")
+                else np.where(k > 0, s / np.maximum(k, 1), np.nan))
         elif f in ("min", "max", "min_where", "max_where"):
-            cond = agg.cond if f.endswith("_where") else None
-            if ordinal_cols is not None:
-                # decided ONCE from the Spark schema by the caller —
-                # avoids a per-group per-row .map type sniff
-                use_ordinal = col in ordinal_cols
-            else:
-                use_ordinal = (
-                    not pd.api.types.is_numeric_dtype(pdf[col])
-                    and not pdf[col].map(
-                        lambda v: v is None or isinstance(v, (int, float))
-                    ).all())
-            if use_ordinal:
-                # string/date columns: ordinal-encode (sorted order ==
-                # lexicographic/ISO order) then reuse the numeric
-                # sparse-table machinery (MinUdafDef<StringRef>)
-                out[alias] = ordered_min_max(
-                    pdf, col, cond, f, idx_e, lo, hi, E, anchored)
+            t = col(c).type
+            if pa.types.is_string(t) or pa.types.is_large_string(t) \
+                    or pa.types.is_date(t) or pa.types.is_timestamp(t):
+                # string/date columns: native-order codes through the
+                # numeric sparse-table machinery (MinUdafDef<StringRef>)
+                codes, uniq = _ranked(col(c))
+                put(alias, ordered_min_max(
+                    codes[order], uniq, None if cond is None else truth(cond),
+                    f, idx_e, lo, hi, E, anchored))
                 continue
-            x, x_e, nn = numeric(col)
-            if cond is not None:
-                cm = pdf[cond].fillna(False).to_numpy(bool)[idx_e]
-                m = nn & cm
-            else:
-                m = nn
+            v, cm = valid(c), truth(cond)
+            m = v[idx_e] & cm[idx_e]
+            ok = anchored & v[E] & cm[E]
             op = np.minimum if f.startswith("min") else np.maximum
-            sv, ok = self_vals(col, cond)
-            if pdf[col].dtype == np.int64:
-                # int64-exact path: a non-null int64 column keeps
-                # integer comparisons — the float64 path collapses
-                # adjacent values past 2^53 (same reason agg_sum_int
-                # exists)
-                xi = pdf[col].to_numpy(np.int64)
+            if pa.types.is_integer(t):
+                # integer comparisons: float64 collapses adjacent values
+                # past 2^53 (same reason agg_sum_int exists)
+                x = _ints(col(c))[order]
                 fill = np.iinfo(np.int64).max if f.startswith("min") \
                     else np.iinfo(np.int64).min
-                st = _SparseTable(np.where(m, xi[idx_e], fill), op,
-                                  identity=fill)
-                vals = st.query(lo, hi)
-                vals = np.where(
-                    ok, op(vals, np.where(ok, xi[E], fill)), vals)
             else:
+                x = numeric(c)[0]
                 fill = np.inf if f.startswith("min") else -np.inf
-                st = _SparseTable(np.where(m, x_e, fill), op)
-                vals = st.query(lo, hi)
-                vals = np.where(
-                    ok, op(vals, np.where(np.isnan(sv), fill, sv)), vals)
+            st = _SparseTable(np.where(m, x[idx_e], fill), op, identity=fill)
+            vals = st.query(lo, hi)
+            vals = np.where(ok, op(vals, np.where(ok, x[E], fill)), vals)
             # empty/all-null frame → NULL, never NaN: Min/MaxUdafDef's
             # output flag stays unset when Update never ran (avg differs:
             # 0/0 emits a double NaN — fz_ddl/test_myhug.yaml pins
-            # max=NULL vs avg=NaN over the same empty frame). Nullable
-            # arrays keep the NULL distinction through Arrow — built
-            # only when an empty frame actually occurred; the common
-            # case stays a plain ndarray.
-            cand = vals == fill
-            if cand.any():
-                # confirm TRUE emptiness by frame count: a frame whose
-                # genuine extremum EQUALS the sentinel (±inf doubles,
-                # int64 domain edges) must keep its value, not NULL
-                pcm = _prefix(m.astype(np.float64))
-                cnt = pcm[hi] - pcm[lo] + ok.astype(np.float64)
-                empty = cand & (cnt == 0)
-            else:
-                empty = cand
+            # max=NULL vs avg=NaN over the same empty frame). A frame
+            # whose genuine extremum EQUALS the sentinel (±inf doubles,
+            # int64 domain edges) keeps its value: emptiness is
+            # confirmed by the frame count.
+            empty = vals == fill
             if empty.any():
-                res = pd.array(vals, dtype="Int64"
-                               if vals.dtype == np.int64 else "Float64")
-                res[empty] = pd.NA
-                out[alias] = res
-            else:
-                out[alias] = vals
+                pcm = _prefix(m.astype(np.float64))
+                empty &= pcm[hi] - pcm[lo] + ok == 0
+            put(alias, vals, empty)
         elif f == "first_value":
             # first_value = newest FRAME row (frame-bound, end-bound
             # exclusions apply — github.com/4paradigm/OpenMLDB#1587,
             # test_window.yaml id 33)
-            raw = pdf[col].to_numpy()
-            at_current = spec.end_delta == 0 and not spec.end_open
-            res = pd.Series([None] * len(E), dtype=object)
-            if at_current:
-                res[:] = raw[E]
+            if spec.end_delta == 0 and not spec.end_open:
+                put(alias, pick(c, E))
             else:
                 pos = hi - 1
-                valid = (pos >= lo) & (pos < hi)
-                res[valid] = raw[idx_e[pos[valid]]]
-            out[alias] = res
+                put(alias, pick(c, pos, pos >= lo, via=idx_e))
         elif f in ("lag", "at"):
             # lag/at(k): k-th row back from the CURRENT row's position in
             # the partition-ordered buffer, bounded by the partition
@@ -804,13 +806,10 @@ def group_window_features(
             # (test_window.yaml ids 36-37; test_window_union.yaml id 19
             # pins the virtual anchor through INSTANCE_NOT_IN_WINDOW).
             k = int(agg.param or 0)
-            raw = pdf[col].to_numpy()
-            res = pd.Series([None] * len(E), dtype=object)
             if k == 0:
                 # lag(0) = the current row itself, always (also under
                 # INW / EXCLUDE CURRENT_TIME, where it is not buffered)
-                res[:] = raw[E]
-                out[alias] = res
+                put(alias, pick(c, E))
                 continue
             if spec.exclude_current_time:
                 # same-ts rows sit in the current-history buffer, not
@@ -828,114 +827,78 @@ def group_window_features(
                 buf_lo = np.maximum(buf_end - spec.max_size, 0)
             else:
                 buf_lo = 0
-            valid = (pos >= 0) & (pos >= buf_lo) & (pos < buf_end)
-            res[valid] = raw[idx_e[pos[valid]]]
-            out[alias] = res
+            ok = (pos >= 0) & (pos >= buf_lo) & (pos < buf_end)
+            put(alias, pick(c, pos, ok, via=idx_e))
         elif f in ("distinct_count", "top_n_frequency", "top1_ratio"):
-            # One-hot prefix-sum over factorized categories: counts for all
-            # emit frames in two numpy ops (categorical cardinality in
-            # feature data is small; guarded fallback below).
-            series = None
-            if f == "distinct_count" and pdf[col].isna().any():
+            # One-hot prefix-sum over native-order categories: counts for
+            # all emit frames in two numpy ops (categorical cardinality
+            # in feature data is small).
+            codes, uniq = _ranked(col(c))
+            u = len(uniq)
+            if f == "distinct_count" and col(c).null_count:
                 # the reference's DistinctCountDef takes a NON-nullable T
                 # (default_udf_library.cc:237-272): a NULL row inserts
-                # the type's default value (0 / "") into the set, so
-                # nulls count as one distinct default-valued entry
-                s = pdf[col]
-                if agg.val_type == "bool" or \
-                        pd.api.types.is_bool_dtype(s):
-                    series = s.fillna(False)
-                elif pd.api.types.is_datetime64_any_dtype(s):
-                    series = s.fillna(pd.Timestamp(0))
-                elif pd.api.types.is_numeric_dtype(s):
-                    series = s.fillna(0)
-                else:
-                    series = s.fillna("")
-            counts, uniq = cat_counts(pdf, col, None, idx_e, lo, hi, E,
-                                      anchored,
-                                      fmt=typed_formatter(agg.val_type),
-                                      series=series)
+                # the type's default value (0 / "" / false / epoch) into
+                # the set, so nulls count as one default-valued entry
+                dflt = _default(uniq.type)
+                j = -1 if dflt is None else pc.index(uniq, dflt).as_py()
+                codes = np.where(codes >= 0, codes, j if j >= 0 else u)
+                u += j < 0
+            counts = cat_counts(codes[order], u, idx_e, lo, hi, E, anchored)
             if f == "distinct_count":
-                out[alias] = (counts > 0).sum(axis=1).astype(np.float64)
+                put(alias, (counts > 0).sum(axis=1))
             elif f == "top1_ratio":
                 # empty/all-null frame → 0.0, not NULL
                 # (FZTop1Ratio::Output, feature_zero_def.cc:418-421;
                 # test_feature_zero_function.yaml id 3 row 4)
                 tot = counts.sum(axis=1)
-                out[alias] = np.where(
-                    tot > 0, counts.max(axis=1) / np.maximum(tot, 1), 0.0
-                )
+                put(alias, np.where(
+                    tot > 0, counts.max(axis=1, initial=0)
+                    / np.maximum(tot, 1), 0.0))
             else:
-                k = int(agg.param or 1)
                 frame_n = hi - lo + anchored.astype(np.int64)
-                out[alias] = topn_freq_strings(counts, uniq, k, frame_n)
+                put(alias, topn_freq_strings(
+                    counts, _labels(uniq, typed_formatter(agg.val_type)),
+                    int(agg.param or 1), frame_n))
         elif f == "top":
             k = int(agg.param or 1)
             tfmt = typed_formatter(agg.val_type)
-            x, x_e, nn = numeric(col)
-            xv = np.where(nn, x_e, np.nan)
-            sv, ok = self_vals(col, None)
+            _, xv, _ = numeric(c)
+            sv, ok = self_vals(c, None)
             res = []
             for j in range(len(E)):
                 fr = xv[lo[j]:hi[j]]
                 fr = fr[~np.isnan(fr)]
-                if anchored[j] and ok[j]:
+                if ok[j]:
                     fr = np.append(fr, sv[j])
                 if len(fr) > k:
                     fr = fr[np.argpartition(fr, len(fr) - k)[len(fr) - k:]]
                 res.append(",".join(tfmt(v) for v in np.sort(fr)[::-1]))
-            out[alias] = res
+            put(alias, res)
         elif f in ("window_split", "window_split_by_key",
                    "window_split_by_value"):
             # fz_window_split family + fz_join (feature_zero_def.cc:
             # FZStringOpsDef::UpdateSplit/UpdateSplitByKey/UpdateSplitByValue,
             # :181-280): per frame row (newest first — the HistoryWindow
             # iterator order), split and append parts; emit joined string.
-            out[alias] = window_split_strings(
-                pdf, col, f,
+            put(alias, window_split_strings(
+                col(c).take(pa.array(order)).to_pylist(), f,
                 "," if agg.delim is None else agg.delim,
                 agg.kv_delim, agg.sep,
-                idx_e, lo, hi, E, anchored, mode=agg.param)
+                idx_e, lo, hi, E, anchored, mode=agg.param))
         elif f.endswith("_cate") or f.endswith("_cate_where"):
             base = f.split("_cate")[0].replace("top_n_key_", "")
-            cond = agg.cond if f.endswith("_where") else None
-            top_n = int(agg.param) if f.startswith("top_n_key_") else None
-            out[alias] = cate_agg_strings(
-                pdf, agg.cate, col, cond, base, idx_e, lo, hi, E, anchored,
-                numeric, top_n=top_n,
-                key_fmt=typed_formatter(agg.cate_type),
+            codes, uniq = _ranked(col(agg.cate))
+            put(alias, cate_agg_strings(
+                codes[order], _labels(uniq, typed_formatter(agg.cate_type)),
+                numeric(c)[0], None if cond is None else truth(cond), base,
+                idx_e, lo, hi, E, anchored,
+                top_n=int(agg.param) if f.startswith("top_n_key_") else None,
                 val_fmt=typed_formatter(agg.val_type)
-                if agg.val_type else None,
-            )
+                if agg.val_type else None))
         else:  # pragma: no cover
             raise ValueError(f"unhandled agg func {f}")
 
-    if out_dtypes:
-        for c, dt in out_dtypes.items():
-            if c in out.columns:
-                if isinstance(out[c].dtype, pd.Float64Dtype):
-                    # NULL-carrying numeric (empty-frame min/max): cast
-                    # to the nullable counterpart so NA survives the
-                    # astype (plain float64 would fold NA back to NaN)
-                    d = str(dt)
-                    if d.startswith(("int", "float")):
-                        dt = d.capitalize()
-                d = str(dt)
-                if d.startswith("int") and str(out[c].dtype) == "float64":
-                    if np.isfinite(out[c].to_numpy()).all():
-                        # integer result from the float64 accumulator:
-                        # cast through int64 so narrow widths TRUNCATE
-                        # mod 2^N — the reference's C wraparound for sum
-                        # overflow (float64→int32 directly is UB for
-                        # out-of-range values)
-                        out[c] = out[c].astype("int64").astype(d)
-                    else:
-                        # NULL-carrying min/max: NaN → NA via the
-                        # nullable counterpart
-                        out[c] = out[c].astype(d.capitalize())
-                    continue
-                try:
-                    out[c] = out[c].astype(dt)
-                except (TypeError, ValueError):
-                    pass
-    return out
+    return pa.Table.from_arrays(
+        [_arrow(pick(c, E), types[c]) for c in keep_cols]
+        + [out[a.alias] for a in aggs], schema=schema)

@@ -15,6 +15,18 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 
 
+# Physical plan nodes that run Python workers (Spark 4.1 exec names). A
+# plan without any of them runs entirely in the JVM.
+PYTHON_NODES = (
+    "FlatMapGroupsInArrow", "FlatMapGroupsInPandas",
+    "FlatMapGroupsInPandasWithState", "FlatMapCoGroupsInArrow",
+    "FlatMapCoGroupsInPandas", "MapInArrow", "MapInPandas",
+    "ArrowEvalPython", "BatchEvalPython", "ArrowWindowPython",
+    "ArrowAggregatePython", "ArrowEvalPythonUDTF", "BatchEvalPythonUDTF",
+)
+_PYTHON_NODE = re.compile(r"\b(?:%s)\b" % "|".join(PYTHON_NODES))
+
+
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     jvm = df.sparkSession._jvm
     return jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
@@ -24,7 +36,7 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
 class PlanStats:
     exchanges: int
     broadcast_exchanges: int
-    pandas_stages: int
+    python_stages: int
     scans: int
     pushed_filters: list[str]
     wholestage_codegen: bool
@@ -32,7 +44,7 @@ class PlanStats:
     def summary(self) -> str:
         return (
             f"shuffles={self.exchanges} broadcasts={self.broadcast_exchanges} "
-            f"python_stages={self.pandas_stages} scans={self.scans} "
+            f"python_stages={self.python_stages} scans={self.scans} "
             f"codegen={self.wholestage_codegen} "
             f"pushed={len(self.pushed_filters)}"
         )
@@ -50,9 +62,7 @@ def plan_stats(df: DataFrame) -> PlanStats:
             r"(?i)Exchange (?:hashpartitioning|rangepartitioning|"
             r"SinglePartition|roundrobinpartitioning)", simple)),
         broadcast_exchanges=simple.count("BroadcastExchange"),
-        pandas_stages=sum(simple.count(s) for s in
-                          ("FlatMapGroupsInPandas", "MapInPandas",
-                           "FlatMapCoGroupsInPandas", "ArrowEvalPython")),
+        python_stages=len(_PYTHON_NODE.findall(simple)),
         # 'FileScan parquet' contains 'Scan parquet' — count with a
         # boundary so a v1 scan isn't double-counted
         scans=len(re.findall(r"(?:File|Batch)?Scan parquet|FileScan\b",

@@ -9,7 +9,7 @@ The offline analog at 100 TB is a bucketed+sorted file layout:
     df.write.bucketBy(N, *keys).sortBy(ts).saveAsTable(name)
 
 Every downstream operator that clusters on the same keys — the window
-kernel's ``groupBy(keys).applyInPandas``, the as-of join's running
+kernel's ``groupBy(keys).applyInArrow``, the as-of join's running
 window, plain joins/aggregations on the keys — then reads a scan whose
 HashPartitioning already satisfies its ClusteredDistribution, and
 Catalyst's EnsureRequirements inserts NO shuffle: the single exchange

@@ -8,6 +8,7 @@ import pyspark.sql.functions as F
 from openmldb_spark.plans.specs import Agg, WindowSpec
 from openmldb_spark.operators.request import request_features
 from openmldb_spark.operators.window import window_agg
+from openmldb_spark.plans.explain import PYTHON_NODES
 from openmldb_spark.transcripts import transcripts_df
 
 KEY = ["conv_id", "turn_idx"]
@@ -240,7 +241,6 @@ def test_deployment_request_starts_no_job_before_collect(spark, tmp_path):
         sc._jsc.clearJobGroup()
     plan = executed_plan(out)
     assert "LocalTableScan" in plan
-    for node in ("Scan ExistingRDD", "LogicalRDD", "FlatMapGroupsInPandas",
-                 "ArrowEvalPython", "BatchEvalPython"):
+    for node in ("Scan ExistingRDD", "LogicalRDD", *PYTHON_NODES):
         assert node not in plan, node
     assert len(out.collect()) == len(REQ_ROWS)

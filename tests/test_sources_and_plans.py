@@ -10,6 +10,7 @@ import pyspark.sql.functions as F
 from openmldb_spark.plans.specs import Agg, LastJoinSpec, WindowSpec
 from openmldb_spark.operators.lastjoin import last_join
 from openmldb_spark.operators.window import window_agg
+from openmldb_spark.plans.explain import PYTHON_NODES
 
 from conftest import executed_plan
 
@@ -96,7 +97,8 @@ def test_window_kernel_single_exchange(spark, sf_dir):
     plan = _plan(out, "simple")
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 1, plan
-    assert "FlatMapGroupsInPandas" in plan or "MapInPandas" in plan
+    assert "FlatMapGroupsInArrow" in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
 
 
 def test_lowered_window_plan_guard(spark, tmp_path):
@@ -132,8 +134,7 @@ def test_lowered_window_plan_guard(spark, tmp_path):
     for kw in eligible:
         plan = executed_plan(window_agg(t, keep_cols=["turn_idx"],
                                         tier="kernel", **kw))
-        for node in ("FlatMapGroupsInPandas", "ArrowEvalPython",
-                     "BatchEvalPython"):
+        for node in PYTHON_NODES:
             assert node not in plan, plan
         assert plan.count("Exchange hashpartitioning") == 1, plan
         frames = re.findall(r"specifiedwindowframe\((\w+), ([^,]+),", plan)
@@ -163,7 +164,7 @@ def test_lowered_window_plan_guard(spark, tmp_path):
     for sp, ag in ineligible:
         plan = executed_plan(window_agg(t, sp, ag, keep_cols=["turn_idx"],
                                         tier="kernel"))
-        assert "FlatMapGroupsInPandas" in plan, (sp, ag)
+        assert "FlatMapGroupsInArrow" in plan, (sp, ag)
 
 
 def test_builtin_window_single_exchange_codegen(spark, sf_dir):
@@ -210,8 +211,7 @@ def test_asof_kernel_one_exchange_no_python(spark, tmp_path):
         [(f"c{i % 5}", i * 7, f"v{i}") for i in range(40)],
         "conv_id string, ts_ms bigint, cfg string")
     plan = executed_plan(asof_join_kernel(left, right, on=["conv_id"]))
-    for node in ("FlatMapCoGroupsInPandas", "ArrowEvalPython",
-                 "BatchEvalPython"):
+    for node in PYTHON_NODES:
         assert node not in plan, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
@@ -240,7 +240,7 @@ def test_plan_stats_utility(spark, sf_dir):
         "l_returnflag").count()
     st = plan_stats(q)
     assert st.exchanges >= 1 and st.scans >= 1
-    assert st.pandas_stages == 0
+    assert st.python_stages == 0
     assert any("l_shipdate" in p for p in st.pushed_filters)
     assert "shuffles=" in st.summary()
 

@@ -1,4 +1,5 @@
-"""Golden tests for the numpy frame kernel (no Spark needed).
+"""Golden tests for the numpy frame kernel (no Spark needed, but for the
+end-to-end BIGINT pin at the bottom).
 
 Cases ported verbatim from the reference yaml corpus:
 - cases/function/window/test_window.yaml id 33/34/35 (first_value over
@@ -15,7 +16,7 @@ import pandas as pd
 import pytest
 
 from openmldb_spark.plans.specs import Agg, WindowSpec
-from openmldb_spark.operators.window_kernel import group_window_features
+from conftest import run_window_kernel
 from oracle import oracle_agg
 
 
@@ -24,7 +25,7 @@ def run(rows, spec, aggs, keep=("id",)):
     if "__primary" not in pdf.columns:
         pdf["__primary"] = 1
     pdf["__expanded"] = 0
-    out = group_window_features(pdf, spec, aggs, list(keep))
+    out = run_window_kernel(pdf, spec, aggs, list(keep))
     return out.sort_values(list(keep)).reset_index(drop=True)
 
 
@@ -500,3 +501,110 @@ def test_string_date_min_max():
                                  "2020-05-01"]
     assert list(out["dmax"]) == ["2020-05-03", "2020-05-03", "2020-05-03",
                                  "2020-05-03"]
+
+
+# ---- the Arrow boundary: values and types the pandas one lost ----
+def _arrow_group(**cols):
+    import pyarrow as pa
+    n = len(next(iter(cols.values())))
+    return pa.table({"id": pa.array(range(n), pa.int32()),
+                     "__ord": pa.array([1000 * i for i in range(n)],
+                                       pa.int64()),
+                     "__primary": pa.array([1] * n, pa.int32()), **cols})
+
+
+def test_arrow_nan_reads_as_null():
+    # a NaN arrives as a value, not a NULL, through Arrow; the kernel
+    # still reads it as NULL, like the JVM lowering (COVERAGE §2.5)
+    import pyarrow as pa
+    t = _arrow_group(d=pa.array([1.0, float("nan"), 4.0]))
+    spec = WindowSpec(partition_by=["g"], frame="rows", preceding=10)
+    out = run_window_kernel(t, spec, [
+        Agg("count", "d", "c"), Agg("sum", "d", "s"), Agg("avg", "d", "a"),
+        Agg("max", "d", "mx"), Agg("lag", "d", "l1", param=1),
+        Agg("distinct_count", "d", "dc")], ["id", "d"], arrow=True)
+    assert out.column("d").to_pylist() == [1.0, None, 4.0]
+    assert out.column("c").to_pylist() == [1, 1, 2]
+    assert out.column("s").to_pylist() == [1.0, 1.0, 5.0]
+    assert out.column("a").to_pylist() == [1.0, 1.0, 2.5]
+    assert out.column("mx").to_pylist() == [1.0, 1.0, 4.0]
+    assert out.column("l1").to_pylist() == [None, 1.0, None]
+    # NULL counts as the default 0.0, a value of its own here
+    assert out.column("dc").to_pylist() == [1, 2, 3]
+
+
+def test_arrow_empty_frame_avg_nan_min_max_null():
+    # empty frame: avg is 0/0 = a real NaN, min/max are NULL, sum is 0
+    import math
+    import pyarrow as pa
+    t = _arrow_group(v=pa.array([2, 5, 1], pa.int32()),
+                     f=pa.array([2.5, None, 1.5], pa.float64()))
+    spec = WindowSpec(partition_by=["g"], frame="rows", preceding=2,
+                      end_offset=1)
+    out = run_window_kernel(t, spec, [
+        Agg("avg", "v", "a"), Agg("min", "v", "mn"), Agg("max", "f", "mx"),
+        Agg("sum", "v", "s")], ["id"], arrow=True)
+    a = out.column("a")
+    assert a.null_count == 0 and math.isnan(a[0].as_py())
+    assert a.to_pylist()[1:] == [2.0, 3.5]
+    assert out.column("mn").to_pylist() == [None, 2, 2]
+    assert out.column("mx").to_pylist() == [None, 2.5, 2.5]
+    assert out.column("s").to_pylist() == [0, 2, 7]
+
+
+def test_arrow_output_types_kept():
+    # float32 sums stay float32, DATE min/max stay DATE, TIMESTAMP
+    # lag/first_value stay TIMESTAMP (Arrow take, no object round trip)
+    import datetime
+    import pyarrow as pa
+    d = [datetime.date(2020, 5, 3), None, datetime.date(2020, 5, 1)]
+    ts = [datetime.datetime(2021, 1, 1, 0, 0, i) for i in range(3)]
+    t = _arrow_group(f=pa.array([0.5, None, 0.25], pa.float32()),
+                     d=pa.array(d, pa.date32()),
+                     t=pa.array(ts, pa.timestamp("us", tz="UTC")))
+    spec = WindowSpec(partition_by=["g"], frame="rows", preceding=10)
+    out = run_window_kernel(t, spec, [
+        Agg("sum", "f", "s"), Agg("min", "d", "dmin"),
+        Agg("max", "d", "dmax"), Agg("lag", "t", "tl", param=1),
+        Agg("first_value", "t", "tf")], ["id"], arrow=True)
+    assert out.schema.field("s").type == pa.float32()
+    assert out.column("s").to_pylist() == [0.5, 0.5, 0.75]
+    assert out.schema.field("dmin").type == pa.date32()
+    assert out.column("dmin").to_pylist() == [d[0], d[0], d[2]]
+    assert out.column("dmax").to_pylist() == [d[0], d[0], d[0]]
+    assert out.schema.field("tl").type == pa.timestamp("us", tz="UTC")
+    utc = datetime.timezone.utc
+    assert out.column("tl").to_pylist() == [
+        None, ts[0].replace(tzinfo=utc), ts[1].replace(tzinfo=utc)]
+    assert out.column("tf").to_pylist() == [x.replace(tzinfo=utc)
+                                            for x in ts]
+
+
+def test_bigint_past_2_53_exact_with_nulls(spark):
+    """A BIGINT column holding a NULL used to reach the kernel as
+    float64, which rounds values past 2^53: the kept column and max,
+    min, lag, first_value and the ROWS sum all came back rounded."""
+    import pyspark.sql.types as T
+    from openmldb_spark.operators.window import window_agg
+    from openmldb_spark.sources._local import local_rows
+
+    big = 2**53
+    vals = [big + 1, None, big + 3, big + 5]
+    df = local_rows(spark, [(i, "g", 1000 * (i + 1), v)
+                            for i, v in enumerate(vals)],
+                    "id int, k string, ts bigint, v bigint")
+    spec = WindowSpec(partition_by=["k"], order_by="ts", frame="rows",
+                      preceding=2, tiebreak=("id",))
+    out = window_agg(df, spec, [
+        Agg("lag", "v", "lag1", param=1), Agg("first_value", "v", "fv"),
+        Agg("max", "v", "mx"), Agg("min", "v", "mn"),
+        Agg("sum", "v", "sm")], keep_cols=["id", "v"], tier="kernel")
+    assert all(isinstance(f.dataType, (T.IntegerType, T.LongType))
+               for f in out.schema.fields)
+    got = [tuple(r) for r in out.orderBy("id").collect()]
+    assert got == [
+        (0, big + 1, None, big + 1, big + 1, big + 1, big + 1),
+        (1, None, big + 1, None, big + 1, big + 1, big + 1),
+        (2, big + 3, None, big + 3, big + 3, big + 1, 2 * big + 4),
+        (3, big + 5, big + 3, big + 5, big + 5, big + 3, 2 * big + 8),
+    ]

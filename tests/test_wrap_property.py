@@ -3,7 +3,7 @@
 The reference's SumUdafDef accumulates in the input's C type and wraps
 on overflow (templates<T,T,T>, default_udf_library.cc:106-120; the
 arithmetic/window corpora value-check wrapped results). Our kernel
-accumulates in float64/int64 and truncates the result mod 2^N — valid
+accumulates in int64 and truncates the result mod 2^N — valid
 because wrap-addition is associative mod 2^N. This test drives random
 int32/int16 frames (values spanning the full domain, so intermediate
 and final overflow both occur) through the kernel and compares against
@@ -16,9 +16,8 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from openmldb_spark.operators.window_kernel import (EXPANDED, ORD, PRIMARY,
-                                                    UPOS,
-                                                    group_window_features)
+from conftest import run_window_kernel
+from openmldb_spark.operators.window_kernel import EXPANDED, ORD, PRIMARY, UPOS
 from openmldb_spark.plans.specs import Agg, WindowSpec
 
 
@@ -40,7 +39,7 @@ def _oracle_sums(vals, rows_preceding, bits):
     return out
 
 
-def _run_kernel(vals, rows_preceding, dtype, out_dtype):
+def _run_kernel(vals, rows_preceding, dtype):
     n = len(vals)
     pdf = pd.DataFrame({
         "k": ["g"] * n,
@@ -53,8 +52,7 @@ def _run_kernel(vals, rows_preceding, dtype, out_dtype):
     })
     spec = WindowSpec(partition_by=("k",), order_by="__ord",
                       frame="rows", preceding=rows_preceding, end_offset=0)
-    out = group_window_features(
-        pdf, spec, [Agg("sum", "v", "s")], ["__rid"], {"s": out_dtype})
+    out = run_window_kernel(pdf, spec, [Agg("sum", "v", "s")], ["__rid"])
     return out.sort_values("__rid")["s"].tolist()
 
 
@@ -64,7 +62,7 @@ def _run_kernel(vals, rows_preceding, dtype, out_dtype):
                 min_size=1, max_size=40),
        st.integers(0, 6))
 def test_int32_window_sum_wraps_like_reference(vals, prec):
-    got = _run_kernel(vals, prec, "Int32", "int32")
+    got = _run_kernel(vals, prec, "Int32")
     want = _oracle_sums(vals, prec, 32)
     assert got == want, (vals, prec, got, want)
 
@@ -75,7 +73,7 @@ def test_int32_window_sum_wraps_like_reference(vals, prec):
                 min_size=1, max_size=40),
        st.integers(0, 6))
 def test_int16_window_sum_wraps_like_reference(vals, prec):
-    got = _run_kernel(vals, prec, "Int16", "int16")
+    got = _run_kernel(vals, prec, "Int16")
     want = _oracle_sums(vals, prec, 16)
     assert got == want, (vals, prec, got, want)
 
@@ -89,7 +87,7 @@ def test_int64_window_sum_wraps_like_reference(vals, prec):
     """Full-domain int64 values: prefix sums blow past 2^53 immediately,
     so this pins the int64 accumulator path (the float64 prefix path
     loses low-order bits and fails this)."""
-    got = _run_kernel(vals, prec, "Int64", "int64")
+    got = _run_kernel(vals, prec, "Int64")
     want = _oracle_sums(vals, prec, 64)
     assert got == want, (vals, prec, got, want)
 
@@ -101,7 +99,7 @@ def test_int32_sum_exact_when_group_prefix_exceeds_2_53():
     came out wrong; the int64 accumulator path must stay exact.
     5M rows of INT32_MAX -> prefix ~1.07e16 > 2^53 ~ 9.0e15."""
     n, prec, v = 5_000_000, 3, 2**31 - 1
-    got = _run_kernel([v] * n, prec, "int32", "int32")
+    got = _run_kernel([v] * n, prec, "int32")
     # analytic per-add-wrap oracle: frame holds min(i, prec)+1 copies
     m = 1 << 32
     wrapped = [((k * v) % m) - m if ((k * v) % m) >= m // 2

@@ -26,13 +26,12 @@ from datetime import date, datetime
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import yaml
 
 from openmldb_spark.plans.specs import Agg, KERNEL_AGG_FUNCS, WindowSpec
-from openmldb_spark.operators.window_kernel import (EXPANDED, ORD, PRIMARY,
-                                                    UPOS,
-                                                    group_window_features)
-from conftest import corpus_path
+from openmldb_spark.operators.window_kernel import EXPANDED, ORD, PRIMARY, UPOS
+from conftest import corpus_path, run_window_kernel
 
 
 class Unsupported(Exception):
@@ -44,6 +43,14 @@ _TYPES = {
     "bigint": "int64", "int64": "int64", "float": "float32",
     "double": "float64", "string": "object", "bool": "bool",
     "timestamp": "int64", "date": "object",
+}
+
+
+_ARROW_TYPES = {
+    "int": pa.int32(), "int32": pa.int32(), "smallint": pa.int16(),
+    "int16": pa.int16(), "bigint": pa.int64(), "int64": pa.int64(),
+    "timestamp": pa.int64(), "float": pa.float32(), "double": pa.float64(),
+    "string": pa.string(), "date": pa.string(), "bool": pa.bool_(),
 }
 
 
@@ -136,21 +143,17 @@ def _run_window(pdf0, types0, inputs, spec, union_idx, aggs) -> pd.DataFrame:
     work = work[work[ORD].notna() & (work[ORD] >= 0)].copy()
     work[ORD] = work[ORD].astype("int64")
 
-    # reference T→T sum result types: narrow int sums truncate mod 2^N
-    # (C wraparound), float sums stay float32 — mirror window._agg_field
-    _sum_dtypes = {"int": "int32", "int32": "int32", "smallint": "int16",
-                   "int16": "int16", "bigint": "int64", "int64": "int64",
-                   "float": "float32"}
-    out_dtypes = {a.alias: _sum_dtypes[types0[a.col]]
-                  for a in aggs
-                  if a.func in ("sum", "sum_where")
-                  and types0.get(a.col) in _sum_dtypes}
+    # the columns' logical types as Arrow types: the result types follow
+    # window._agg_field (narrow int sums truncate mod 2^N, float sums
+    # stay float32)
+    types = {c: _ARROW_TYPES[t] for c, t in types0.items()
+             if t in _ARROW_TYPES}
 
     outs = []
     for _, grp in work.groupby(list(spec.partition_by), dropna=False,
                                sort=False):
-        outs.append(group_window_features(
-            grp.reset_index(drop=True), spec, aggs, [_RID], out_dtypes))
+        outs.append(run_window_kernel(
+            grp.reset_index(drop=True), spec, aggs, [_RID], types))
     if not outs:
         return pd.DataFrame(columns=[_RID] + [a.alias for a in aggs])
     return pd.concat(outs, ignore_index=True)
