@@ -156,12 +156,11 @@ def _fill_agg_types(a: Agg, in_fields: dict) -> Agg:
     return dataclasses.replace(a, val_type=val_type, cate_type=cate_type)
 
 
-# numeric reductions AND positional picks over TimestampType run on the
-# int64-ms view: the reference's timestamps are int64 ms, and the
-# kernel's raw-object lag/at output would not convert back through Arrow
+# numeric reductions over TimestampType run on the int64-ms view: the
+# reference's timestamps are int64 ms (positional picks — lag/at/
+# first_value — take the timestamps themselves)
 _MS_AGG_FUNCS = {"sum", "avg", "sum_where", "avg_where",
                  "min", "max", "min_where", "max_where",
-                 "lag", "at", "first_value",
                  # top over Timestamp is legal in the reference (TopKDef
                  # args_in, default_udf_library.cc:2412) — without the
                  # ms view the kernel would read NANOSECONDS and the ms
@@ -498,12 +497,11 @@ def window_agg(
         kernel, schema=out_schema).select(*keep_cols,
                                           *[a.alias for a in aggs])
     # T→T result types over TIMESTAMP inputs: the ms-view fed the kernel
-    # int64 milliseconds; min/max/lag/at/first_value/sum of a timestamp
-    # are timestamps in the reference (MaxUdafDef etc. are T→T —
-    # restful get_procedure case 7 pins max(c7)=timestamp). avg stays
-    # double, count long.
+    # int64 milliseconds; min/max/sum of a timestamp are timestamps in
+    # the reference (MaxUdafDef etc. are T→T — restful get_procedure
+    # case 7 pins max(c7)=timestamp). avg stays double, count long.
     _TS_PRESERVING = {"min", "max", "min_where", "max_where",
-                      "lag", "at", "first_value", "sum", "sum_where"}
+                      "sum", "sum_where"}
     for a in aggs:
         oc = a.col[5:] if a.col and a.col.startswith("__ms_") else a.col
         if a.func in _TS_PRESERVING and oc in ts_cols:

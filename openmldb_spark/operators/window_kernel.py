@@ -584,7 +584,7 @@ def group_window_features(
     """Compute all window aggregates of one group in one pass.
 
     ``table`` must contain ORD (int64), PRIMARY plus every column an agg
-    references (UPOS and EXPANDED default to 0). Returns the emit rows
+    references; UPOS and EXPANDED read as 0 when absent. Returns the emit rows
     (primary & not expanded) as keep_cols + one column per agg alias,
     typed exactly as ``schema``. Computation runs on numpy views of the
     Arrow buffers; picked values (keep_cols, lag/at/first_value,
@@ -610,7 +610,7 @@ def group_window_features(
     # (test_window_union.yaml id 19). UPOS carries 0 for the primary and
     # -(i+1) for the i-th union table. NULL tiebreaks sort last.
     ts = _ints(col(ORD))
-    primary = flag(PRIMARY, 1)
+    primary = _ints(col(PRIMARY))
     order = np.lexsort([*(_sort_key(col(t)) for t in reversed(spec.tiebreak)),
                         primary, flag(UPOS, 0), ts])
     ts, primary = ts[order], primary[order]

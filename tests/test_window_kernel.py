@@ -250,8 +250,9 @@ def test_top_n_frequency_null_padding_and_numeric_keys():
 
 def test_all_null_key_group_pads_and_emits_empty():
     # a group whose key column is entirely NULL has no categories at all:
-    # top_n_frequency still pads a non-empty frame to k "NULL"s, and the
-    # *_cate family emits "" (no key present)
+    # top_n_frequency still pads a non-empty frame to k "NULL"s, the
+    # *_cate family emits "" (no key present), top1_ratio is 0.0 and
+    # distinct_count sees one default-valued entry
     rows = [
         dict(id=1, __ord=1000, v=1.0, t=None, c=True),
         dict(id=2, __ord=2000, v=2.0, t=None, c=True),
@@ -263,8 +264,12 @@ def test_all_null_key_group_pads_and_emits_empty():
         Agg("count_cate_where", "v", "cw", cond="c", cate="t"),
         Agg("top_n_key_avg_cate_where", "v", "ta", cond="c", cate="t",
             param=2),
+        Agg("top1_ratio", "t", "r1"),
+        Agg("distinct_count", "t", "dc"),
     ])
     assert list(out["topt"]) == ["NULL,NULL", "NULL,NULL"]
+    assert list(out["r1"]) == [0.0, 0.0]
+    assert list(out["dc"]) == [1, 1]
     assert list(out["sc"]) == ["", ""]
     assert list(out["cw"]) == ["", ""]
     assert list(out["ta"]) == ["", ""]
