@@ -1,15 +1,22 @@
-"""Checkpoint-resumable pipeline runner with per-partition lineage.
+"""Checkpoint-resumable pipeline runner with per-file lineage.
 
 Prior art: the reference's node-by-node HDFS-cached slow-run mode
-(SparkPlanner.slowRunWithHDFSCache, /root/reference/java/openmldb-batch/
-src/main/scala/com/_4paradigm/openmldb/batch/SparkPlanner.scala:289-325),
-generalized into a DAG of named stages:
+(SparkPlanner.slowRunWithHDFSCache, java/openmldb-batch/src/main/scala/
+com/_4paradigm/openmldb/batch/SparkPlanner.scala:289-325), generalized
+into a DAG of named stages:
 
 - Each stage's output is written once to ``<ckpt>/<stage>/data.parquet``
   with a ``manifest.json`` recording: a fingerprint of (stage code
-  version + upstream fingerprints + params), row count, wall time,
-  per-partition row counts (lineage — which shuffle partition produced
-  which rows), and the Spark conf that produced it.
+  version + upstream fingerprints + params), row count, data bytes, wall
+  time, the Spark schema, per-file lineage (each written ``part-*`` file,
+  whose name carries the write partition that produced it, with its rows
+  and bytes), and the Spark conf that produced it.
+- The ledger comes from the files the write left: one ``listStatus`` of
+  the stage directory and each part file's parquet footer (row count,
+  and the Spark schema under the key Spark's own inference reads). The
+  stage is re-read with that schema, so a computed stage launches only
+  the jobs of its own write, and a resumed stage, whose schema is in its
+  manifest, launches none.
 - On re-run, a stage whose fingerprint matches is loaded from parquet
   instead of recomputed; editing a stage (or any upstream) invalidates
   exactly its downstream cone. This is job-step resume on top of
@@ -31,9 +38,13 @@ import json
 import time
 from dataclasses import dataclass, field
 from collections.abc import Callable
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
-import pyspark.sql.functions as F
+from pyspark.sql.types import StructType
+
+# footer key-value entry holding the Spark schema of a Spark-written file
+SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
 
 
 def _fingerprint(*parts: str) -> str:
@@ -66,6 +77,34 @@ def _fs_read_text(spark: SparkSession, path: str) -> str | None:
                      .toByteArray(stream)).decode("utf-8")
     finally:
         stream.close()
+
+
+def _written_files(spark: SparkSession, path: str) -> tuple[list[dict], str | None]:
+    """The ``part-*`` files of a parquet directory, in name order, as
+    ``{"file", "rows", "bytes"}``, and the Spark schema JSON
+    of the first file's footer (None if it has none). One ``listStatus``
+    plus one footer read per file, all on the driver; no Spark job."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    fs, hpath = _hadoop_fs(spark, path)
+    parquet = jvm.org.apache.parquet.hadoop
+    files, schema = [], None
+    for st in fs.listStatus(hpath):
+        name = st.getPath().getName()
+        if not name.startswith("part-"):
+            continue
+        reader = parquet.ParquetFileReader.open(
+            parquet.util.HadoopInputFile.fromStatus(st, conf))
+        try:
+            rows = reader.getRecordCount()
+            if schema is None:
+                schema = (reader.getFooter().getFileMetaData()
+                          .getKeyValueMetaData().get(SPARK_SCHEMA_KEY))
+        finally:
+            reader.close()
+        files.append({"file": name, "rows": int(rows), "bytes": int(st.getLen())})
+    files.sort(key=lambda f: f["file"])
+    return files, schema
 
 
 def _fs_write_text(spark: SparkSession, path: str, text: str) -> None:
@@ -116,14 +155,20 @@ class CheckpointedPipeline:
         text = _fs_read_text(self.spark, mpath)
         return json.loads(text) if text is not None else None
 
-    def _partition_lineage(self, df: DataFrame) -> list[dict]:
-        rows = (
-            df.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .orderBy("pid")
-            .collect()
-        )
-        return [{"partition": int(r.pid), "rows": int(r.rows)} for r in rows]
+    def _read(self, dpath: str, schema: str | None) -> DataFrame:
+        # with the stored schema the read runs no inference job
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(json.loads(schema)))
+        return reader.parquet(dpath)
+
+    @cached_property
+    def _spark_conf(self) -> dict:
+        return {
+            k: v for k, v in self.spark.sparkContext.getConf().getAll()
+            if k.startswith("spark.sql") or k in
+            ("spark.master", "spark.app.name")
+        }
 
     # -- execution ---------------------------------------------------------
     def run(self, target: str) -> DataFrame:
@@ -139,7 +184,7 @@ class CheckpointedPipeline:
         man = self._load_manifest(target)
 
         if man is not None and man.get("fingerprint") == fp:
-            df = self.spark.read.parquet(dpath)
+            df = self._read(dpath, man.get("schema"))
             self._results[target] = df
             self.ledger.append({
                 "stage": target, "fingerprint": fp, "action": "resumed",
@@ -151,13 +196,12 @@ class CheckpointedPipeline:
         t0 = time.monotonic()
         out = st.fn(self.spark, *[self._results[d] for d in st.deps])
         out.write.mode("overwrite").parquet(dpath)
-        df = self.spark.read.parquet(dpath)
+        lineage, schema = _written_files(self.spark, dpath)
+        df = self._read(dpath, schema)
         dur = time.monotonic() - t0
 
-        lineage = self._partition_lineage(df)
         n_rows = sum(p["rows"] for p in lineage)
-        fs, hdpath = _hadoop_fs(self.spark, dpath)
-        ckpt_bytes = int(fs.getContentSummary(hdpath).getLength())
+        ckpt_bytes = sum(p["bytes"] for p in lineage)
         manifest = {
             "stage": target,
             "fingerprint": fp,
@@ -168,11 +212,8 @@ class CheckpointedPipeline:
             "bytes": ckpt_bytes,
             "duration_sec": round(dur, 3),
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "spark_conf": {
-                k: v for k, v in self.spark.sparkContext.getConf().getAll()
-                if k.startswith("spark.sql") or k in
-                ("spark.master", "spark.app.name")
-            },
+            "schema": schema,
+            "spark_conf": self._spark_conf,
         }
         _fs_write_text(self.spark, mpath, json.dumps(manifest, indent=1))
         self._results[target] = df
