@@ -12,8 +12,9 @@ exact-jaccard verify stage made final pairs match the oracle — which is
 why the correctness gate never caught it.)
 
 These tests pin (a) bit-exact equality with hashlib.md5 over the
-declared family, (b) stability across repeated constructions in one
-session, and (c) a source lint that rejects multi-parameter lambdas in
+declared family, and the production xxhash64 family to a frozen
+(shingle, seed) -> value fixture, (b) stability across repeated
+constructions in one session, and (c) a source lint that rejects multi-parameter lambdas in
 single-argument higher-order functions anywhere in the package, so the
 bug class cannot re-enter via another call site.
 """
@@ -43,6 +44,47 @@ def test_minhash_sigs_match_declared_md5_family(spark):
     exp = _py_reference_sigs(text, 8)
     got = minhash_signatures(df, "text", "doc_id", 8, 3, "md5").collect()[0]
     assert [getattr(got, f"sig{s}") for s in range(8)] == exp
+
+
+# Spark's xxhash64(shingle, seed): XXH64 of the UTF-8 shingle under seed
+# 42, then of the 4-byte little-endian seed under that hash, as a signed
+# long. Recorded from Spark and checked against an independent XXH64
+# implementation when frozen.
+XXHASH64_FIXTURE = {
+    ("the quick brown", 0): -7838997220450159862,
+    ("the quick brown", 1): -5074273988142836622,
+    ("the quick brown", 2): -7190716267515777504,
+    ("the quick brown", 3): -827268025671442449,
+    ("quick brown fox", 0): -9113649546742969215,
+    ("quick brown fox", 1): 6228094853259067376,
+    ("quick brown fox", 2): -3100053850509560024,
+    ("quick brown fox", 3): -3320006386205354214,
+    ("brown fox jumps", 0): -9213327934255662574,
+    ("brown fox jumps", 1): -3987386839905490186,
+    ("brown fox jumps", 2): 5707455461594659341,
+    ("brown fox jumps", 3): -4096110640180891065,
+}
+
+
+def test_minhash_xxhash64_sigs_match_frozen_fixture(spark):
+    """The xxhash64 family (minhash_lsh_fast, the CORRECTNESS row DuckDB
+    cannot check) is pinned value by value, and each signature is the
+    per-seed minimum over the document's shingles."""
+    import pyspark.sql.functions as F
+    from openmldb_spark.pipeline.dedup import _hash_expr, minhash_signatures
+    keys = list(XXHASH64_FIXTURE)
+    row = spark.range(1).select(*[
+        _hash_expr(F.lit(sh), seed, "xxhash64").alias(f"h{i}")
+        for i, (sh, seed) in enumerate(keys)]).first()
+    assert {k: row[f"h{i}"] for i, k in enumerate(keys)} == XXHASH64_FIXTURE
+
+    df = spark.createDataFrame([(1, "The quick, brown FOX jumps!")],
+                               "doc_id long, text string")
+    got = minhash_signatures(df, "text", "doc_id", 4, 3, "xxhash64").collect()[0]
+    assert sorted(got.shingles) == sorted({sh for sh, _ in keys})
+    assert [getattr(got, f"sig{s}") for s in range(4)] == [
+        min(v for (_, seed), v in XXHASH64_FIXTURE.items() if seed == s)
+        for s in range(4)]
 
 
 def test_minhash_sigs_stable_across_constructions(spark):
