@@ -147,6 +147,16 @@ def _request_rows(spark, rows, schema):
         for r in rows], schema)
 
 
+def _request_table_ref(sql: str) -> str:
+    """The table named by the first FROM outside string literals and
+    comments: a request query's main table."""
+    m = re.search(r"(?is)\bfrom\s+([`\w.]+)",
+                  sqllex.mask_literals(sqllex.strip_comments(sql)))
+    if not m:
+        raise DatabaseError("cannot find request table")
+    return m.group(1)
+
+
 def _lit(v) -> str:
     """Render one parameter as a SQL literal for hole substitution."""
     if v is None:
@@ -342,11 +352,8 @@ class Cursor:
         table (the reference's doRequestQuery)."""
         from openmldb_spark.sqlfe import run_sql_request
         sess = self._session()
-        m = re.search(r"(?is)\bfrom\s+([`\w.]+)", command)
-        if not m:
-            raise DatabaseError("cannot find request table")
         try:
-            t, main = self._resolve_table(m.group(1))
+            t, main = self._resolve_table(_request_table_ref(command))
             req = _request_rows(
                 sess.spark,
                 [tuple(parameters.get(f.name) for f in t.schema.fields)],
@@ -379,11 +386,8 @@ class Cursor:
         is row-wise identical, so it rides the same lowering)."""
         from openmldb_spark.sqlfe import run_sql_request
         sess = self._session()
-        m = re.search(r"(?is)\bfrom\s+([`\w.]+)", sql)
-        if not m:
-            raise DatabaseError("cannot find request table")
         try:
-            t, main = self._resolve_table(m.group(1))
+            t, main = self._resolve_table(_request_table_ref(sql))
             rows = []
             for row in parameters:
                 if isinstance(row, dict):

@@ -2,14 +2,12 @@
 
 Media payloads are opaque ``binary`` columns plus a typed metadata
 struct; decode / feature-extract / resize / frame-sample run as
-Arrow-batched ``mapInPandas`` stages. The image/audio codec libraries
-are not available in this environment, so the decode step is STUBBED:
-
-- ``decoder="fake"`` (default in tests): a deterministic byte-hash
-  pseudo-decoder so the full Spark plumbing — schema, partitioning, UDF
-  signature, Arrow batch shape — is real and testable.
-- ``decoder="real"``: raises NotImplementedError at the decode call
-  site; wire Pillow/librosa/pyav here in a full environment.
+Arrow-batched ``mapInPandas`` stages. No image/audio codec library is
+a dependency, so decoding is a deterministic pseudo-decoder: the payload
+bytes repeated to ``h*w*3`` pseudo-pixels. The Spark plumbing around it
+(schema, partitioning, UDF signature, Arrow batch shape) is the real one;
+a codec (Pillow/librosa/pyav) would replace ``_fake_decode`` and the
+vectorized byte statistics in ``decode_features``.
 
 At 100 TB: media rows are large → keep `spark.sql.files.maxPartitionBytes`
 at 128m so tasks stay memory-bounded, and select metadata-only columns
@@ -93,8 +91,7 @@ FEATURES_SCHEMA = T.StructType([
 ])
 
 
-def decode_features(df: DataFrame, decoder: str = "fake",
-                    batch_hook=None) -> DataFrame:
+def decode_features(df: DataFrame, batch_hook=None) -> DataFrame:
     """Decode payloads and emit per-media pixel features via mapInPandas.
 
     ``batch_hook(pdf)`` (tests) observes each Arrow batch shape."""
@@ -103,11 +100,6 @@ def decode_features(df: DataFrame, decoder: str = "fake",
         for pdf in batches:
             if batch_hook is not None:
                 batch_hook(pdf)
-            if decoder == "real":
-                raise NotImplementedError(
-                    "real media decoding requires codec libraries "
-                    "(Pillow/librosa/pyav) not present in this environment"
-                )
             n = len(pdf)
             if n == 0:
                 continue
@@ -155,8 +147,7 @@ def decode_features(df: DataFrame, decoder: str = "fake",
     return df.mapInPandas(run, schema=FEATURES_SCHEMA)
 
 
-def resize(df: DataFrame, out_w: int, out_h: int,
-           decoder: str = "fake") -> DataFrame:
+def resize(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Nearest-neighbor resize of decoded media → new payload bytes."""
 
     out_schema = T.StructType([
@@ -167,8 +158,6 @@ def resize(df: DataFrame, out_w: int, out_h: int,
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if decoder == "real":
-                raise NotImplementedError("real decoder not available")
             rows = []
             # per-item loop is intrinsic to codec work (real decoders are
             # per-image); bookkeeping stays columnar via zip, not iterrows
@@ -189,8 +178,7 @@ def resize(df: DataFrame, out_w: int, out_h: int,
     return df.mapInPandas(run, schema=out_schema)
 
 
-def frame_sample(df: DataFrame, every_ms: int = 1000,
-                 decoder: str = "fake") -> DataFrame:
+def frame_sample(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Sample pseudo-frames every `every_ms` of duration (video path):
     one output row per (media_id, frame_idx)."""
 
@@ -203,8 +191,6 @@ def frame_sample(df: DataFrame, every_ms: int = 1000,
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if decoder == "real":
-                raise NotImplementedError("real decoder not available")
             rows = []
             # per-item loop is intrinsic (real frame extraction is per-video)
             for mid, payload, meta in zip(pdf["media_id"], pdf["payload"],

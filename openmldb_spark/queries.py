@@ -1253,7 +1253,7 @@ WHERE bit_count(xor(a.sig, b.sig)) <= 3
 
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Media decode plumbing (fake decoder; see pipeline/multimodal.py).
+    """Media decode plumbing (pseudo-decoder; see pipeline/multimodal.py).
 
     Fully oracle-checked: the fake decode is cyclic byte repetition of the
     utf-8 payload to h*w*3 pseudo-pixels, so every feature is a function
@@ -1266,7 +1266,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                     synthetic_media)
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     media = synthetic_media(d, "text", "doc_id")
-    feats = decode_features(media, decoder="fake")
+    feats = decode_features(media)
     return feats.select(
         "media_id", "n_bytes",
         F.round("mean_px", 4).alias("mean_px"),

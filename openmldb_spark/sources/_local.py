@@ -10,6 +10,11 @@ rows in the same order. PySpark's list path instead ships the rows
 through a ``PythonRDD`` and plans a ``LogicalRDD``, whose every scan is
 a job of Python-worker tasks.
 
+Because the rows are a leaf of the plan, a plan analyzed once over one
+set of rows can take another set in their place (``bind_rows``): this
+is how a prepared request plan (``sqlfe.run_sql_request``) serves each
+request without lowering its statement again.
+
 Naive datetimes are UTC wall time, the engine's convention (the session
 timezone is UTC and the wire decoders use ``utcfromtimestamp``); pass an
 aware datetime for any other zone.
@@ -61,3 +66,31 @@ def is_local(df) -> bool:
     0..n-1). Such rows are deterministic without a checkpoint."""
     plan = df._jdf.queryExecution().optimizedPlan()
     return plan.getClass().getSimpleName() == "LocalRelation"
+
+
+def local_relation(df):
+    """``df``'s analyzed plan when it is a bare LocalRelation (rows as
+    ``local_rows`` builds them), else None."""
+    plan = df._jdf.queryExecution().analyzed()
+    return plan if plan.getClass().getSimpleName() == "LocalRelation" \
+        else None
+
+
+def bind_rows(spark, plan, leaves, rel):
+    """A DataFrame over the analyzed JVM ``plan`` in which each
+    ``(leaf, output)`` of ``leaves``, a LocalRelation node of the plan,
+    holds the rows of the LocalRelation ``rel`` instead. Every leaf
+    keeps its own output attributes, so the rest of the plan still
+    resolves against it; the new DataFrame is optimized and executed
+    like any other, so the optimizer folds the new rows in."""
+    from pyspark.sql import DataFrame
+    jvm = spark._jvm
+    data, streaming, stream = rel.data(), rel.isStreaming(), rel.stream()
+    swap = jvm.java.util.HashMap()
+    for leaf, output in leaves:
+        swap.put(leaf, rel.copy(output, data, streaming, stream))
+    # a Scala Map is a PartialFunction: one transformUp swaps every leaf
+    bound = plan.transformUp(
+        jvm.org.apache.spark.api.python.PythonUtils.toScalaMap(swap))
+    return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, bound), spark)

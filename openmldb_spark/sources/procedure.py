@@ -17,6 +17,15 @@ run_sql_request numbers the rows without the checkpoint it keeps for
 DataFrame inputs. A value an argument cannot hold raises ProcedureError
 naming the argument.
 
+The first call of a procedure or deployment lowers its body and keeps
+the analyzed plan as a template in ``sqlfe``, keyed by the body, the
+main table, the request schema, the identity of every stored frame and
+the session's plan-shaping confs; later calls only bind their request
+rows into it. The template is rebuilt when any of these change: an
+INSERT, LOAD or DROP replaces a frame, a re-DEPLOY or re-CREATE changes
+the body. It lives in ``sqlfe``, not in the deployment or procedure
+entry, which SHOW DEPLOYMENT and the restful meta API return as is.
+
 Metadata parity (get_procedure corpus): name, the verbatim CREATE text,
 input_schema from the args, output_schema from planning the body,
 input_common_cols = const args, output_common_cols = the const columns
@@ -280,9 +289,15 @@ def execute_deployment_rows(spark, name: str, deployments: dict,
     main = d.get("mainTable")
     if main is None or main not in tables:
         raise ProcedureError(f"deployment {name!r} has no request table")
-    fields = tables[main].schema.fields
-    args = [(f.name, _JSON_TYPES[f.dataType.simpleString()], False)
-            for f in fields]
-    # _JSON_TYPES spells int as int32 etc; _coerce/_SPARK_TYPES accept both
+    args = []
+    for f in tables[main].schema.fields:
+        st = f.dataType.simpleString()
+        if st not in _JSON_TYPES:
+            raise ProcedureError(
+                f"deployment {name!r}: column {f.name!r} of table "
+                f"{main!r} has unsupported type {st}")
+        # _JSON_TYPES spells int as int32 etc; _coerce/_SPARK_TYPES
+        # accept both
+        args.append((f.name, _JSON_TYPES[st], False))
     req = _request_df(spark, args, input_rows, None)
     return run_sql_request(spark, d["body"], tables, req, main)

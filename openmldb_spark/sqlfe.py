@@ -28,6 +28,8 @@ from __future__ import annotations
 
 import contextvars
 import re
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass, field
 
 from openmldb_spark.plans.specs import (Agg, KERNEL_AGG_FUNCS, WindowSpec,
@@ -2041,9 +2043,114 @@ def run_sql_request(spark, sql: str, tables, request, name: str):
     rows are fixed data, so building the request starts no job. Any
     other DataFrame may come from a nondeterministic source, so its ids
     are pinned by an eager ``localCheckpoint`` (one job).
+
+    Prepared plans: a request whose plan is a bare local relation is
+    lowered once per key, and the analyzed plan of that first build is
+    kept as a template. The key is the session, the statement text, the
+    request table name, the request schema, the identity of every
+    DataFrame in ``tables`` and the session confs analysis bakes into a
+    plan (``_PLAN_CONFS``). A later request with the same key skips the
+    lowering: its rows take the place of the template request's rows in
+    every request leaf of the plan (``sources._local.bind_rows``), and
+    the plan is optimized and executed anew, so request values and row
+    counts fold per request. Any new key builds a new template: an
+    INSERT, LOAD or DROP replaces the frames in ``tables``, a re-DEPLOY
+    changes the statement. A build is kept only if it launched no Spark
+    job and every leaf of its plan is a request leaf or a leaf of a
+    stored table's plan; other statements are lowered on every call.
+    The ``_TEMPLATE_CAP`` most recently used templates are kept.
     """
     if not isinstance(tables, dict):
         raise SqlUnsupported("run_sql_request requires named tables")
+    from openmldb_spark.sources._local import bind_rows, local_relation
+    rel = local_relation(request)
+    if rel is None:
+        return _lower_request(spark, sql, tables, request, name)
+    # ids are safe in the key: the template pins the session and frames
+    key = (id(spark), sql, name, request.schema,
+           tuple(sorted((k, id(v)) for k, v in tables.items())),
+           tuple(spark.conf.get(c) for c in _PLAN_CONFS))
+    with _TEMPLATES_LOCK:
+        tpl = _TEMPLATES.get(key)
+        if tpl is not None:
+            _TEMPLATES.move_to_end(key)
+    if tpl is not None:
+        return bind_rows(spark, tpl.plan, tpl.leaves, rel)
+    jobs = _jobs_started(spark)
+    out = _lower_request(spark, sql, tables, request, name)
+    # the job count is context-wide: a job of another thread only costs
+    # this build its template
+    if _jobs_started(spark) == jobs:
+        tpl = _request_template(spark, out, rel, tables)
+        if tpl is not None:
+            with _TEMPLATES_LOCK:
+                _TEMPLATES[key] = tpl
+                while len(_TEMPLATES) > _TEMPLATE_CAP:
+                    _TEMPLATES.popitem(last=False)
+    return out
+
+
+# Prepared request plans (run_sql_request): key -> _RequestTemplate
+_TEMPLATE_CAP = 16
+_TEMPLATES: OrderedDict = OrderedDict()
+_TEMPLATES_LOCK = threading.Lock()
+# session confs analysis bakes into a plan: the zone of time-zone-aware
+# expressions, ANSI casts and arithmetic, name resolution, and the type
+# a TIMESTAMP cast or literal takes
+_PLAN_CONFS = ("spark.sql.session.timeZone", "spark.sql.ansi.enabled",
+               "spark.sql.caseSensitive", "spark.sql.timestampType")
+
+
+@dataclass
+class _RequestTemplate:
+    plan: object      # analyzed JVM plan of the first build
+    leaves: list      # (LocalRelation leaf, its output) per request leaf
+    pins: tuple       # the session and frames the key names by id
+
+
+def _jobs_started(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def _java_iter(seq):
+    it = seq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def _request_template(spark, out, rel, tables):
+    """A template of the fresh request build ``out``, or None. Request
+    leaves are the LocalRelation leaves holding ``rel``'s rows object,
+    matched by identity (a stored table built by ``local_rows`` may
+    hold equal rows); DeduplicateRelations gives each use of the request
+    its own leaf. A leaf that is neither a request leaf nor a leaf of a
+    stored table's plan may hold a request value, so it voids the
+    template; so does a subquery expression, whose plan the leaf walk
+    and the rebinding transform do not enter."""
+    jvm = spark._jvm
+    plan = out._jdf.queryExecution().analyzed()
+    if not plan.subqueriesAll().isEmpty():
+        return None
+    data = jvm.java.util.IdentityHashMap()
+    data.put(rel.data(), True)
+    stored = jvm.java.util.HashSet()
+    for df in tables.values():
+        for leaf in _java_iter(
+                df._jdf.queryExecution().analyzed().collectLeaves()):
+            stored.add(leaf.canonicalized())
+    leaves = []
+    for leaf in _java_iter(plan.collectLeaves()):
+        if leaf.getClass().getSimpleName() == "LocalRelation" and \
+                data.containsKey(leaf.data()):
+            leaves.append((leaf, leaf.output()))
+        elif not stored.contains(leaf.canonicalized()):
+            return None
+    return _RequestTemplate(plan, leaves, (spark, dict(tables)))
+
+
+def _lower_request(spark, sql: str, tables: dict, request, name: str):
+    """run_sql_request's lowering: the statement text rewrite, then
+    run_sql over the request rows and the stored tables."""
     hist = tables[name]
     sql = sub_code("`", "", sql)
     masked = mask_literals(sql)
@@ -2132,7 +2239,9 @@ def _rid_thread_stmt(stmt: str, name: str, in_union: bool,
             continue
         end = match_paren(stmt, start)
         before = masked[:start]
-        is_union_ctx = bool(re.search(r"(?is)union\s*$", before))
+        # `UNION t, (select ...)`: also after the injected __req_hist__
+        is_union_ctx = bool(re.search(r"(?is)\bunion(?:\s+\w+\s*,)*\s*$",
+                                      before))
         is_from_ctx = bool(re.search(r"(?is)\bfrom\s*$", before))
         inner, derived = _rid_thread_stmt(
             stmt[start + 1:end], name, is_union_ctx)

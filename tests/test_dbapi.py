@@ -193,6 +193,24 @@ def test_execute_request(req_cur):
     assert rows == [("b", 12)]
 
 
+def test_request_table_skips_from_inside_a_literal(req_cur):
+    sql = ("select x, concat('a from b', x) as c, sum(y) over w as s "
+           "from t_req window w as (partition by x order by ts "
+           "rows between 2 preceding and current row);")
+    rows = req_cur.executeRequest(
+        sql, {"x": "b", "y": 7, "ts": 9000}).fetchall()
+    assert rows == [("b", "a from bb", 12)]
+
+
+def test_request_table_skips_from_inside_a_comment(req_cur):
+    sql = ("select x -- from z\n, sum(y) over w as s from t_req window w "
+           "as (partition by x order by ts "
+           "rows between 2 preceding and current row);")
+    rows = req_cur.batch_row_request(
+        sql, [], [{"x": "b", "y": 7, "ts": 9000}]).fetchall()
+    assert rows == [("b", 12)]
+
+
 def test_batch_row_request(req_cur):
     rows = req_cur.batch_row_request(
         _WINDOW_SQL, [],

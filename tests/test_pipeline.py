@@ -124,7 +124,7 @@ def test_multimodal_batch_plumbing(spark, docs):
                                                     frame_sample, resize,
                                                     synthetic_media)
     media = synthetic_media(docs.limit(50), "text", "doc_id")
-    feats = decode_features(media, decoder="fake").collect()
+    feats = decode_features(media).collect()
     assert len(feats) == 50
     for r in feats:
         assert r.n_bytes > 0
@@ -132,11 +132,11 @@ def test_multimodal_batch_plumbing(spark, docs):
         assert len(r.histo8) == 8
         assert abs(sum(r.histo8) - 1.0) < 1e-9
 
-    rs = resize(media, 4, 4, decoder="fake").collect()
+    rs = resize(media, 4, 4).collect()
     assert all(len(r.payload) == 4 * 4 * 3 for r in rs)
     assert all(r.meta["width"] == 4 and r.meta["height"] == 4 for r in rs)
 
-    frames = frame_sample(media.limit(5), every_ms=500, decoder="fake")
+    frames = frame_sample(media.limit(5), every_ms=500)
     fr = frames.collect()
     assert len(fr) >= 5
     # frame bytes concatenate back to the payload
@@ -147,16 +147,6 @@ def test_multimodal_batch_plumbing(spark, docs):
     payloads = {r.media_id: bytes(r.payload)
                 for r in media.limit(5).collect()}
     assert by_id == payloads
-
-
-def test_multimodal_real_decoder_stub(spark, docs):
-    from openmldb_spark.pipeline.multimodal import (decode_features,
-                                                    synthetic_media)
-    media = synthetic_media(docs.limit(2), "text", "doc_id")
-    with pytest.raises(Exception) as ei:
-        decode_features(media, decoder="real").collect()
-    assert "NotImplementedError" in str(ei.value) or isinstance(
-        ei.value, NotImplementedError)
 
 
 def test_dedup_exact_finds_real_dups(spark):
