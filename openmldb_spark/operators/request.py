@@ -26,6 +26,7 @@ import pyspark.sql.functions as F
 
 from openmldb_spark.plans.specs import Agg, WindowSpec
 from openmldb_spark.operators.window import _order_col, window_agg
+from openmldb_spark.sources._local import is_local
 
 
 def request_features(
@@ -65,28 +66,36 @@ def request_features(
                     if c.lower() == str(order_name).lower()]
             if len(hits) == 1:
                 order_name = hits[0]
-        # the min/max action is one of the engine's three bounded
-        # deliberate driver actions (request batches are small by
-        # contract). Materialize the batch ONCE with an eager
-        # localCheckpoint before it: the bounds scan here and the
-        # feature job later then read the same pinned rows. A persist()
-        # is the wrong tool twice over — Spark's CacheManager keys
-        # cache entries by PLAN EQUALITY, so unpersisting a previous
-        # equal-plan batch would uncache the new one (empirically
-        # verified), and an evicted/unpersisted entry silently
-        # re-executes the request lineage, which for a nondeterministic
-        # source (limit/sample) could emit rows outside the history
-        # window pruned from the bounds snapshot below. Checkpointed
-        # RDDs are freed when the DataFrame is garbage-collected — no
-        # unpersist bookkeeping, nothing accumulates across calls.
-        requests = requests.localCheckpoint(eager=True)
-        ordc = _order_col(requests, order_name)
-        bounds = requests.agg(
-            F.max(ordc).alias("mx"), F.min(ordc).alias("mn")).first()
-        if bounds.mx is not None:
-            lo = bounds.mn - spec.start_delta
+        if is_local(requests):
+            # rows held in the plan: read their order values on the
+            # driver (the projection folds into the relation, no job)
+            vals = [r[0] for r in requests.select(
+                _order_col(requests, order_name)).collect()
+                if r[0] is not None]
+            mx, mn = (max(vals), min(vals)) if vals else (None, None)
+        else:
+            # the min/max action is one of the engine's three bounded
+            # deliberate driver actions (request batches are small by
+            # contract). Materialize the batch ONCE with an eager
+            # localCheckpoint before it: the bounds scan here and the
+            # feature job later then read the same pinned rows. A
+            # persist() is the wrong tool twice over — Spark's
+            # CacheManager keys cache entries by PLAN EQUALITY, so
+            # unpersisting a previous equal-plan batch would uncache the
+            # new one (empirically verified), and an evicted/unpersisted
+            # entry silently re-executes the request lineage, which for a
+            # nondeterministic source (limit/sample) could emit rows
+            # outside the history window pruned from the bounds snapshot
+            # below. Checkpointed RDDs are freed when the DataFrame is
+            # garbage-collected — no unpersist bookkeeping, nothing
+            # accumulates across calls.
+            requests = requests.localCheckpoint(eager=True)
+            ordc = _order_col(requests, order_name)
+            mx, mn = requests.agg(F.max(ordc), F.min(ordc)).first()
+        if mx is not None:
+            lo = mn - spec.start_delta
             h_ord = _order_col(history, order_name)
-            hist = history.where((h_ord >= lo) & (h_ord <= bounds.mx))
+            hist = history.where((h_ord >= lo) & (h_ord <= mx))
 
     return window_agg(requests, spec, aggs, keep_cols=keep_cols,
                       union=[hist], tier="kernel")

@@ -15,6 +15,11 @@ set of rows can take another set in their place (``bind_rows``): this
 is how a prepared request plan (``sqlfe.run_sql_request``) serves each
 request without lowering its statement again.
 
+A stored table's rows can be copied the same way (``history_copy``):
+the copy is a driver-resident ``pyarrow.Table`` and a LocalRelation
+over it, with a per-key index (``History.rows``), so a request binds
+only the stored rows of its own keys instead of scanning the table.
+
 Naive datetimes are UTC wall time, the engine's convention (the session
 timezone is UTC and the wire decoders use ``utcfromtimestamp``); pass an
 aware datetime for any other zone.
@@ -23,8 +28,12 @@ aware datetime for any other zone.
 from __future__ import annotations
 
 import datetime
+import threading
+import weakref
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -76,21 +85,148 @@ def local_relation(df):
         else None
 
 
-def bind_rows(spark, plan, leaves, rel):
-    """A DataFrame over the analyzed JVM ``plan`` in which each
-    ``(leaf, output)`` of ``leaves``, a LocalRelation node of the plan,
-    holds the rows of the LocalRelation ``rel`` instead. Every leaf
-    keeps its own output attributes, so the rest of the plan still
-    resolves against it; the new DataFrame is optimized and executed
-    like any other, so the optimizer folds the new rows in."""
+def bind_rows(spark, plan, binds, session=None):
+    """A DataFrame over the analyzed JVM ``plan`` in which the
+    LocalRelation leaves of each ``(leaves, data)`` of ``binds`` (a list
+    of ``(leaf, output)``) hold the rows ``data`` (a JVM ``Seq`` of
+    InternalRow, such as another LocalRelation's ``data()``) instead.
+    Every leaf keeps its own output attributes, so the rest of the plan
+    still resolves against it; the new DataFrame is optimized and
+    executed like any other, in the JVM ``session`` (default: the
+    session of ``spark``), so the optimizer folds the new rows in."""
     from pyspark.sql import DataFrame
     jvm = spark._jvm
-    data, streaming, stream = rel.data(), rel.isStreaming(), rel.stream()
     swap = jvm.java.util.HashMap()
-    for leaf, output in leaves:
-        swap.put(leaf, rel.copy(output, data, streaming, stream))
+    for leaves, data in binds:
+        if not leaves:
+            continue
+        first = leaves[0][0]
+        streaming, stream = first.isStreaming(), first.stream()
+        for leaf, output in leaves:
+            swap.put(leaf, leaf.copy(output, data, streaming, stream))
     # a Scala Map is a PartialFunction: one transformUp swaps every leaf
     bound = plan.transformUp(
         jvm.org.apache.spark.api.python.PythonUtils.toScalaMap(swap))
     return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-        spark._jsparkSession, bound), spark)
+        session or spark._jsparkSession, bound), spark)
+
+
+# A stored frame of at most this many rows is copied to the driver for
+# request serving (history_copy); a larger one is scanned per request.
+HISTORY_CAP = 100_000
+# key types whose collected Python values equal the copy's to_pylist()
+# (a collected timestamp is naive local time, a copied one aware UTC)
+SLICE_KEY_TYPES = (T.StringType, T.BooleanType, T.ByteType, T.ShortType,
+                   T.IntegerType, T.LongType, T.FloatType, T.DoubleType,
+                   T.DateType)
+# column types the copy round-trips through Arrow unchanged
+_COPY_TYPES = SLICE_KEY_TYPES + (T.TimestampType,)
+
+_NAN = object()
+
+
+def _key(values) -> tuple:
+    """A key tuple as a dict key: NaN keys group together (as Spark's
+    partitioning groups them), NULL keys likewise (None == None)."""
+    return tuple(_NAN if v != v else v for v in values)
+
+
+class _KeyIndex:
+    """A ``History``'s rows sorted by the key columns ``keys`` (a stable
+    sort, so one key's rows keep their copy order) as a LocalRelation's
+    rows, with the span of every key tuple: the reference's per-key
+    segment (src/storage/segment.h:83,145-148), one sorted run per key
+    instead of a skiplist."""
+
+    def __init__(self, spark, table: pa.Table, keys: tuple):
+        perm = pc.sort_indices(table, [(k, "ascending") for k in keys])
+        rows = table.take(perm)
+        self.perm = perm.to_numpy()
+        self.pos = np.empty_like(self.perm)
+        self.pos[self.perm] = np.arange(len(self.perm))
+        self.data = local_relation(spark.createDataFrame(rows)).data()
+        self.spans: dict = {}
+        prev, lo = None, 0
+        for i, k in enumerate(zip(*(rows.column(c).to_pylist()
+                                    for c in keys))):
+            k = _key(k)
+            if i and k != prev:
+                self.spans[prev] = (lo, i)
+                lo = i
+            prev = k
+        if rows.num_rows:
+            self.spans[prev] = (lo, rows.num_rows)
+
+
+class History:
+    """The rows of a stored frame, copied once to the driver: ``table``
+    (a ``pyarrow.Table``) and ``df``, a LocalRelation over it whose rows
+    object ``data`` identifies its leaves in a plan."""
+
+    def __init__(self, spark, table: pa.Table):
+        self.table = table
+        self.df = spark.createDataFrame(table)
+        self.data = local_relation(self.df).data()
+        self._spark = spark
+        self._indexes: dict = {}
+        self._lock = threading.Lock()
+
+    def index(self, keys: tuple) -> _KeyIndex:
+        with self._lock:
+            ix = self._indexes.get(keys)
+            if ix is None:
+                ix = self._indexes[keys] = _KeyIndex(
+                    self._spark, self.table, keys)
+            return ix
+
+    def rows(self, wanted):
+        """The copy's rows (a JVM ``Seq``) whose key tuple is one of
+        ``tuples`` for some ``(keys, tuples)`` of ``wanted``, each row
+        once, as contiguous runs of the first keys' sorted rows."""
+        first = self.index(wanted[0][0])
+        picked = [np.empty(0, dtype=first.pos.dtype)]
+        for keys, tuples in wanted:
+            ix = self.index(keys)
+            for t in tuples:
+                span = ix.spans.get(_key(t))
+                if span:
+                    picked.append(first.pos[ix.perm[span[0]:span[1]]])
+        pos = np.unique(np.concatenate(picked))
+        breaks = np.flatnonzero(np.diff(pos) != 1) + 1
+        out = None
+        for run in np.split(pos, breaks):
+            if not len(run):
+                continue
+            part = first.data.slice(int(run[0]), int(run[-1]) + 1)
+            out = part if out is None else out.appendedAll(part)
+        return first.data.slice(0, 0) if out is None else out
+
+
+_HISTORIES: dict = {}
+_HISTORIES_LOCK = threading.Lock()
+
+
+def history_copy(frame) -> History | None:
+    """The driver copy of the stored ``frame``'s rows, read on the first
+    call for this frame object (``limit(HISTORY_CAP + 1)``, Spark jobs)
+    and kept until the frame is garbage-collected. None when the frame
+    has more than ``HISTORY_CAP`` rows or a column the copy cannot hold;
+    that answer is kept too."""
+    fid = id(frame)
+    with _HISTORIES_LOCK:
+        if fid in _HISTORIES:
+            return _HISTORIES[fid]
+    hist = None
+    fields = [(f.name, f.dataType) for f in frame.schema.fields]
+    if all(isinstance(t, _COPY_TYPES) for _, t in fields):
+        table = frame.limit(HISTORY_CAP + 1).toArrow()
+        if table.num_rows <= HISTORY_CAP:
+            hist = History(frame.sparkSession, table)
+            if [(f.name, f.dataType) for f in hist.df.schema.fields] \
+                    != fields:
+                hist = None
+    with _HISTORIES_LOCK:
+        if fid not in _HISTORIES:
+            _HISTORIES[fid] = hist
+            weakref.finalize(frame, _HISTORIES.pop, fid, None)
+        return _HISTORIES[fid]

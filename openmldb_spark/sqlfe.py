@@ -2059,13 +2059,38 @@ def run_sql_request(spark, sql: str, tables, request, name: str):
     job and every leaf of its plan is a request leaf or a leaf of a
     stored table's plan; other statements are lowered on every call.
     The ``_TEMPLATE_CAP`` most recently used templates are kept.
+
+    History index: for a local request, the stored rows of ``name`` are
+    read once into a driver copy (``sources._local.history_copy``, up to
+    ``HISTORY_CAP`` rows; deployments and procedures take it when they
+    are created), and the template's history is a LocalRelation over the
+    copy. Each request first collects, for every window over a
+    request-derived primary, the primary's PARTITION BY values (a
+    projection of the request rows: it folds into a LocalTableScan, no
+    job), then binds the request rows and only the copy's rows of those
+    keys. That slice is exact: union rows buffer only into frames of
+    primary rows with the same partition key. A window whose key plan
+    does not fold, or whose keys are computed or typed unlike the copy,
+    binds the whole copy instead. Templated requests run in a clone of
+    the session with adaptive execution off (one clone per template);
+    batch queries keep it.
+
+    A request row whose window ORDER BY value is NULL has no frame, so
+    batch evaluation would drop it (the reference's ``isValidOrder``);
+    a request must answer every row it is given, so such a row raises
+    ``ProcedureError`` naming it instead.
     """
     if not isinstance(tables, dict):
         raise SqlUnsupported("run_sql_request requires named tables")
-    from openmldb_spark.sources._local import bind_rows, local_relation
+    from openmldb_spark.sources._local import history_copy, local_relation
     rel = local_relation(request)
     if rel is None:
-        return _lower_request(spark, sql, tables, request, name)
+        out, windows = _lower_recorded(spark, sql, tables, request, name)
+        for w in windows:
+            _reject_null_order(w.keys_df.collect(), w.order, ranked=True)
+        return out
+    # the copy's read starts jobs: take it before the build is watched
+    hist = history_copy(tables[name]) if name in tables else None
     # ids are safe in the key: the template pins the session and frames
     key = (id(spark), sql, name, request.schema,
            tuple(sorted((k, id(v)) for k, v in tables.items())),
@@ -2074,20 +2099,23 @@ def run_sql_request(spark, sql: str, tables, request, name: str):
         tpl = _TEMPLATES.get(key)
         if tpl is not None:
             _TEMPLATES.move_to_end(key)
-    if tpl is not None:
-        return bind_rows(spark, tpl.plan, tpl.leaves, rel)
-    jobs = _jobs_started(spark)
-    out = _lower_request(spark, sql, tables, request, name)
-    # the job count is context-wide: a job of another thread only costs
-    # this build its template
-    if _jobs_started(spark) == jobs:
-        tpl = _request_template(spark, out, rel, tables)
-        if tpl is not None:
-            with _TEMPLATES_LOCK:
-                _TEMPLATES[key] = tpl
-                while len(_TEMPLATES) > _TEMPLATE_CAP:
-                    _TEMPLATES.popitem(last=False)
-    return out
+    if tpl is None:
+        jobs = _jobs_started(spark)
+        out, windows = _lower_recorded(spark, sql, tables, request, name,
+                                       hist)
+        # the job count is context-wide: a job of another thread only
+        # costs this build its template
+        if _jobs_started(spark) == jobs:
+            tpl = _request_template(spark, out, rel, tables, hist, windows)
+        if tpl is None:
+            for w in windows:
+                _reject_null_order(w.keys_df.collect(), w.order)
+            return out
+        with _TEMPLATES_LOCK:
+            _TEMPLATES[key] = tpl
+            while len(_TEMPLATES) > _TEMPLATE_CAP:
+                _TEMPLATES.popitem(last=False)
+    return tpl.serve(spark, rel)
 
 
 # Prepared request plans (run_sql_request): key -> _RequestTemplate
@@ -2099,13 +2127,84 @@ _TEMPLATES_LOCK = threading.Lock()
 # a TIMESTAMP cast or literal takes
 _PLAN_CONFS = ("spark.sql.session.timeZone", "spark.sql.ansi.enabled",
                "spark.sql.caseSensitive", "spark.sql.timestampType")
+# the windows _run_window_sql lowers while run_sql_request builds a
+# request (a list of _ReqWindow); None outside run_sql_request
+_REQ_WINDOWS: "contextvars.ContextVar[list | None]" = \
+    contextvars.ContextVar("_REQ_WINDOWS", default=None)
+
+
+@dataclass
+class _ReqWindow:
+    """A window lowered over a request-derived primary (one that carries
+    the request row id)."""
+    keys_df: object   # primary.select(row id, ORDER BY column, *keys)
+    order: str        # the ORDER BY column
+    union: list       # the WINDOW UNION frames
+    computed: set     # names of computed (aux) columns
+
+
+@dataclass
+class _KeyPlan:
+    plan: object      # analyzed JVM plan of a _ReqWindow's keys_df
+    leaves: list      # its request leaves
+    order: str
+    keys: tuple       # key columns to slice the history copy by, or ()
 
 
 @dataclass
 class _RequestTemplate:
     plan: object      # analyzed JVM plan of the first build
     leaves: list      # (LocalRelation leaf, its output) per request leaf
+    session: object   # JVM session the requests run in (AQE off)
     pins: tuple       # the session and frames the key names by id
+    key_plans: list = field(default_factory=list)
+    hist: object = None         # History to slice, when every use slices
+    hist_leaves: list = field(default_factory=list)
+
+    def serve(self, spark, rel):
+        """The template over the request rows of the LocalRelation
+        ``rel``, with the history leaves holding only the copy's rows of
+        the request's keys."""
+        from openmldb_spark.sources._local import bind_rows
+        data = rel.data()
+        wanted = []
+        for kp in self.key_plans:
+            rows = bind_rows(spark, kp.plan, [(kp.leaves, data)],
+                             self.session).collect()
+            _reject_null_order(rows, kp.order)
+            if kp.keys and self.hist is not None:
+                wanted.append((kp.keys, {tuple(r[2:]) for r in rows}))
+        binds = [(self.leaves, data)]
+        if self.hist is not None:
+            binds.append((self.hist_leaves, self.hist.rows(wanted)))
+        return bind_rows(spark, self.plan, binds, self.session)
+
+
+def _lower_recorded(spark, sql, tables, request, name, hist=None):
+    """_lower_request, with the windows it lowers over request-derived
+    primaries."""
+    windows: list = []
+    token = _REQ_WINDOWS.set(windows)
+    try:
+        out = _lower_request(spark, sql, tables, request, name, hist)
+    finally:
+        _REQ_WINDOWS.reset(token)
+    return out, windows
+
+
+def _reject_null_order(rows, order: str, ranked: bool = False) -> None:
+    """Raise for the first of a window's key rows (row id, ORDER BY
+    value, keys...) whose ORDER BY value is NULL. A local request's row
+    id is the row's index; other ids (``ranked``) only order the rows."""
+    bad = [r[0] for r in rows if r[1] is None]
+    if bad:
+        from openmldb_spark.sources.procedure import ProcedureError
+        row = min(bad)
+        if ranked:
+            row = sorted(r[0] for r in rows).index(row)
+        raise ProcedureError(
+            f"request row {row}: window ORDER BY column {order!r} is "
+            f"NULL, so the row has no window frame")
 
 
 def _jobs_started(spark) -> int:
@@ -2118,40 +2217,101 @@ def _java_iter(seq):
         yield it.next()
 
 
-def _request_template(spark, out, rel, tables):
+def _local_leaves(plan, ident: dict, stored):
+    """The LocalRelation leaves of the JVM ``plan`` whose rows object is
+    a key of the IdentityHashMap ``ident``, grouped by its value, or
+    None when some other leaf is not in the set ``stored``."""
+    found: dict = {}
+    for leaf in _java_iter(plan.collectLeaves()):
+        kind = ident.get(leaf.data()) \
+            if leaf.getClass().getSimpleName() == "LocalRelation" else None
+        if kind is not None:
+            found.setdefault(kind, []).append((leaf, leaf.output()))
+        elif not stored.contains(leaf.canonicalized()):
+            return None
+    return found
+
+
+def _request_template(spark, out, rel, tables, hist, windows):
     """A template of the fresh request build ``out``, or None. Request
     leaves are the LocalRelation leaves holding ``rel``'s rows object,
     matched by identity (a stored table built by ``local_rows`` may
     hold equal rows); DeduplicateRelations gives each use of the request
-    its own leaf. A leaf that is neither a request leaf nor a leaf of a
-    stored table's plan may hold a request value, so it voids the
-    template; so does a subquery expression, whose plan the leaf walk
-    and the rebinding transform do not enter."""
+    its own leaf. History leaves hold the copy ``hist``'s rows object. A
+    leaf of any other kind that is not a leaf of a stored table's plan
+    may hold a request value, so it voids the template; so does a
+    subquery expression, whose plan the leaf walk and the rebinding
+    transform do not enter.
+
+    The copy is sliced only if every history leaf of the plan is in the
+    union of a recorded window whose key plan folds to a local relation
+    and whose keys are stored columns typed as in the copy; else each
+    request binds the whole copy."""
+    from openmldb_spark.sources._local import SLICE_KEY_TYPES, is_local
     jvm = spark._jvm
     plan = out._jdf.queryExecution().analyzed()
     if not plan.subqueriesAll().isEmpty():
         return None
-    data = jvm.java.util.IdentityHashMap()
-    data.put(rel.data(), True)
+    ident = jvm.java.util.IdentityHashMap()
+    ident.put(rel.data(), "req")
+    if hist is not None:
+        ident.put(hist.data, "hist")
     stored = jvm.java.util.HashSet()
     for df in tables.values():
         for leaf in _java_iter(
                 df._jdf.queryExecution().analyzed().collectLeaves()):
             stored.add(leaf.canonicalized())
-    leaves = []
-    for leaf in _java_iter(plan.collectLeaves()):
-        if leaf.getClass().getSimpleName() == "LocalRelation" and \
-                data.containsKey(leaf.data()):
-            leaves.append((leaf, leaf.output()))
-        elif not stored.contains(leaf.canonicalized()):
+    found = _local_leaves(plan, ident, stored)
+    if found is None:
+        return None
+    hist_leaves = found.get("hist", [])
+    copy_types = {f.name: f.dataType for f in hist.df.schema.fields} \
+        if hist is not None else {}
+    key_plans, seen, sliced = [], set(), 0
+    slicing = bool(hist_leaves)
+    for w in windows:
+        kplan = w.keys_df._jdf.queryExecution().analyzed()
+        kfound = _local_leaves(kplan, ident, stored)
+        if kfound is None:
             return None
-    return _RequestTemplate(plan, leaves, (spark, dict(tables)))
+        held = []           # (union frame, its history leaf count)
+        for u in w.union:
+            n = len((_local_leaves(u._jdf.queryExecution().analyzed(),
+                                   ident, stored) or {}).get("hist", []))
+            if n:
+                held.append((u, n))
+        fields = w.keys_df.schema.fields[2:]
+        keys = tuple(f.name for f in fields) if held else ()
+        if held:
+            sliced += sum(n for _, n in held)
+            slicing = slicing and bool(keys) and is_local(w.keys_df) and \
+                all(f.name not in w.computed
+                    and isinstance(f.dataType, SLICE_KEY_TYPES)
+                    and copy_types.get(f.name) == f.dataType
+                    and all(f.name in u.columns
+                            and u.schema[f.name].dataType == f.dataType
+                            for u, _ in held)
+                    for f in fields)
+        sig = (kplan.semanticHash(), keys)
+        if sig not in seen:
+            seen.add(sig)
+            key_plans.append(_KeyPlan(kplan, kfound.get("req", []),
+                                      w.order, keys))
+    slicing = slicing and sliced == len(hist_leaves)
+    session = spark._jsparkSession.cloneSession()
+    session.conf().set("spark.sql.adaptive.enabled", "false")
+    return _RequestTemplate(
+        plan, found.get("req", []), session, (spark, dict(tables)),
+        key_plans, hist if slicing else None, hist_leaves)
 
 
-def _lower_request(spark, sql: str, tables: dict, request, name: str):
+def _lower_request(spark, sql: str, tables: dict, request, name: str,
+                   hist=None):
     """run_sql_request's lowering: the statement text rewrite, then
-    run_sql over the request rows and the stored tables."""
-    hist = tables[name]
+    run_sql over the request rows and the stored tables. The stored rows
+    of ``name`` come from the driver copy ``hist`` (a
+    ``sources._local.History``) when given, else from ``tables[name]``."""
+    stored = hist.df if hist is not None else tables[name]
     sql = sub_code("`", "", sql)
     masked = mask_literals(sql)
     # A depth-0 set operation has no single request primary table — the
@@ -2187,7 +2347,15 @@ def _lower_request(spark, sql: str, tables: dict, request, name: str):
             # would wrongly buffer it
             continue
         if re.match(r"(?i)union\b", body):
-            body = re.sub(r"(?i)^union\s+", "UNION __req_hist__, ", body)
+            # a bare union table becomes a sub-select, which
+            # _rid_thread_stmt gives the NULL row id every union member
+            # needs to match the request primary's schema
+            part = depth0(body, r"(?i)\bpartition\b")
+            cut = part[0].start() if part else len(body)
+            members = [m if m.startswith("(") else f"(SELECT * FROM {m})"
+                       for m in (x.strip() for x in split(body[5:cut]))]
+            body = ("UNION __req_hist__, " + ", ".join(members) + " "
+                    + body[cut:])
         else:
             body = "UNION __req_hist__ " + body
         body += " INSTANCE_NOT_IN_WINDOW"
@@ -2209,7 +2377,7 @@ def _lower_request(spark, sql: str, tables: dict, request, name: str):
         req = req.localCheckpoint(eager=True)
     new_tables = dict(tables)
     new_tables[name] = req
-    new_tables["__req_hist__"] = hist.withColumn(
+    new_tables["__req_hist__"] = stored.withColumn(
         _REQ_RID, F.lit(None).cast("long"))
     res = run_sql(spark, sql, new_tables)
     drop = [c for c in res.columns if _REQ_RID in c]
@@ -2239,7 +2407,12 @@ def _rid_thread_stmt(stmt: str, name: str, in_union: bool,
             continue
         end = match_paren(stmt, start)
         before = masked[:start]
-        # `UNION t, (select ...)`: also after the injected __req_hist__
+        # `UNION t, (select ...), (select ...)`: also after the injected
+        # __req_hist__ and after earlier sub-select members, each
+        # collapsed to one word
+        flat = None
+        while flat != before:
+            flat, before = before, re.sub(r"\([^()]*\)", "_", before)
         is_union_ctx = bool(re.search(r"(?is)\bunion(?:\s+\w+\s*,)*\s*$",
                                       before))
         is_from_ctx = bool(re.search(r"(?is)\bfrom\s*$", before))
@@ -2530,6 +2703,10 @@ def _run_window_sql(sql: str, tables: list, limit: int | None = None):
     primary = tables[q.primary_idx]
     for expr, name in q.aux.items():
         primary = primary.withColumn(name, F.expr(expr))
+    windows = _REQ_WINDOWS.get()
+    if windows is not None and _REQ_RID not in primary.columns:
+        windows = None      # not over request rows
+    base = primary
     primary = primary.withColumn(
         _RID, F.monotonically_increasing_id())
     if not is_local(primary):
@@ -2589,6 +2766,10 @@ def _run_window_sql(sql: str, tables: list, limit: int | None = None):
                         f"WINDOW UNION column {pn!r} type "
                         f"{ut.simpleString()} != primary "
                         f"{pt.simpleString()}")
+        if windows is not None:
+            windows.append(_ReqWindow(
+                base.select(_REQ_RID, spec.order_by, *spec.partition_by),
+                spec.order_by, union, set(q.aux.values())))
         for expr, name in q.aux.items():
             union = [u.withColumn(name, F.expr(expr)) for u in union]
         out = window_agg(primary, spec, aggs, keep_cols=[_RID],

@@ -10,6 +10,7 @@ import pytest
 
 from openmldb_spark.plans.specs import Agg, WindowSpec
 from openmldb_spark.operators.request import request_features
+from openmldb_spark.sources.procedure import ProcedureError
 from openmldb_spark.operators.window import window_agg
 from openmldb_spark.plans.explain import PYTHON_NODES
 from openmldb_spark.transcripts import transcripts_df
@@ -147,16 +148,21 @@ def _req_tables(spark, tmp_path):
 
 def _list_request(spark, schema, rows):
     """The request rows as PySpark's list path builds them (a LogicalRDD,
-    pinned by run_sql_request's checkpoint): the reference path."""
+    pinned by run_sql_request's checkpoint): the reference path, which
+    scans the stored table."""
     import datetime
+    import pyspark.sql.types as T
     utc = datetime.timezone.utc
     conv = []
     for r in rows:
         r = list(r)
-        if r[4] is not None:
-            r[4] = datetime.datetime.fromtimestamp(r[4] / 1000, utc)
-        if r[5] is not None:
-            r[5] = datetime.date.fromisoformat(r[5])
+        for i, f in enumerate(schema.fields):
+            if r[i] is None:
+                continue
+            if isinstance(f.dataType, T.TimestampType):
+                r[i] = datetime.datetime.fromtimestamp(r[i] / 1000, utc)
+            elif isinstance(f.dataType, T.DateType):
+                r[i] = datetime.date.fromisoformat(r[i])
         conv.append(tuple(r))
     return spark.createDataFrame(conv, schema)
 
@@ -267,11 +273,13 @@ def test_deployment_request_starts_no_job_before_collect(spark, tmp_path):
 # -- prepared request plans (sqlfe.run_sql_request templates) --------------
 
 # a 1-row request builds the template; then two rows for key a plus a NULL
-# key, and a NULL ts, NULL values and a key with no history
+# key, and NULL values and a key with no history (a NULL ts is rejected:
+# test_null_order_value_is_rejected)
 BATCHES = [
     [REQ_ROWS[0], REQ_ROWS[1], [None, 7, 70, 7.5, 1_590_738_993_000,
                                 "2020-06-01"]],
-    [["b", 8, 80, 8.5, None, "2020-06-02"], REQ_ROWS[2], REQ_ROWS[3]],
+    [["b", 8, 80, 8.5, 1_590_738_400_000, "2020-06-02"], REQ_ROWS[2],
+     REQ_ROWS[3]],
 ]
 UNION_W = ("UNION (SELECT * FROM rq2) PARTITION BY c1 ORDER BY c7 "
            "ROWS_RANGE BETWEEN 1h PRECEDING AND CURRENT ROW")
@@ -368,7 +376,8 @@ def test_rebound_procedure_with_const_common_cols(spark, tmp_path,
     execute_procedure(spark, "sp", procs, tables, [REQ_ROWS[0][1:]],
                       common_cols=["a"]).collect()
     calls = [(["a"], [r[1:] for r in REQ_ROWS[:2]]),
-             (["b"], [REQ_ROWS[2][1:], [9, 9, 9.0, None, "2020-06-03"],
+             (["b"], [REQ_ROWS[2][1:],
+                      [9, 9, 9.0, 1_590_738_500_000, "2020-06-03"],
                       [2, 2, 2.5, 1_590_738_100_000, None]])]
     for common, rows in calls:
         got = execute_procedure(spark, "sp", procs, tables, rows,
@@ -545,3 +554,219 @@ def test_template_cache_is_bounded(spark, tmp_path):
         assert _sorted(_serve(spark, deps, tables, REQ_ROWS[:1])) == \
             [("a", 5 + i)]
     assert len(sqlfe._TEMPLATES) == sqlfe._TEMPLATE_CAP
+
+
+# -- history index (sliced requests) ----------------------------------------
+
+SLICED_SQL = dict(
+    PREPARED_SQL,
+    bare_union=PREPARED_SQL["window_union"].replace(
+        "UNION (SELECT * FROM rq2)", "UNION rq2"),
+    # a and b rows share their timestamps, so w2 (by c3) holds ties:
+    # only tie-insensitive aggregates there
+    two_keys="SELECT c1, c3, sum(c6) OVER w1 AS s6, lag(c4, 1) OVER w1 AS l4, "
+             "count(c4) OVER w2 AS n4, max(c1) OVER w2 AS m1 FROM rq WINDOW "
+             "w1 AS (PARTITION BY c1 ORDER BY c7 "
+             "ROWS_RANGE BETWEEN 1h PRECEDING AND CURRENT ROW), "
+             "w2 AS (PARTITION BY c3 ORDER BY c7 "
+             "ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)",
+)
+SLICED_SQL.update(
+    date_key="SELECT c1, c8, count(c3) OVER w AS n, sum(c6) OVER w AS s "
+             "FROM rq WINDOW w AS (PARTITION BY c8 ORDER BY c7 "
+             "ROWS_RANGE BETWEEN 1h PRECEDING AND CURRENT ROW)",
+    ts_key="SELECT c1, c7, count(c3) OVER w AS n, sum(c6) OVER w AS s "
+           "FROM rq WINDOW w AS (PARTITION BY c7 ORDER BY c7 "
+           "ROWS BETWEEN 5 PRECEDING AND CURRENT ROW)")
+# statements whose windows union the request table's stored rows and
+# slice them (a timestamp key binds the whole copy: its collected and
+# copied Python values differ)
+SLICED = {"window_union", "window_last_join", "bare_union", "two_keys",
+          "date_key"}
+# rows whose date and timestamp match stored rows' (turns 3 and 7)
+KEYED = [["a", 3, 30, 1.5, 1_590_738_180_000, "2020-05-04"],
+         ["b", 7, 70, 7.5, 1_590_738_420_000, "2020-05-08"]]
+
+
+def _template(sql):
+    from openmldb_spark import sqlfe
+    return [t for k, t in sqlfe._TEMPLATES.items() if k[1] == sql][-1]
+
+
+def _scanned(spark, tables, body, rows, main="rq"):
+    """The request over the list-built rows: no template, no copy."""
+    from openmldb_spark.sqlfe import run_sql_request
+    return run_sql_request(spark, body, tables, _list_request(
+        spark, tables[main].schema, rows), main)
+
+
+@pytest.mark.parametrize("stmt", sorted(SLICED_SQL))
+def test_sliced_request_matches_scanned(spark, tmp_path, stmt):
+    tables = _prep_tables(spark, tmp_path)
+    body = SLICED_SQL[stmt]
+    deps = _deploy(spark, tables, body)
+    for batch in [REQ_ROWS[:1], *BATCHES, KEYED]:
+        got = _serve(spark, deps, tables, batch)
+        want = _scanned(spark, tables, body, batch)
+        assert got.schema == want.schema
+        rows = _sorted(got)
+        assert rows and rows == _sorted(want)
+    assert (_template(body).hist is not None) == (stmt in SLICED)
+    if stmt.endswith("_key"):
+        # each KEYED row meets the two stored rows of its key
+        assert [r[2] for r in rows] == [3, 3]
+
+
+def test_bare_union_equals_sub_select_union(spark, tmp_path):
+    tables = _prep_tables(spark, tmp_path)
+    bare = _deploy(spark, tables, SLICED_SQL["bare_union"])
+    sub = _deploy(spark, tables, SLICED_SQL["window_union"])
+    for batch in BATCHES:
+        assert _sorted(_serve(spark, bare, tables, batch)) == \
+            _sorted(_serve(spark, sub, tables, batch))
+
+
+def test_sliced_request_follows_the_primary_keys(spark, tmp_path):
+    """The primary swaps the request's two key columns: the slice takes
+    the stored rows of the primary's k1 (the request's k2)."""
+    from openmldb_spark.sources.ddl import create_table
+    name, empty = create_table(
+        spark, "create table rs (k1 string, k2 string, v double, "
+        "ts timestamp)")
+    base = 1_590_738_000_000
+    pairs = [("a", "b"), ("b", "a"), ("a", "a"), ("c", "b"), ("b", "c")]
+    rows = [[k1, k2, float(i * 10 + j), base + (i * 5 + j) * 60_000]
+            for i in range(5) for j, (k1, k2) in enumerate(pairs)]
+    path = str(tmp_path / "rs")
+    _list_request(spark, empty.schema, rows).write.parquet(path)
+    tables = {name: spark.read.parquet(path)}
+    body = ("SELECT k1, k2, sum(v) OVER w AS s, count(v) OVER w AS n FROM "
+            "(SELECT k2 AS k1, k1 AS k2, v, ts FROM rs) AS t WINDOW w AS "
+            "(PARTITION BY k1 ORDER BY ts "
+            "ROWS_RANGE BETWEEN 1h PRECEDING AND CURRENT ROW)")
+    deps = _deploy(spark, tables, body)
+    t = base + 30 * 60_000
+    for batch in ([["b", "a", 1.0, t]],
+                  [["a", "c", 2.0, t], ["c", "b", 3.0, t], ["z", "a", 4.0, t]]):
+        got = _sorted(_serve(spark, deps, tables, batch))
+        assert got == _sorted(_scanned(spark, tables, body, batch, "rs"))
+    assert _template(body).hist is not None
+    # primary k1 "a" (the request's k2) has 10 stored rows, k1 "b" 5
+    assert _sorted(_serve(spark, deps, tables, [["b", "a", 1.0, t]])) == \
+        [("a", "b", 1.0 + sum(float(i * 10 + j) for i in range(5)
+                                  for j in (0, 2)), 11)]
+
+
+def test_history_over_the_cap_is_scanned(spark, tmp_path, monkeypatch):
+    from conftest import executed_plan
+    from openmldb_spark.sources import _local
+    monkeypatch.setattr(_local, "HISTORY_CAP", 5)
+    tables = _prep_tables(spark, tmp_path)
+    body = PREPARED_SQL["window_union"]
+    deps = _deploy(spark, tables, body)
+    assert _local.history_copy(tables["rq"]) is None
+    for batch in BATCHES:
+        out = _serve(spark, deps, tables, batch)
+        assert _sorted(out) == _sorted(_scanned(spark, tables, body, batch))
+    assert _template(body).hist is None
+    assert "Scan parquet" in executed_plan(out)
+
+
+def test_sliced_request_scans_no_stored_rows(spark, tmp_path):
+    """A rebound request of the serve shape (window over the request
+    table's stored rows, LAST JOIN to a request sub-select) reads no
+    parquet and starts at most 3 jobs."""
+    from conftest import executed_plan
+    tables = _req_tables(spark, tmp_path)
+    deps = _deploy(spark, tables, PREPARED_SQL["window_last_join"])
+    _serve(spark, deps, tables, REQ_ROWS[:1]).collect()
+    out = _serve(spark, deps, tables, BATCHES[0])
+    sc = spark.sparkContext
+    group = "sliced-request-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        out.collect()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert 0 < len(jobs) <= 3
+    plan = executed_plan(out)
+    assert "Scan parquet" not in plan and "LocalTableScan" in plan
+    assert "AdaptiveSparkPlan" not in plan
+
+
+def test_history_copy_rows_by_key(spark):
+    import math
+    from openmldb_spark.sources._local import history_copy, local_rows
+    rows = [["a", 1, 0.5], [None, 2, math.nan], ["b", 3, math.nan],
+            ["a", 4, 0.5], [None, 5, 1.0]]
+    frame = local_rows(spark, rows, "k string, n int, x double")
+    hist = history_copy(frame)
+    assert hist is history_copy(frame) and hist.table.num_rows == 5
+
+    def picked(*wanted):
+        data = hist.rows(list(wanted))
+        return sorted(data.apply(i).getInt(1) for i in range(data.size()))
+    assert picked((("k",), {("a",)})) == [1, 4]
+    assert picked((("k",), {(None,), ("z",)})) == [2, 5]
+    assert picked((("k",), set())) == []
+    assert picked((("x",), {(math.nan,)})) == [2, 3]
+    # a row matched through both key sets is taken once
+    assert picked((("k",), {("a",)}), (("x",), {(0.5,), (1.0,)})) == \
+        [1, 4, 5]
+
+
+def _null_ts(rows):
+    return [*rows, ["b", 9, 90, 9.5, None, "2020-06-03"]]
+
+
+def test_null_order_value_is_rejected(spark, tmp_path, monkeypatch):
+    """A request row whose window ORDER BY value is NULL raises, naming
+    the row, on every path: list-built, fresh build, rebound (sliced)
+    and rebound over an unsliced copy."""
+    from openmldb_spark.sources import _local
+    tables = _prep_tables(spark, tmp_path)
+    body = PREPARED_SQL["window_union"]
+    batch = _null_ts(BATCHES[0])
+    match = r"request row 3: window ORDER BY column 'c7' is NULL"
+    with pytest.raises(ProcedureError, match=match):
+        _scanned(spark, tables, body, batch)
+    deps = _deploy(spark, tables, body)
+    with pytest.raises(ProcedureError, match=match):
+        _serve(spark, deps, tables, batch)          # builds the template
+    with pytest.raises(ProcedureError, match=match):
+        _serve(spark, deps, tables, batch)          # rebound, sliced
+    assert _template(body).hist is not None
+    monkeypatch.setattr(_local, "HISTORY_CAP", 5)
+    fresh = _fresh(tables)
+    _serve(spark, deps, fresh, REQ_ROWS[:1]).collect()
+    assert _template(body).hist is None
+    with pytest.raises(ProcedureError, match=match):
+        _serve(spark, deps, fresh, batch)           # rebound, whole copy
+    # a statement without a window answers the row
+    deps = _deploy(spark, tables, PREPARED_SQL["last_join_order_by"])
+    assert len(_sorted(_serve(spark, deps, tables, batch))) == 4
+
+
+def test_local_request_features_start_no_job(spark):
+    """Local request rows take their prune bounds on the driver: no
+    checkpoint and no bounds job before collect()."""
+    from openmldb_spark.sources._local import local_rows
+    hist = spark.createDataFrame(
+        [("c", i, 1_000_000 + i * 600_000, float(i)) for i in range(10)],
+        "conv_id string, turn_idx int, ts_ms long, value double")
+    req = local_rows(spark, [("c", 99, 1_000_000 + 9 * 600_000 + 1, 5.0),
+                             ("d", 1, 5_000, 1.0)], hist.schema)
+    sc = spark.sparkContext
+    group = "local-request-features"
+    sc.setJobGroup(group, group)
+    try:
+        pruned = request_features(req, hist, SPEC, AGGS, keep_cols=KEY,
+                                  prune_history=True)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc._jsc.clearJobGroup()
+    full = request_features(req, hist, SPEC, AGGS, keep_cols=KEY,
+                            prune_history=False)
+    assert _sorted(pruned) == _sorted(full)
+    assert {r.turn_idx: r.c for r in pruned.collect()} == {99: 4, 1: 1}
