@@ -113,7 +113,8 @@ def bind_rows(spark, plan, binds, session=None):
 
 # A stored frame of at most this many rows is copied to the driver for
 # request serving (history_copy); a larger one is scanned per request.
-HISTORY_CAP = 100_000
+# 16,000 rows is the largest history the copy has been measured at.
+HISTORY_CAP = 16_000
 # key types whose collected Python values equal the copy's to_pylist()
 # (a collected timestamp is naive local time, a copied one aware UTC)
 SLICE_KEY_TYPES = (T.StringType, T.BooleanType, T.ByteType, T.ShortType,
@@ -132,19 +133,16 @@ def _key(values) -> tuple:
 
 
 class _KeyIndex:
-    """A ``History``'s rows sorted by the key columns ``keys`` (a stable
-    sort, so one key's rows keep their copy order) as a LocalRelation's
-    rows, with the span of every key tuple: the reference's per-key
-    segment (src/storage/segment.h:83,145-148), one sorted run per key
-    instead of a skiplist."""
+    """The positions of a ``History``'s rows grouped by the key columns
+    ``keys``: ``perm`` is a stable sort of the positions by key, and
+    ``spans`` holds each key tuple's run of it. This is the reference's
+    per-key segment (src/storage/segment.h:83,145-148), one sorted run
+    per key instead of a skiplist."""
 
-    def __init__(self, spark, table: pa.Table, keys: tuple):
-        perm = pc.sort_indices(table, [(k, "ascending") for k in keys])
-        rows = table.take(perm)
-        self.perm = perm.to_numpy()
-        self.pos = np.empty_like(self.perm)
-        self.pos[self.perm] = np.arange(len(self.perm))
-        self.data = local_relation(spark.createDataFrame(rows)).data()
+    def __init__(self, table: pa.Table, keys: tuple):
+        self.perm = pc.sort_indices(
+            table, [(k, "ascending") for k in keys]).to_numpy()
+        rows = table.select(list(keys)).take(self.perm)
         self.spans: dict = {}
         prev, lo = None, 0
         for i, k in enumerate(zip(*(rows.column(c).to_pylist()
@@ -175,31 +173,30 @@ class History:
         with self._lock:
             ix = self._indexes.get(keys)
             if ix is None:
-                ix = self._indexes[keys] = _KeyIndex(
-                    self._spark, self.table, keys)
+                ix = self._indexes[keys] = _KeyIndex(self.table, keys)
             return ix
 
     def rows(self, wanted):
         """The copy's rows (a JVM ``Seq``) whose key tuple is one of
         ``tuples`` for some ``(keys, tuples)`` of ``wanted``, each row
-        once, as contiguous runs of the first keys' sorted rows."""
-        first = self.index(wanted[0][0])
-        picked = [np.empty(0, dtype=first.pos.dtype)]
+        once and in copy order, so one key's rows keep the order in
+        which a scan of the frame reads them."""
+        picked = np.zeros(self.table.num_rows, dtype=bool)
         for keys, tuples in wanted:
             ix = self.index(keys)
             for t in tuples:
                 span = ix.spans.get(_key(t))
                 if span:
-                    picked.append(first.pos[ix.perm[span[0]:span[1]]])
-        pos = np.unique(np.concatenate(picked))
-        breaks = np.flatnonzero(np.diff(pos) != 1) + 1
-        out = None
-        for run in np.split(pos, breaks):
-            if not len(run):
-                continue
-            part = first.data.slice(int(run[0]), int(run[-1]) + 1)
-            out = part if out is None else out.appendedAll(part)
-        return first.data.slice(0, 0) if out is None else out
+                    picked[ix.perm[span[0]:span[1]]] = True
+        # one gather in the JVM: a Seq is a function of its positions,
+        # so mapping the picked positions (a Scala BitSet, ascending)
+        # through the copy's rows takes them in copy order
+        jvm = self._spark._jvm
+        words = jvm.java.util.BitSet.valueOf(bytearray(
+            np.packbits(picked, bitorder="little").tobytes())).toLongArray()
+        bits = getattr(getattr(jvm, "scala.collection.immutable.BitSet$"),
+                       "MODULE$").fromBitMaskNoCopy(words)
+        return bits.toIndexedSeq().map(self.data)
 
 
 _HISTORIES: dict = {}
@@ -208,10 +205,11 @@ _HISTORIES_LOCK = threading.Lock()
 
 def history_copy(frame) -> History | None:
     """The driver copy of the stored ``frame``'s rows, read on the first
-    call for this frame object (``limit(HISTORY_CAP + 1)``, Spark jobs)
-    and kept until the frame is garbage-collected. None when the frame
-    has more than ``HISTORY_CAP`` rows or a column the copy cannot hold;
-    that answer is kept too."""
+    call for this frame object and kept until the frame is
+    garbage-collected. None when the frame has more than ``HISTORY_CAP``
+    rows or a column the copy cannot hold; that answer is kept too. The
+    first call reads ``limit(HISTORY_CAP + 1)`` of the frame (a Spark
+    job)."""
     fid = id(frame)
     with _HISTORIES_LOCK:
         if fid in _HISTORIES:
@@ -219,6 +217,8 @@ def history_copy(frame) -> History | None:
     hist = None
     fields = [(f.name, f.dataType) for f in frame.schema.fields]
     if all(isinstance(t, _COPY_TYPES) for _, t in fields):
+        # one job; over the cap it brings HISTORY_CAP + 1 rows, which
+        # take no longer than a count of them would
         table = frame.limit(HISTORY_CAP + 1).toArrow()
         if table.num_rows <= HISTORY_CAP:
             hist = History(frame.sparkSession, table)

@@ -29,7 +29,6 @@ from __future__ import annotations
 import re
 
 from openmldb_spark import sqllex
-from openmldb_spark.sources._local import history_copy
 
 __all__ = ["DeployError", "create_deployment", "show_deployment",
            "show_deployments", "drop_deployment", "format_deploy_sql"]
@@ -342,13 +341,12 @@ def create_deployment(spark, stmt: str, tables: dict, deployments: dict,
             or re.search(r"\b[A-Za-z_]\w*\.[A-Za-z_]\w*\.[A-Za-z_]\w*", body):
         raise DeployError("deploy: cross-database references unsupported")
 
-    from openmldb_spark.sqlfe import run_sql
+    from openmldb_spark.sqlfe import request_history, run_sql
     out_df = run_sql(spark, body, tables)     # plans + validates the body
     main = _main_table(body, tables)
     in_cols = _kcolumns(tables[main].schema) if main else []
     if main:
-        # requests read the main table's stored rows from a driver copy
-        history_copy(tables[main])
+        request_history(body, tables, main)
     deployments[name] = {
         "name": name,
         "dbName": db or "",

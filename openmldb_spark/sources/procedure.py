@@ -22,8 +22,8 @@ the analyzed plan as a template in ``sqlfe``, keyed by the body, the
 main table, the request schema, the identity of every stored frame and
 the session's plan-shaping confs; later calls only bind their request
 rows into it, and the main table's stored rows of their own keys from
-a driver copy of that table, taken when the procedure or deployment is
-created (``sources._local.history_copy``). The template is rebuilt when any of these change: an
+a driver copy of that table (``sqlfe.request_history``), taken when
+the procedure or deployment is created. The template is rebuilt when any of these change: an
 INSERT, LOAD or DROP replaces a frame, a re-DEPLOY or re-CREATE changes
 the body. It lives in ``sqlfe``, not in the deployment or procedure
 entry, which SHOW DEPLOYMENT and the restful meta API return as is.
@@ -43,7 +43,7 @@ import re
 
 import pyspark.sql.types as T
 
-from openmldb_spark.sources._local import history_copy, local_rows
+from openmldb_spark.sources._local import local_rows
 
 __all__ = ["ProcedureError", "create_procedure", "drop_procedure",
            "get_procedure", "execute_procedure", "execute_deployment_rows"]
@@ -132,7 +132,7 @@ def create_procedure(spark, stmt: str, tables: dict,
     args = _parse_args(m.group("args"))
 
     from openmldb_spark.sources.deploy import _main_table
-    from openmldb_spark.sqlfe import run_sql
+    from openmldb_spark.sqlfe import request_history, run_sql
     main = _main_table(body, tables)
     if main is None:
         if args:
@@ -152,8 +152,7 @@ def create_procedure(spark, stmt: str, tables: dict,
                 f"the main table {main!r} schema")
     out_df = run_sql(spark, body, tables)
     if main is not None:
-        # calls read the main table's stored rows from a driver copy
-        history_copy(tables[main])
+        request_history(body, tables, main)
 
     # referenced tables in body order of first appearance
     refs, seen = [], set()

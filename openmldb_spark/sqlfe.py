@@ -2060,18 +2060,19 @@ def run_sql_request(spark, sql: str, tables, request, name: str):
     stored table's plan; other statements are lowered on every call.
     The ``_TEMPLATE_CAP`` most recently used templates are kept.
 
-    History index: for a local request, the stored rows of ``name`` are
-    read once into a driver copy (``sources._local.history_copy``, up to
-    ``HISTORY_CAP`` rows; deployments and procedures take it when they
-    are created), and the template's history is a LocalRelation over the
-    copy. Each request first collects, for every window over a
-    request-derived primary, the primary's PARTITION BY values (a
-    projection of the request rows: it folds into a LocalTableScan, no
-    job), then binds the request rows and only the copy's rows of those
-    keys. That slice is exact: union rows buffer only into frames of
-    primary rows with the same partition key. A window whose key plan
-    does not fold, or whose keys are computed or typed unlike the copy,
-    binds the whole copy instead. Templated requests run in a clone of
+    History index: when a local request's statement has a window over
+    the stored rows of ``name``, they are read once into a driver copy
+    (``request_history``, up to ``HISTORY_CAP`` rows; deployments and
+    procedures take it when they are created, else the first template
+    build over the frame does), and the template's history is a
+    LocalRelation over the copy. Each request first collects, for every
+    window over a request-derived primary, the primary's PARTITION BY
+    values (a projection of the request rows: it folds into a
+    LocalTableScan, no job), then binds the request rows and only the
+    copy's rows of those keys, in copy order. That slice is exact: union
+    rows buffer only into frames of primary rows with the same partition
+    key. A window whose key plan does not fold, or whose keys are
+    computed or typed unlike the copy, binds the whole copy instead. Templated requests run in a clone of
     the session with adaptive execution off (one clone per template);
     batch queries keep it.
 
@@ -2085,12 +2086,11 @@ def run_sql_request(spark, sql: str, tables, request, name: str):
     from openmldb_spark.sources._local import history_copy, local_relation
     rel = local_relation(request)
     if rel is None:
-        out, windows = _lower_recorded(spark, sql, tables, request, name)
+        text, _ = _request_sql(sql, name)
+        out, windows = _lower_recorded(spark, text, tables, request, name)
         for w in windows:
-            _reject_null_order(w.keys_df.collect(), w.order, ranked=True)
+            _reject_null_order(w, ranked=True)
         return out
-    # the copy's read starts jobs: take it before the build is watched
-    hist = history_copy(tables[name]) if name in tables else None
     # ids are safe in the key: the template pins the session and frames
     key = (id(spark), sql, name, request.schema,
            tuple(sorted((k, id(v)) for k, v in tables.items())),
@@ -2100,8 +2100,12 @@ def run_sql_request(spark, sql: str, tables, request, name: str):
         if tpl is not None:
             _TEMPLATES.move_to_end(key)
     if tpl is None:
+        text, unions_hist = _request_sql(sql, name)
+        # the copy's read starts jobs: take it before the build is
+        # watched, and only when a window unions the stored rows
+        hist = history_copy(tables[name]) if unions_hist else None
         jobs = _jobs_started(spark)
-        out, windows = _lower_recorded(spark, sql, tables, request, name,
+        out, windows = _lower_recorded(spark, text, tables, request, name,
                                        hist)
         # the job count is context-wide: a job of another thread only
         # costs this build its template
@@ -2109,7 +2113,7 @@ def run_sql_request(spark, sql: str, tables, request, name: str):
             tpl = _request_template(spark, out, rel, tables, hist, windows)
         if tpl is None:
             for w in windows:
-                _reject_null_order(w.keys_df.collect(), w.order)
+                _reject_null_order(w)
             return out
         with _TEMPLATES_LOCK:
             _TEMPLATES[key] = tpl
@@ -2171,7 +2175,9 @@ class _RequestTemplate:
         for kp in self.key_plans:
             rows = bind_rows(spark, kp.plan, [(kp.leaves, data)],
                              self.session).collect()
-            _reject_null_order(rows, kp.order)
+            bad = [r[0] for r in rows if r[1] is None]
+            if bad:
+                raise _null_order_error(min(bad), kp.order)
             if kp.keys and self.hist is not None:
                 wanted.append((kp.keys, {tuple(r[2:]) for r in rows}))
         binds = [(self.leaves, data)]
@@ -2192,19 +2198,28 @@ def _lower_recorded(spark, sql, tables, request, name, hist=None):
     return out, windows
 
 
-def _reject_null_order(rows, order: str, ranked: bool = False) -> None:
-    """Raise for the first of a window's key rows (row id, ORDER BY
-    value, keys...) whose ORDER BY value is NULL. A local request's row
-    id is the row's index; other ids (``ranked``) only order the rows."""
-    bad = [r[0] for r in rows if r[1] is None]
+def _reject_null_order(w: _ReqWindow, ranked: bool = False) -> None:
+    """Raise for the first request row of the recorded window ``w``
+    whose ORDER BY value is NULL. Only the ids of such rows come to the
+    driver (none for a valid request; a job unless the primary folds to
+    local rows). A local request's row id is the row's index; other ids
+    (``ranked``) only order the rows, so a failing row's index is
+    counted."""
+    import pyspark.sql.functions as F
+    rid = F.col(_REQ_RID)
+    bad = w.keys_df.where(F.col(w.order).isNull()).select(rid).collect()
     if bad:
-        from openmldb_spark.sources.procedure import ProcedureError
-        row = min(bad)
+        row = min(r[0] for r in bad)
         if ranked:
-            row = sorted(r[0] for r in rows).index(row)
-        raise ProcedureError(
-            f"request row {row}: window ORDER BY column {order!r} is "
-            f"NULL, so the row has no window frame")
+            row = w.keys_df.where(rid < row).count()
+        raise _null_order_error(row, w.order)
+
+
+def _null_order_error(row: int, order: str):
+    from openmldb_spark.sources.procedure import ProcedureError
+    return ProcedureError(
+        f"request row {row}: window ORDER BY column {order!r} is NULL, "
+        f"so the row has no window frame")
 
 
 def _jobs_started(spark) -> int:
@@ -2305,13 +2320,25 @@ def _request_template(spark, out, rel, tables, hist, windows):
         key_plans, hist if slicing else None, hist_leaves)
 
 
-def _lower_request(spark, sql: str, tables: dict, request, name: str,
-                   hist=None):
-    """run_sql_request's lowering: the statement text rewrite, then
-    run_sql over the request rows and the stored tables. The stored rows
-    of ``name`` come from the driver copy ``hist`` (a
-    ``sources._local.History``) when given, else from ``tables[name]``."""
-    stored = hist.df if hist is not None else tables[name]
+def request_history(sql: str, tables: dict, name: str):
+    """The driver copy of ``name``'s stored rows that requests of the
+    statement ``sql`` read (``sources._local.history_copy``), or None
+    when no window of ``sql`` unions them (or request mode rejects
+    ``sql``). Deployments and procedures take it when they are created,
+    so that the copy's read is not part of a request."""
+    from openmldb_spark.sources._local import history_copy
+    try:
+        _, unions_hist = _request_sql(sql, name)
+    except SqlUnsupported:
+        return None
+    return history_copy(tables[name]) if unions_hist else None
+
+
+def _request_sql(sql: str, name: str) -> tuple[str, bool]:
+    """run_sql_request's statement text rewrite: each window without
+    INSTANCE_NOT_IN_WINDOW unions ``__req_hist__`` (the stored rows of
+    ``name``), and the request row id is threaded through. Returns the
+    new text and whether some window unions ``__req_hist__``."""
     sql = sub_code("`", "", sql)
     masked = mask_literals(sql)
     # A depth-0 set operation has no single request primary table — the
@@ -2361,6 +2388,7 @@ def _lower_request(spark, sql: str, tables: dict, request, name: str,
         body += " INSTANCE_NOT_IN_WINDOW"
         out += [sql[pos:start + 1], body]
         pos = end
+    unions_hist = bool(out)
     out.append(sql[pos:])
     sql = "".join(out)
     # thread the per-request row id: in request mode every sub-select
@@ -2369,6 +2397,17 @@ def _lower_request(spark, sql: str, tables: dict, request, name: str,
     # user join keys, which may collide across request rows (myhug's two
     # reqId2 requests must each join THEIR OWN out2 feature row)
     sql, _ = _rid_thread_stmt(sql, name, False, is_top=True)
+    return sql, unions_hist
+
+
+def _lower_request(spark, sql: str, tables: dict, request, name: str,
+                   hist=None):
+    """run_sql_request's lowering: run_sql of the rewritten statement
+    ``sql`` (``_request_sql``) over the request rows and the stored
+    tables. The stored rows of ``name`` come from the driver copy
+    ``hist`` (a ``sources._local.History``) when given, else from
+    ``tables[name]``."""
+    stored = hist.df if hist is not None else tables[name]
     import pyspark.sql.functions as F
     from openmldb_spark.sources._local import is_local
     req = request.withColumn(_REQ_RID, F.monotonically_increasing_id())

@@ -563,9 +563,9 @@ SLICED_SQL = dict(
     bare_union=PREPARED_SQL["window_union"].replace(
         "UNION (SELECT * FROM rq2)", "UNION rq2"),
     # a and b rows share their timestamps, so w2 (by c3) holds ties:
-    # only tie-insensitive aggregates there
+    # its lag reads the stored rows in the order a scan reads them
     two_keys="SELECT c1, c3, sum(c6) OVER w1 AS s6, lag(c4, 1) OVER w1 AS l4, "
-             "count(c4) OVER w2 AS n4, max(c1) OVER w2 AS m1 FROM rq WINDOW "
+             "count(c4) OVER w2 AS n4, lag(c1, 1) OVER w2 AS l1 FROM rq WINDOW "
              "w1 AS (PARTITION BY c1 ORDER BY c7 "
              "ROWS_RANGE BETWEEN 1h PRECEDING AND CURRENT ROW), "
              "w2 AS (PARTITION BY c3 ORDER BY c7 "
@@ -706,14 +706,33 @@ def test_history_copy_rows_by_key(spark):
 
     def picked(*wanted):
         data = hist.rows(list(wanted))
-        return sorted(data.apply(i).getInt(1) for i in range(data.size()))
+        return [data.apply(i).getInt(1) for i in range(data.size())]
     assert picked((("k",), {("a",)})) == [1, 4]
     assert picked((("k",), {(None,), ("z",)})) == [2, 5]
     assert picked((("k",), set())) == []
     assert picked((("x",), {(math.nan,)})) == [2, 3]
-    # a row matched through both key sets is taken once
+    # a row matched through both key sets is taken once, and the rows
+    # keep copy order whichever key set matched them
     assert picked((("k",), {("a",)}), (("x",), {(0.5,), (1.0,)})) == \
         [1, 4, 5]
+    assert picked((("x",), {(0.5,), (1.0,)}), (("k",), {("b",)})) == \
+        [1, 3, 4, 5]
+
+
+def test_history_copy_only_for_a_window_over_stored_rows(spark, tmp_path):
+    """A statement whose windows do not union the request table's stored
+    rows takes no copy. A window statement's copy is taken when it is
+    deployed, or by the first request over a frame not seen before."""
+    from openmldb_spark.sources import _local
+    tables = _prep_tables(spark, tmp_path)
+    deps = _deploy(spark, tables, PREPARED_SQL["last_join_order_by"])
+    _serve(spark, deps, tables, REQ_ROWS[:1]).collect()
+    assert id(tables["rq"]) not in _local._HISTORIES
+    deps = _deploy(spark, tables, PREPARED_SQL["window_union"])
+    assert _local._HISTORIES[id(tables["rq"])] is not None
+    fresh = _fresh(tables)
+    _serve(spark, deps, fresh, REQ_ROWS[:1]).collect()
+    assert _local._HISTORIES[id(fresh["rq"])] is not None
 
 
 def _null_ts(rows):
@@ -746,6 +765,25 @@ def test_null_order_value_is_rejected(spark, tmp_path, monkeypatch):
     # a statement without a window answers the row
     deps = _deploy(spark, tables, PREPARED_SQL["last_join_order_by"])
     assert len(_sorted(_serve(spark, deps, tables, batch))) == 4
+
+
+def test_valid_list_built_batch_collects_no_rows(spark, tmp_path,
+                                                monkeypatch):
+    """The NULL ORDER BY check of a non-local batch brings only failing
+    rows to the driver: none for a valid batch."""
+    tables = _prep_tables(spark, tmp_path)
+    DataFrame = type(tables["rq"])
+    collected, collect = [], DataFrame.collect
+
+    def spy(df):
+        rows = collect(df)
+        collected.append(len(rows))
+        return rows
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    out = _scanned(spark, tables, SLICED_SQL["two_keys"], BATCHES[0])
+    monkeypatch.undo()
+    assert collected and not any(collected)
+    assert len(out.collect()) == len(BATCHES[0])
 
 
 def test_local_request_features_start_no_job(spark):
