@@ -218,6 +218,11 @@ def _check_agg_domains(aggs: list[Agg], schema_fields: dict) -> None:
                 vt, (*_NUMERIC_TYPES, T.TimestampType)):
             raise ValueError(f"sum over {vt.simpleString()} column "
                              f"{a.col!r} (reference rejects)")
+        if fn == "top" and isinstance(vt, T.StringType):
+            # the kernel ranks top on a numeric view, where a string is
+            # NULL: every row would read '' (COVERAGE §2.6)
+            raise ValueError(f"top over {vt.simpleString()} column "
+                             f"{a.col!r} is not supported")
         if (fn.endswith("_where") or fn.endswith("_cate")
                 or "_cate_where" in fn) and fn != "count_where" \
                 and not fn.startswith("count_cate"):

@@ -660,18 +660,13 @@ def group_window_features(
             num_cache[c] = (x, x_e, ~np.isnan(x_e))
         return num_cache[c]
 
-    def self_vals(c: str, cond: str | None):
-        """(value, in-frame-and-valid) for the anchor rows."""
-        x, _, _ = numeric(c)
-        sv = x[E]
-        return sv, anchored & ~np.isnan(sv) & truth(cond)[E]
-
     def agg_sum_count(c, cond):
-        _, x_e, nn = numeric(c)
+        x, x_e, nn = numeric(c)
         m = nn & truth(cond)[idx_e]
         ps = _prefix(np.where(m, x_e, 0.0))
         pc_ = _prefix(m.astype(np.float64))
-        sv, ok = self_vals(c, cond)
+        sv = x[E]
+        ok = anchored & ~np.isnan(sv) & truth(cond)[E]
         s = ps[hi] - ps[lo] + np.where(ok, sv, 0.0)
         k = pc_[hi] - pc_[lo] + ok.astype(np.float64)
         return s, k
@@ -863,14 +858,19 @@ def group_window_features(
         elif f == "top":
             k = int(agg.param or 1)
             tfmt = typed_formatter(agg.val_type)
-            _, xv, _ = numeric(c)
-            sv, ok = self_vals(c, None)
+            if pa.types.is_integer(col(c).type):
+                # BIGINT past 2^53: float64 rounds neighbours together
+                x, has = _ints(col(c))[order], valid(c)
+            else:
+                x = numeric(c)[0]
+                has = ~np.isnan(x)
+            xv, hv = x[idx_e], has[idx_e]
+            ok = anchored & has[E]
             res = []
             for j in range(len(E)):
-                fr = xv[lo[j]:hi[j]]
-                fr = fr[~np.isnan(fr)]
+                fr = xv[lo[j]:hi[j]][hv[lo[j]:hi[j]]]
                 if ok[j]:
-                    fr = np.append(fr, sv[j])
+                    fr = np.append(fr, x[E[j]])
                 if len(fr) > k:
                     fr = fr[np.argpartition(fr, len(fr) - k)[len(fr) - k:]]
                 res.append(",".join(tfmt(v) for v in np.sort(fr)[::-1]))

@@ -388,20 +388,22 @@ GROUP BY t.conv_id, t.turn_idx, t.value
 
 
 def q_long_window_preagg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Long-window tier: materialized bucket partials + edge scans
-    (LongWindowOptimized analog, operators/preagg.py)."""
-    from openmldb_spark.operators.preagg import build_preagg, long_window_agg
+    """A 3 h ROWS_RANGE window, the shape the reference's
+    LongWindowOptimized pass pre-aggregates for its online bucket store.
+    Batch needs no bucket partials: the exact JVM lowering
+    (window._jvm_window) does O(1) work per row after one sort, whatever
+    the window depth."""
+    t = transcripts_df(spark, sf_dir)
+    spec = WindowSpec(partition_by=["conv_id"], order_by="ts_ms",
+                      frame="rows_range", preceding=3 * HOUR,
+                      tiebreak=("turn_idx",))
+    aggs = [Agg("sum", "value", "sum_v"), Agg("count", "value", "cnt_v")]
+    out = window_agg(t, spec, aggs, keep_cols=KEY)
+    return _round3(out, ["sum_v"])
 
-    t = transcripts_df(spark, sf_dir).select(
-        "conv_id", "turn_idx", "ts_ms", "value")
-    partials = build_preagg(t, ["conv_id"], "ts_ms", "value", 600_000)
-    out = long_window_agg(t, partials, ["conv_id"], "ts_ms", "value",
-                          window_ms=3 * HOUR, bucket_ms=600_000)
-    return out.select(
-        *KEY, F.round("w_sum", 3).alias("sum_v"),
-        F.col("w_cnt").alias("cnt_v"))
 
-
+# ANSI RANGE agrees with OpenMLDB's buffered-ties rule only because ts_ms
+# strictly increases within a conv_id (steps >= 1000 ms); ties would differ.
 SQL_LONG_WINDOW_PREAGG = transcripts_sql(f"""
 SELECT conv_id, turn_idx,
        ROUND(SUM(value) OVER w, 3) AS sum_v,

@@ -111,3 +111,35 @@ def test_variant_right_column_drops_out_of_tie_order(spark):
     assert got[0].cfg == "z"
     got = asof_join_kernel(left, right, on=["k"]).collect()
     assert got[0].cfg == "z"
+
+
+# An unordered LAST JOIN picks its row by a tie order over the right
+# columns; unorderable (map) columns must drop out of it.
+def test_last_join_unordered_map_column_does_not_crash(spark):
+    left = spark.createDataFrame([("c", 1)], "k string, lid int")
+    right = spark.createDataFrame(
+        [("c", "a", {"m": 1}), ("c", "z", {"m": 2})],
+        "k string, cfg string, meta map<string,int>")
+    for _ in range(3):
+        got = last_join(left, right, LastJoinSpec(left_on=["k"])).collect()
+        # deterministic on the remaining orderable column (cfg desc)
+        assert got[0].cfg == "z"
+
+
+def test_last_join_unordered_only_map_columns_falls_back(spark):
+    left = spark.createDataFrame([("c", 1)], "k string, lid int")
+    right = spark.createDataFrame(
+        [("c", {"m": 1})], "k string, meta map<string,int>")
+    out = last_join(left, right, LastJoinSpec(left_on=["k"])).collect()
+    assert len(out) == 1 and out[0].meta == {"m": 1}
+
+
+def test_last_join_unordered_case_insensitive_right_cols(spark):
+    """right_cols that resolve only case-insensitively (Spark's default
+    resolution) must not KeyError in the determinism fallback."""
+    left = spark.createDataFrame([("c", 1)], "k string, lid int")
+    right = spark.createDataFrame(
+        [("c", "a"), ("c", "z")], "k string, cfg string")
+    got = last_join(left, right, LastJoinSpec(left_on=["k"]),
+                    right_cols=["CFG"]).collect()
+    assert got[0]["CFG" if "CFG" in got[0].asDict() else "cfg"] == "z"

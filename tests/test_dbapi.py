@@ -290,3 +290,31 @@ def test_pandas_read_sql_over_dbapi(spark):
     assert list(got.columns) == ["a", "b"]
     assert got["a"].tolist() == [0, 1, 2, 3]
     assert got["b"].tolist() == ["s0", "s1", "s2", "s3"]
+
+
+# executemany falls back to per-row execution when a batch fails:
+# rows before the bad row insert and the error names it, as in the
+# reference SDK.
+def test_executemany_bad_row_does_not_abort_batch(spark):
+    from openmldb_spark.dbapi import DatabaseError, connect
+    db = connect("advr5", spark=spark)
+    cur = db.cursor()
+    cur.execute("create table em (a int, b string)")
+    rows = [(0, "s0"), (1, "s1"), (2,), (3, "s3")]   # row 2: wrong arity
+    with pytest.raises(DatabaseError):
+        cur.executemany("insert into em values (?, ?)", rows,
+                        batch_number=4)
+    got = sorted(cur.execute("select * from em").fetchall())
+    # reference behavior: every row BEFORE the failure inserted
+    assert got == [(0, "s0"), (1, "s1")]
+
+
+def test_executemany_all_good_rows_still_batch(spark):
+    from openmldb_spark.dbapi import connect
+    db = connect("advr5b", spark=spark)
+    cur = db.cursor()
+    cur.execute("create table em2 (a int)")
+    cur.executemany("insert into em2 values (?)",
+                    [(i,) for i in range(5)], batch_number=2)
+    assert sorted(cur.execute("select * from em2").fetchall()) == \
+        [(i,) for i in range(5)]

@@ -808,3 +808,24 @@ def test_local_request_features_start_no_job(spark):
                             prune_history=False)
     assert _sorted(pruned) == _sorted(full)
     assert {r.turn_idx: r.c for r in pruned.collect()} == {99: 4, 1: 1}
+
+
+def test_request_features_batch_checkpointed_not_persisted(spark, sf_dir):
+    """The request batch is pinned by an eager localCheckpoint: the
+    bounds scan and the feature job read the SAME materialized rows
+    (a persist was both leak-prone and wrong — CacheManager keys by
+    plan equality, so equal-plan batches uncached each other), and
+    checkpointed RDDs free on GC, so repeated calls leave no growing
+    pinned storage."""
+    from openmldb_spark.operators import request as req
+    t = transcripts_df(spark, sf_dir).select("conv_id", "ts_ms", "value")
+    spec = WindowSpec(partition_by=["conv_id"], order_by="ts_ms",
+                      frame="rows_range", preceding=3_600_000)
+    aggs = [Agg("sum", "value", "s")]
+    out = req.request_features(t.limit(20), t, spec, aggs)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" in plan          # batch reads the pinned rows
+    assert out.count() == 20
+    # equal-plan repeat works and stays correct (the old persist-swap
+    # pattern uncached the live batch here)
+    assert req.request_features(t.limit(20), t, spec, aggs).count() == 20

@@ -67,6 +67,9 @@ def test_builtin_tier_rejects_bad_agg_domains(spark):
     with pytest.raises(ValueError):
         window_agg(df, spec, [Agg("avg", "s", "a")], keep_cols=KEY,
                    tier="auto")
+    # top ranks a numeric view, where every string reads as NULL ('')
+    with pytest.raises(ValueError, match="top over string"):
+        window_agg(df, spec, [Agg("top", "s", "t", param=2)], keep_cols=KEY)
 
 
 def test_builtin_min_max_keep_type_and_strings_work(spark):
@@ -103,11 +106,12 @@ def test_kernel_min_max_int64_exact_past_2_53(spark):
         "conv_id string, turn_idx int, ts_ms long, v long")
     spec = WindowSpec(partition_by=["conv_id"], order_by="ts_ms",
                       frame="rows", preceding=5, tiebreak=("turn_idx",))
-    out = {r.turn_idx: (r.mn, r.mx) for r in window_agg(
-        df, spec, [Agg("min", "v", "mn"), Agg("max", "v", "mx")],
+    out = {r.turn_idx: (r.mn, r.mx, r.t) for r in window_agg(
+        df, spec, [Agg("min", "v", "mn"), Agg("max", "v", "mx"),
+                   Agg("top", "v", "t", param=2)],
         keep_cols=KEY, tier="kernel").collect()}
     # float64 would collapse big+1 and big+3 to even neighbors
-    assert out[1] == (big + 1, big + 3)
+    assert out[1] == (big + 1, big + 3, f"{big + 3},{big + 1}")
 
 
 def test_kernel_min_of_all_inf_frame_is_inf_not_null(spark):

@@ -50,6 +50,31 @@ def test_load_data_deep_and_soft_copy(spark, sf_dir, tmp_path):
         cat.load_data("bad", csv_path, fmt="json")
 
 
+# parquet LOAD validates columns by name, not position
+def test_load_parquet_reordered_columns_ok(spark, tmp_path):
+    import pyspark.sql.types as T
+    from openmldb_spark.sources.io import _read_with_schema
+    path = str(tmp_path / "re.parquet")
+    spark.createDataFrame([("x", 1)], "b string, a int") \
+        .write.parquet(path)
+    schema = T.StructType([T.StructField("a", T.IntegerType()),
+                           T.StructField("b", T.StringType())])
+    out = _read_with_schema(spark, path, "parquet", {}, schema)
+    assert out.columns == ["a", "b"]
+    assert out.collect() == [(1, "x")]
+
+
+def test_load_parquet_missing_column_still_rejected(spark, tmp_path):
+    import pyspark.sql.types as T
+    from openmldb_spark.sources.io import _read_with_schema
+    path = str(tmp_path / "miss.parquet")
+    spark.createDataFrame([(1,)], "a int").write.parquet(path)
+    schema = T.StructType([T.StructField("a", T.IntegerType()),
+                           T.StructField("b", T.StringType())])
+    with pytest.raises(ValueError, match="missing"):
+        _read_with_schema(spark, path, "parquet", {}, schema)
+
+
 def test_select_into_partitioned_parquet(spark, sf_dir, tmp_path):
     from openmldb_spark.sources.io import select_into
     src = spark.read.parquet(f"{sf_dir}/nation.parquet")

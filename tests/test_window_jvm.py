@@ -5,19 +5,25 @@ built-in Spark windows; ``window._numpy_window_agg`` runs the same call
 through the numpy kernel. A seeded generator draws eligible specs — frame
 depths 0, 1 ms and larger, start OPEN, EXCLUDE CURRENT_TIME,
 INSTANCE_NOT_IN_WINDOW with 0-2 union tables, ``bucket_ms`` — over data
-with NULL keys, NULL and NaN values, NULL and negative timestamps and
-heavy timestamp ties, and every output row must agree. The tiebreak is a
-unique row id, so the order at equal timestamps is pinned on both paths.
+with NULL keys, NULL and NaN values, NULL and negative timestamps, heavy
+timestamp ties and exact-duplicate rows, and every output row must agree.
+The tiebreak is a row id, unique except between duplicates, so the order
+at equal timestamps is pinned on both paths. Some cases order the lowered
+call by a TIMESTAMP copy of the BIGINT ms column the kernel reads: the
+order key must be its epoch-millisecond view.
 """
 
 import math
 import random
 
 import pytest
+import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
 from openmldb_spark.operators import window
+from openmldb_spark.plans.explain import PYTHON_NODES
 from openmldb_spark.plans.specs import Agg, WindowSpec
+from openmldb_spark.queries import QUERIES
 
 from conftest import executed_plan
 
@@ -48,7 +54,8 @@ def _rows(rng, n, first_rid, ts_span):
 
 
 def _case(rng, j):
-    """One eligible call: (spec, aggs, n_union, bucket_ms, ts_span)."""
+    """One eligible call: (spec, aggs, n_union, bucket_ms, ts_span,
+    n_dup, ts_typed)."""
     depth = [0, 1, 7, 60, 100_000][j % 5]
     ts_span = rng.choice([12, 40, 200])          # few distinct ts: many ties
     inw = rng.random() < 0.35
@@ -70,7 +77,7 @@ def _case(rng, j):
                         cond="ok" if where else None))
     n_union = rng.randrange(3) if inw else rng.choice([0, 0, 1])
     bucket_ms = rng.choice([None, 16, 50]) if depth <= 60 else None
-    return spec, aggs, n_union, bucket_ms, ts_span
+    return spec, aggs, n_union, bucket_ms, ts_span, 12 * (j % 2), j % 3 == 0
 
 
 def _same(x, y, dt):
@@ -82,12 +89,21 @@ def _same(x, y, dt):
     return math.isclose(x, y, rel_tol=rel, abs_tol=rel)
 
 
+def _by_rid(rows):
+    out = {}
+    for r in rows:
+        out.setdefault(r.rid, []).append(r)
+    return out
+
+
 @pytest.mark.parametrize("seed", [0, 1])
 def test_lowered_matches_numpy_kernel(spark, seed):
     rng = random.Random(seed)
     for j in range(8):
-        spec, aggs, n_union, bucket_ms, ts_span = _case(rng, j)
-        df = spark.createDataFrame(_rows(rng, 160, 0, ts_span), SCHEMA)
+        spec, aggs, n_union, bucket_ms, ts_span, n_dup, ts_typed = \
+            _case(rng, j)
+        rows = _rows(rng, 160, 0, ts_span)
+        df = spark.createDataFrame(rows + rng.sample(rows, n_dup), SCHEMA)
         union = [spark.createDataFrame(
                      _rows(rng, 60, 1000 * (u + 1), ts_span), SCHEMA)
                  .drop(*rng.sample(["grp", "vf", "ok"], rng.randrange(2)))
@@ -96,18 +112,37 @@ def test_lowered_matches_numpy_kernel(spark, seed):
         assert window._lowerable(spec, aggs, fields), (spec, aggs)
         kw = dict(keep_cols=["rid"], union=union or None, tier="kernel",
                   bucket_ms=bucket_ms)
-        jvm = window.window_agg(df, spec, aggs, **kw)
+        # union tables keep the BIGINT column: it coerces through ms
+        lowered = df.withColumn("ts", F.timestamp_millis("ts")) \
+            if ts_typed else df
+        jvm = window.window_agg(lowered, spec, aggs, **kw)
         ref = window._numpy_window_agg(df, spec, aggs, **kw)
         assert jvm.schema == ref.schema, (spec, aggs)
-        got = {r.rid: r for r in jvm.collect()}
-        exp = {r.rid: r for r in ref.collect()}
-        assert got.keys() == exp.keys(), (spec, aggs)
+        got, exp = _by_rid(jvm.collect()), _by_rid(ref.collect())
+        assert {k: len(v) for k, v in got.items()} == \
+            {k: len(v) for k, v in exp.items()}, (spec, aggs)
         types = {f.name: f.dataType for f in ref.schema.fields}
-        bad = [(rid, a.alias, got[rid][a.alias], exp[rid][a.alias])
-               for rid in exp for a in aggs
-               if not _same(got[rid][a.alias], exp[rid][a.alias],
-                            types[a.alias])]
-        assert not bad, (spec, aggs, n_union, bucket_ms, bad[:5])
+        # duplicates share a rid: match each row to any unmatched twin
+        bad = []
+        for rid, rows_exp in exp.items():
+            left = list(rows_exp)
+            for g in got[rid]:
+                hit = next((i for i, e in enumerate(left) if all(
+                    _same(g[a.alias], e[a.alias], types[a.alias])
+                    for a in aggs)), None)
+                if hit is None:
+                    bad.append((rid, g, left))
+                else:
+                    left.pop(hit)
+        assert not bad, (spec, aggs, n_union, bucket_ms, ts_typed, bad[:5])
+
+
+def test_long_window_query_has_no_python_or_checkpoint(spark, sf_dir):
+    """The 3 h window of ``long_window_preagg`` runs on the lowering: no
+    Python node and no checkpointed (``ExistingRDD``) scan."""
+    plan = executed_plan(QUERIES["long_window_preagg"](spark, sf_dir))
+    for node in ("ExistingRDD", *PYTHON_NODES):
+        assert node not in plan, (node, plan)
 
 
 def test_empty_frames_on_lowered_path(spark):
